@@ -13,8 +13,7 @@ The printed line is therefore kept UNDER 2 KB and self-contained:
 
 - ``spark_cs`` / ``oracle_cs``: per-query medians in centiseconds,
   ordered by sorted query name (``null`` where a query has no oracle);
-  the named full-precision maps go to ``.bench_archive/`` (and the
-  hand-promoted ``BENCH_local.json``).
+  the named full-precision maps go to ``.bench_archive/``.
 - ``n_jobs``: Spark job count per query, packed as zero-padded
   2-digit pairs in the same sorted-name order (capped at 99; the
   uncapped named map rides the archive file) — with the per-job
@@ -26,12 +25,12 @@ The printed line is therefore kept UNDER 2 KB and self-contained:
   the honest per-job fixed cost is job_floor/2 — SCALING.md, round-12
   floor-model correction.)
 - per-query EXECUTED-STAGE counts (``n_stages_by_query``) ride the
-  archive file and the hand-promoted ``BENCH_local.json`` (2-digit
-  pairs on the line would blow the tail budget); the line carries the
-  per-stage floor (``spark_stage_floor_sec``) so a reader can tighten
-  the job-floor normalization to the two-axis form ``n_jobs·J +
-  n_stages·S`` with S = stage_floor and J = job_floor/2 −
-  stage_floor — see _job_latency for the probe algebra.
+  archive file (2-digit pairs on the line would blow the tail
+  budget); the line carries the per-stage floor
+  (``spark_stage_floor_sec``) so a reader can tighten the job-floor
+  normalization to the two-axis form ``n_jobs·J + n_stages·S`` with
+  S = stage_floor and J = job_floor/2 − stage_floor — see
+  _job_latency for the probe algebra.
 - ``calibration``: the SAME fixed-work probe (an integer-fold
   aggregation over ``range(4e8)``, no IO, no data dependence) timed on
   both engines — any cross-run comparison should first normalize by
@@ -58,6 +57,7 @@ import math
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 RUNS = 3
@@ -281,9 +281,9 @@ def build_artifact(
         # per-query n_stages pairs would cost ~256 bytes the 2 KB
         # stdout-tail budget doesn't have (worst-case line is pinned
         # ≤1900 by tests/test_bench_contract.py); the named map rides
-        # the archive file and the hand-promoted BENCH_local.json —
-        # stage counts are plan properties, stable across boxes, so a
-        # cross-box reader pairs them with THIS line's floors.
+        # the archive file — stage counts are plan properties, stable
+        # across boxes, so a cross-box reader pairs them with THIS
+        # line's floors.
         # the note dropped its "n_stages+" prefix in r13 to pay for
         # the bracketed "pre" floors — the archive pointer still says
         # where the named maps (n_stages included) live
@@ -379,10 +379,17 @@ def write_archive(full: dict, archive_dir: str) -> None:
     os.makedirs(archive_dir, exist_ok=True)
     stamp = time.strftime("%Y%m%dT%H%M%S")
     payload = json.dumps(full) + "\n"
-    with open(os.path.join(archive_dir, f"bench_{stamp}.json"), "w") as fh:
-        fh.write(payload)
-    with open(os.path.join(archive_dir, "latest.json"), "w") as fh:
-        fh.write(payload)
+    # each file lands whole or not at all: a reader of latest.json
+    # never sees a half-written payload from a run still in flight
+    for fname in (f"bench_{stamp}.json", "latest.json"):
+        fd, tmp = tempfile.mkstemp(dir=archive_dir, suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as fh:
+                fh.write(payload)
+            os.replace(tmp, os.path.join(archive_dir, fname))
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
 
 def compact_line(artifact: dict) -> str:
@@ -509,20 +516,11 @@ def main() -> None:
     duck_probe = None
     if not only and not os.environ.get("SPARK_GRAFT_SKIP_ORACLE"):
         try:
-            import duckdb
-
+            from sbs_suptech_etl_v2_spark.paritycheck import oracle_connection
             from sbs_suptech_etl_v2_spark.registry import ORACLE
 
-            con = duckdb.connect()
+            con = oracle_connection(sf_dir)
             con.execute(f"SET threads TO {os.cpu_count() or 32}")
-            for t in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{t}.parquet')"
-                )
             onames = sorted(ORACLE)
             for name in onames:  # warmup pass (page cache, planning)
                 con.execute(ORACLE[name]).fetchall()
@@ -581,16 +579,15 @@ def main() -> None:
     # archive the FULL verbose JSON (named per-query maps) to an
     # UNTRACKED path (timestamped) — writing to a git-tracked file here
     # let the driver's own bench run clobber the repo's committed
-    # quiet-box record (round-5 verdict #3). BENCH_local.json is now
-    # only updated by hand.
+    # record (round-5 verdict #3).
     full = dict(out)
     full["queries"] = timings
     full["oracle_queries"] = oracle_timings
     full["n_jobs_by_query"] = n_jobs  # named + uncapped
     # executed-stage counts (plan properties, stable across boxes):
-    # too wide for the printed line's tail budget, so they live here
-    # and in the hand-promoted BENCH_local.json — pair with the
-    # printed line's job/stage floors for two-axis normalization
+    # too wide for the printed line's tail budget, so they live
+    # here — pair with the printed line's job/stage floors for
+    # two-axis normalization
     full["n_stages_by_query"] = n_stages
     # bracketed floors under their full names too (the line's compact
     # "pre" array is a tail-budget concession; the archive isn't)

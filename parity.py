@@ -4,22 +4,11 @@ The driver's CORRECTNESS_r*.json snapshots have stayed at 50 entries
 while the registry grew (see README "Verification status notes"), so
 this script reproduces the same per-query verdict shape for the FULL
 registry and writes it to CORRECTNESS_local.json: for every query, run
-the Spark plan and the DuckDB oracle side-by-side at sf0.01 and record
-row-count / schema / value-hash matches (columns sorted by name, rows
-sorted, md5 over the canonicalized cell grid — hash equality here
-implies the driver's hash equality for any canonicalization that is a
-function of the same cell values).
-
-Round 8 adds two gates closing the r06/r07 blind spot (VERDICT r07
-"What's wrong" #1/#2 — the q65/q88 driver REDs were HUGEINT oracle
-outputs invisible to a fetchall()-only audit):
-
-* a DESCRIBE-typed gate — every oracle output column's DuckDB type
-  must family-match the Spark schema (HUGEINT is its own family, so
-  an uncast integer SUM always fails locally now);
-* a pandas leg — the oracle re-fetched via fetchdf() must render to
-  the same grid as the fetchall() fetch, exercising the dtype-lossy
-  pandas path (HUGEINT->float64, value-level precision loss > 2^53).
+the Spark plan and its DuckDB oracle side by side through
+``paritycheck.compare`` and record its verdict — row count, column
+names, values (columns sorted by name, rows sorted, canonicalized
+cells), the DESCRIBE-typed gate and the ``fetchdf()`` pandas leg (see
+``paritycheck`` for why the last two exist).
 
 Usage: python parity.py [sf_dir]   (default /root/testdata/sf0.01)
 """
@@ -27,42 +16,18 @@ Usage: python parity.py [sf_dir]   (default /root/testdata/sf0.01)
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import json
-import math
 import os
 import sys
-from decimal import Decimal
-
-
-def _canon(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NULL" if math.isnan(v) else "%.17g" % v
-    if isinstance(v, Decimal):
-        return "%.17g" % float(v)
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    return str(v)
-
-
-def _grid_hash(cols: list[str], rows: list[tuple[str, ...]]) -> str:
-    h = hashlib.md5()
-    h.update(("|".join(cols)).encode())
-    for r in rows:
-        h.update(("\x1f".join(r) + "\x1e").encode())
-    return h.hexdigest()
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-    import duckdb
-
     from sbs_suptech_etl_v2_spark.paritycheck import (
-        canon_grid,
-        type_mismatches,
+        VERDICT_FLAGS,
+        compare,
+        oracle_connection,
     )
     from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
     from sbs_suptech_etl_v2_spark.session import get_spark
@@ -70,79 +35,22 @@ def main() -> int:
     spark = get_spark(app_name="parity", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
-
     out: dict[str, dict] = {}
-    for name in sorted(QUERIES):
-        entry: dict = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "types_match": None,
-            "pandas_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        try:
-            sdf = QUERIES[name](spark, sf_dir)
-            scols = sorted(sdf.columns)
-            srows = sorted(
-                tuple(_canon(r[c]) for c in scols) for r in sdf.collect()
+    with oracle_connection(sf_dir) as con:
+        for name in sorted(QUERIES):
+            entry: dict = dict.fromkeys(
+                (*VERDICT_FLAGS, "spark_rows", "oracle_rows", "err")
             )
-            entry["spark_rows"] = len(srows)
-            if name not in ORACLE:
-                entry["err"] = "no_oracle"
-                out[name] = entry
-                continue
-            con = duckdb.connect()
             try:
-                for t in tables:
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{sf_dir}/{t}.parquet')"
-                    )
-                # typed gate: oracle output types must family-match
-                # the Spark schema
-                desc = con.execute("DESCRIBE " + ORACLE[name]).fetchall()
-                mism = type_mismatches(sdf.schema, desc)
-                entry["types_match"] = not mism
-                if mism:
-                    entry["type_mismatches"] = [list(m) for m in mism]
-                dtype_by_col = {r[0]: str(r[1]) for r in desc}
-                cur = con.execute(ORACLE[name])
-                dcols_raw = [d[0] for d in cur.description]
-                idx = sorted(
-                    range(len(dcols_raw)), key=lambda i: dcols_raw[i]
-                )
-                dcols = [dcols_raw[i] for i in idx]
-                raw_rows = cur.fetchall()
-                drows = sorted(
-                    tuple(_canon(r[i]) for i in idx) for r in raw_rows
-                )
-                # pandas leg: re-fetch via fetchdf() and require the
-                # same grid as fetchall() under one renderer (the
-                # dtype-lossy path)
-                pdf = con.execute(ORACLE[name]).fetchdf()
-                entry["pandas_match"] = canon_grid(
-                    dcols_raw,
-                    pdf.itertuples(index=False, name=None),
-                    dtype_by_col,
-                ) == canon_grid(dcols_raw, raw_rows, dtype_by_col)
-            finally:
-                con.close()
-            entry["oracle_rows"] = len(drows)
-            entry["rows_match"] = len(srows) == len(drows)
-            entry["schema_match"] = scols == dcols
-            entry["hash_match"] = _grid_hash(scols, srows) == _grid_hash(
-                dcols, drows
-            )
-        except Exception as ex:  # noqa: BLE001 — audit must cover every query
-            entry["err"] = f"{type(ex).__name__}: {ex}"[:300]
-        out[name] = entry
+                sdf = QUERIES[name](spark, sf_dir)
+                if name in ORACLE:
+                    entry.update(compare(sdf, ORACLE[name], con))
+                else:
+                    entry["spark_rows"] = len(sdf.collect())
+                    entry["err"] = "no_oracle"
+            except Exception as ex:  # noqa: BLE001 — audit must cover every query
+                entry["err"] = f"{type(ex).__name__}: {ex}"[:300]
+            out[name] = entry
 
     # non-default SFs get an sf-suffixed artifact so a 10x-scale audit
     # never clobbers the driver-scale one
@@ -193,13 +101,7 @@ def main() -> int:
     }
     with open(path, "w") as fh:
         json.dump(envelope, fh, indent=2)
-    n_ok = sum(
-        1
-        for e in out.values()
-        if e["hash_match"]
-        and e["types_match"] is not False
-        and e["pandas_match"] is not False
-    )
+    n_ok = sum(all(e[k] for k in VERDICT_FLAGS) for e in out.values())
     n_no = sum(1 for e in out.values() if e["err"] == "no_oracle")
     n_bad = len(out) - n_ok - n_no
     n_typed = sum(1 for e in out.values() if e["types_match"] is False)

@@ -1,26 +1,31 @@
-"""Oracle/engine type-compatibility gate + pandas-leg canonicalization.
+"""The DuckDB oracle harness: every Spark-vs-oracle comparison goes
+through :func:`oracle_connection` and :func:`compare`.
 
-Round-7 forensics (VERDICT r07 "What's wrong" #1/#2): the only two
+:func:`compare` returns the per-query verdict ``parity.py`` writes and
+the tests assert on: row count, column names, values, output types, and
+a second fetch of the oracle through ``fetchdf()``.  Both sides are
+rendered by one function, :func:`canon_grid`.
+
+Why the type and pandas legs exist (round-7 forensics): the only two
 driver-RED queries were exactly the only two oracles whose OUTPUT
 contained a DuckDB HUGEINT column (uncast ``SUM`` over integer types).
 DuckDB's pandas fetch renders HUGEINT as float64 and its Arrow fetch as
 decimal128(38,0) — either way a dtype divergence from Spark's int64
 that a dtype/repr-sensitive driver canonicalizer hashes differently,
-while this repo's ``fetchall()``-based parity (HUGEINT → exact Python
-int) could never see it.  This module makes that blind spot a LOCAL
-failure:
+while a ``fetchall()``-only comparison (HUGEINT → exact Python int)
+could never see it.  Hence:
 
 * :func:`type_mismatches` — compare the Spark result schema against
   ``DESCRIBE <oracle sql>`` column-by-column, mapping both to a family
   string; HUGEINT maps to its own family so an uncast integer SUM can
   never sneak into an oracle output again.  Decimal compares exact
   (precision, scale) — a width skew is a divergence risk too.
-* :func:`canon_pandas_cell` — canonicalize a ``fetchdf()`` cell
-  (numpy scalars, ndarray lists, NaT, midnight-Timestamp dates) to the
-  same string rendering parity uses for ``fetchall()`` values, so a
-  second comparison leg can exercise the pandas dtype path locally.
+* :func:`canon_pandas_cell` — canonicalize one cell (numpy scalars,
+  ndarray lists, NaT, midnight-Timestamp dates, Spark's bytearray) to
+  one string rendering, so the ``fetchall()`` grid, the ``fetchdf()``
+  grid and the Spark grid compare under the same rules.
 
-Empirical ground truth on this box (duckdb 1.0.0 / pyarrow):
+Empirical ground truth (duckdb 1.0.0 / pyarrow):
 HUGEINT → pandas float64 / arrow decimal128(38,0); nullable BIGINT →
 pandas float64 (NaN) but arrow int64 — and q54/q77/q82, the three
 oracles with nullable-int outputs, are driver-GREEN, so the driver's
@@ -126,9 +131,9 @@ def canon_grid(
     ``itertuples`` rows), rendering every cell with
     :func:`canon_pandas_cell` under the column's DESCRIBE type.
 
-    The single definition both parity harnesses and the gate tests
-    share — the rendering rules live in ONE place, so the fetchall and
-    fetchdf legs cannot silently diverge from each other.
+    The one renderer for the Spark rows and both oracle fetches — the
+    rendering rules live in ONE place, so the legs cannot silently
+    diverge from each other.
     """
     types = [duck_types.get(c, "") for c in cols]
     return sorted(
@@ -137,12 +142,87 @@ def canon_grid(
     )
 
 
-def canon_pandas_cell(v, duck_type: str) -> str:
-    """Render one fetchdf() cell with the parity string rules.
+VERDICT_FLAGS = ("rows_match", "schema_match", "hash_match", "types_match", "pandas_match")
 
-    Mirrors the fetchall() canonicalizer (floats via %.17g with
-    integral collapse, NaN/None/NaT -> NULL) and additionally
-    normalizes the pandas-specific representations: numpy scalars,
+
+def oracle_connection(sf_dir: str):
+    """In-memory DuckDB connection with one view per ``io.TABLES``
+    parquet file under ``sf_dir`` — the only oracle setup in the repo."""
+    import duckdb
+
+    from .io import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def _by_name(cols: list[str], rows, types: dict[str, str]):
+    """(name-sorted columns, canonical grid with cells in that order)."""
+    idx = sorted(range(len(cols)), key=cols.__getitem__)
+    names = [cols[i] for i in idx]
+    return names, canon_grid(names, (tuple(r[i] for i in idx) for r in rows), types)
+
+
+def compare(sdf, sql: str, con) -> dict:
+    """Collect ``sdf`` and run its oracle ``sql`` on ``con``; return the
+    verdict: one boolean per :data:`VERDICT_FLAGS` entry plus both row
+    counts.  A query matches when every flag is True.
+
+    * ``rows_match`` / ``schema_match`` — same row count / same
+      name-sorted column names;
+    * ``hash_match`` — equal order-insensitive value grids (cells in
+      name-sorted column order), so any hash of the same cells agrees;
+    * ``types_match`` — every column present on both sides falls in
+      the same :func:`type_mismatches` family (names are
+      ``schema_match``'s concern);
+    * ``pandas_match`` — the oracle re-fetched through ``fetchdf()``
+      renders to the same grid as its ``fetchall()`` (the dtype-lossy
+      pandas path).  ``DESCRIBE`` only binds, so the oracle executes
+      twice, once per fetch path.
+
+    On failure the verdict also carries ``type_mismatches`` and
+    ``first_diffs`` (up to 3 differing spark/oracle row pairs).
+    """
+    srows = sdf.collect()
+    desc = con.execute("DESCRIBE " + sql).fetchall()
+    types = {r[0]: str(r[1]) for r in desc}
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    pdf = con.execute(sql).fetchdf()
+    scols, sgrid = _by_name(sdf.columns, srows, types)
+    dcols, dgrid = _by_name(ocols, orows, types)
+    _, pgrid = _by_name(ocols, pdf.itertuples(index=False, name=None), types)
+    mism = [list(m) for m in type_mismatches(sdf.schema, desc) if "<absent>" not in m]
+    verdict = {
+        "rows_match": len(sgrid) == len(dgrid),
+        "schema_match": scols == dcols,
+        "hash_match": sgrid == dgrid,
+        "types_match": not mism,
+        "pandas_match": pgrid == dgrid,
+        "spark_rows": len(sgrid),
+        "oracle_rows": len(dgrid),
+    }
+    if mism:
+        verdict["type_mismatches"] = mism
+    if sgrid != dgrid:
+        verdict["first_diffs"] = [
+            [list(a), list(b)] for a, b in zip(sgrid, dgrid) if a != b
+        ][:3]
+    return verdict
+
+
+def canon_pandas_cell(v, duck_type: str) -> str:
+    """Render one cell — Spark, ``fetchall()`` or ``fetchdf()`` — with
+    the parity string rules.
+
+    Floats render via %.17g with integral collapse, NaN/None/NaT ->
+    NULL, bytes as hex; the pandas-specific representations are
+    normalized too: numpy scalars,
     ndarray list cells, and DATE columns that pandas widens to
     midnight Timestamps (``duck_type`` — the DESCRIBE column_type —
     says whether the column is a DATE).
@@ -191,6 +271,6 @@ def canon_pandas_cell(v, duck_type: str) -> str:
         return v.replace(tzinfo=None).isoformat()
     if isinstance(v, _dt.date):
         return v.isoformat()
-    if isinstance(v, bytes):
+    if isinstance(v, (bytes, bytearray)):  # Spark hands BINARY back as bytearray
         return v.hex()
     return str(v)

@@ -1,7 +1,5 @@
-"""Local replica of the driver's oracle gate: run a declared Spark query
-and its DuckDB oracle SQL on the same parquet tables, canonicalize both
-result sets (name-sorted columns, order-insensitive rows, normalized
-value rendering), and diff them.
+"""Local replica of the driver's oracle gate: a thin assert over
+:func:`sbs_suptech_etl_v2_spark.paritycheck.compare`.
 
 Kept strict — exact value equality after canonical string rendering —
 so a local pass at sf0.01 implies a driver pass on the same data.
@@ -9,124 +7,39 @@ so a local pass at sf0.01 implies a driver pass on the same data.
 
 from __future__ import annotations
 
-import datetime as _dt
-import math
-from decimal import Decimal
+import os
 
-import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from sbs_suptech_etl_v2_spark.io import TABLES
-from sbs_suptech_etl_v2_spark.paritycheck import canon_grid, type_mismatches
+from sbs_suptech_etl_v2_spark.paritycheck import (
+    VERDICT_FLAGS,
+    compare,
+    oracle_connection,
+)
 
 
-def _canon_value(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NULL"
-        return "%.17g" % v
-    if isinstance(v, Decimal):
-        return "%.17g" % float(v)
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, _dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon_value(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{_canon_value(v[k])}" for k in sorted(v)) + "}"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
+def assert_verdict(verdict: dict, name: str = "?") -> None:
+    failed = [k for k in VERDICT_FLAGS if not verdict[k]]
+    assert not failed, f"{name}: {failed} failed; verdict {verdict}"
 
 
-def canon_rows(columns: list[str], rows: list[tuple]) -> tuple[list[str], list[tuple[str, ...]]]:
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    cols = [columns[i] for i in order]
-    out = sorted(tuple(_canon_value(r[i]) for i in order) for r in rows)
-    return cols, out
+def assert_parity(spark, query_fn, sql: str, sf_dir: str, name: str = "?") -> dict:
+    with oracle_connection(sf_dir) as con:
+        verdict = compare(query_fn(spark, sf_dir), sql, con)
+    assert_verdict(verdict, name)
+    return verdict
 
 
-def run_oracle(sql: str, sf_dir: str) -> tuple[list[str], list[tuple]]:
-    """Single-fetch oracle run (no gate legs) for callers that only
-    need the values."""
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        cur = con.execute(sql)
-        cols = [d[0] for d in cur.description]
-        return cols, cur.fetchall()
-    finally:
-        con.close()
-
-
-def run_oracle_full(
-    sql: str, sf_dir: str
-) -> tuple[list[str], list[tuple], list[tuple], list[tuple[str, ...]]]:
-    """fetchall() result + DESCRIBE rows + a fetchdf()-leg canonical grid.
-
-    The extra legs close the r06/r07 driver blind spot (q65/q88): a
-    HUGEINT (or any family-mismatched) oracle output type, invisible
-    to fetchall(), now fails locally via the DESCRIBE gate; the
-    fetchdf() grid exercises the dtype-lossy pandas fetch path.
-
-    Cost note (round-9 ADVICE triage): DESCRIBE only binds/plans — it
-    does not execute the query — so this runs each oracle TWICE, not
-    three times, and both executions are load-bearing legs with
-    deliberately different fetch paths (fetchall = exact ground
-    truth; fetchdf = DuckDB's own dtype-converting C++ path, which a
-    derived pandas frame from the fetchall rows would not exercise).
-    Deduplicating them would silently weaken the gate; the measured
-    full-suite overhead (~2 min at sf0.01) stays acceptable.
-    """
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        desc = con.execute("DESCRIBE " + sql).fetchall()
-        dtype_by_col = {r[0]: str(r[1]) for r in desc}
-        cur = con.execute(sql)
-        cols = [d[0] for d in cur.description]
-        rows = cur.fetchall()
-        pdf = con.execute(sql).fetchdf()
-        pgrid = canon_grid(
-            cols, pdf.itertuples(index=False, name=None), dtype_by_col
-        )
-        return cols, rows, desc, pgrid
-    finally:
-        con.close()
-
-
-def assert_parity(spark, query_fn, sql: str, sf_dir: str, name: str = "?") -> None:
-    sdf = query_fn(spark, sf_dir)
-    s_cols, s_rows = canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
-    o_cols, o_rows, desc, pgrid = run_oracle_full(sql, sf_dir)
-    mism = type_mismatches(sdf.schema, desc)
-    assert not mism, (
-        f"{name}: oracle/engine output TYPE mismatch (col, spark, duckdb): {mism}"
+def lake_with(base_dir: str, out_dir, name: str, rows: list, schema) -> str:
+    """A test lake at ``out_dir``: every table of ``base_dir`` symlinked,
+    except ``name``, which is written from ``rows`` with ``schema``."""
+    out_dir.mkdir()
+    for t in TABLES:
+        if t != name:
+            os.symlink(f"{base_dir}/{t}.parquet", str(out_dir / f"{t}.parquet"))
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema), str(out_dir / f"{name}.parquet")
     )
-    dtype_by_col = {r[0]: str(r[1]) for r in desc}
-    fgrid = canon_grid(o_cols, o_rows, dtype_by_col)
-    assert pgrid == fgrid, (
-        f"{name}: oracle fetchdf() leg diverges from fetchall() — "
-        f"dtype-lossy pandas path; first diffs: "
-        f"{[(a, b) for a, b in zip(fgrid, pgrid) if a != b][:3]}"
-    )
-    d_cols, d_rows = canon_rows(o_cols, o_rows)
-    assert s_cols == d_cols, f"{name}: column mismatch spark={s_cols} duckdb={d_cols}"
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: row count spark={len(s_rows)} duckdb={len(d_rows)}"
-    )
-    if s_rows != d_rows:
-        diffs = [
-            (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b
-        ][:5]
-        raise AssertionError(f"{name}: value mismatch, first diffs (cols={s_cols}): {diffs}")
+    return str(out_dir)

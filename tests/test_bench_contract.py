@@ -123,7 +123,8 @@ def test_archive_writes_stable_named_sidecar(tmp_path):
     carry them (121 names ≈ 3.4 KB vs the 2000-byte stdout tail), so
     every archive write also lands the SAME payload at the fixed path
     .bench_archive/latest.json — pinned here: both files written, both
-    parse, both carry the named per-query keys, byte-identical."""
+    parse, both carry the named per-query keys, byte-identical, and no
+    temp file of the atomic write is left behind."""
     from bench import write_archive
 
     full = {
@@ -152,6 +153,11 @@ def test_archive_writes_stable_named_sidecar(tmp_path):
     assert got["n_jobs_by_query"] == {"q01_pricing_summary": 3}
     with open(stamped[0]) as fh_a, open(latest) as fh_b:
         assert fh_a.read() == fh_b.read()
+    # both files are written through a temp file + os.replace; none of
+    # the temp files may survive the write
+    assert sorted(_os.listdir(d)) == sorted(
+        [_os.path.basename(stamped[0]), "latest.json"]
+    )
 
 
 def test_no_oracle_side_is_optional():
@@ -164,238 +170,6 @@ def test_no_oracle_side_is_optional():
     assert art["spark_vs_oracle_ratio"] is None
     assert art["n_jobs"] is None
     assert json.loads(compact_line(art))["value"] == round(0.5 * len(names), 3)
-
-
-def test_promoted_records_carry_sane_bracketed_floors():
-    """The promotion step is BY HAND (archive -> BENCH_local*.json),
-    so the clamp in _job_latency cannot protect the committed records
-    by itself — the two r12 small-SF promotions carried stage 0.047
-    against job 0.072 (per-job cost J = −11 ms) for a full round
-    before ADVICE caught it. Pin the calibration invariants on every
-    promoted record: a future promotion with a nonsensical floor pair
-    fails the suite instead of shipping."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for fname in (
-        "BENCH_local.json",
-        "BENCH_local_sf0.01.json",
-        "BENCH_local_sf0.001.json",
-    ):
-        with open(os.path.join(repo, fname)) as fh:
-            rec = json.load(fh)
-        cal = rec["calibration"]
-        jf, s = cal["spark_job_floor_sec"], cal["spark_stage_floor_sec"]
-        assert 0 < jf and 0 <= s <= jf / 2, (fname, jf, s)
-        # bracketed floors (r13+): same invariant on the pre pair,
-        # and the archive-promoted record carries the named copies
-        pre = cal["pre"]
-        assert 0 < pre[0] and 0 <= pre[1] <= pre[0] / 2, (fname, pre)
-        assert rec["spark_job_floor_sec_pre"] == pre[0], fname
-        assert rec["spark_stage_floor_sec_pre"] == pre[1], fname
-        # the named per-query maps must survive promotion (they are
-        # the two-axis normalization's n_jobs/n_stages source)
-        for key in ("queries", "n_jobs_by_query", "n_stages_by_query"):
-            assert key in rec, (fname, key)
-
-
-def test_promoted_sf01_record_sits_inside_its_floor_band():
-    """Executable form of SCALING.md's raw-ratio drift rule (round 14,
-    VERDICT r13 directive #2): an sf0.1 record predicts its own raw
-    ratio from fixed scheduling cost alone — pred(F) = 1 +
-    J_total * F/2 / oracle_suite_sec with F the record's own floor
-    samples — and a healthy record's raw must not exceed
-    pred(pre_floor) + 0.05 (the pre bound is what the suite's first
-    minutes actually pay; the margin is measured plan-cost residual,
-    +0.027 on the r13 driver record, and both fresh r14 legs sat
-    inside their bands). The alarm form is pinned too: on a SETTLED
-    record (post floor <= 0.08 s) raw > 1.6 is a real regression no
-    floor arithmetic can absorb — a promotion carrying that fails
-    the suite instead of shipping and hiding the regression behind
-    the quiet-box bar. sf0.1 ONLY: at sf0.01/sf0.001 the oracle suite
-    is ~13-15 s, so per-query fixed costs the 1-task probe cannot see
-    (multi-task scheduling, parquet footer reads, Python worker
-    handshakes) dominate the ratio and the band does not calibrate —
-    the small-SF scale argument is the marginal suite ratio, not this
-    band (see SCALING.md)."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_local.json")) as fh:
-        rec = json.load(fh)
-    assert rec["sf"] == 0.1
-    nj = rec["n_jobs"]
-    pairs = [int(nj[i : i + 2]) for i in range(0, len(nj), 2)]
-    # ADVICE r14: bench.py caps each per-query count at N_JOBS_CAP, so
-    # a saturated pair would silently undercount J_total and deflate
-    # the predicted band into a spurious upper-bound failure. Fail
-    # loudly on saturation instead — no query is near 99 jobs today
-    # (max is ~30, the fixpoint unroll); if one ever is, widen the
-    # encoding or read uncapped counts from the archived record.
-    assert all(p < N_JOBS_CAP for p in pairs), (
-        f"an n_jobs pair hit the {N_JOBS_CAP} encoding cap — J_total "
-        "would be undercounted and the drift band meaningless; fix the "
-        "encoding before trusting this test"
-    )
-    j_total = sum(pairs)
-    osec = rec["oracle_suite_sec"]
-    raw = rec["spark_vs_oracle_ratio"]
-    post = rec["calibration"]["spark_job_floor_sec"]
-    pre = rec["calibration"]["pre"][0]
-    upper = 1 + j_total * pre / 2 / osec + 0.05
-    assert raw <= upper, (
-        f"promoted sf0.1 raw ratio {raw} exceeds its own pre-floor "
-        f"band upper bound {upper:.3f} (J_total={j_total}, pre={pre}, "
-        f"oracle={osec}s) — per SCALING.md's drift rule this is not "
-        "floor arithmetic; bisect before promoting"
-    )
-    if post <= 0.08:
-        # ADVICE r15: the alarm derives from the POST-floor band, not
-        # the pre-floor `upper` the unconditional assert above already
-        # enforces — max(1.6, upper) was unreachable (alarm >= upper
-        # always), leaving the 1.6 regression alarm with zero
-        # independent power. A settled record's steady-state
-        # scheduling cost is the post floor, so pred(post) + 0.05 is
-        # the band a settled suite should actually sit under; raw
-        # above BOTH 1.6 and that settled band is a regression the
-        # pre-floor assert cannot see (a cold pre sample inflates
-        # `upper` far past steady state — r14's pre 0.175 put upper at
-        # 1.647 while its settled band read 1.224). Every committed
-        # settled record clears the alarm with room: r15 driver raw
-        # 1.355 vs settled band 1.247 -> alarm 1.6; the promoted local
-        # record 1.420 vs 1.212 -> alarm 1.6.
-        settled_upper = 1 + j_total * post / 2 / osec + 0.05
-        alarm = max(1.6, settled_upper)
-        assert raw <= alarm, (
-            f"promoted sf0.1 record is settled (post floor {post}) yet "
-            f"raw ratio is {raw} > alarm bound {alarm:.3f} "
-            "(max of 1.6 and the record's own SETTLED post-floor band "
-            f"upper {settled_upper:.3f}) — SCALING.md's alarm: a real "
-            "regression no floor arithmetic can absorb, do not promote "
-            "over it"
-        )
-
-
-# The documented AQE-adaptive job-count wobble pair (SCALING.md):
-# iterative plans whose convergence is re-planned at runtime may read
-# ±1 job between otherwise identical legs, at two SFs, same session.
-AQE_WOBBLE_QUERIES = {"q107_matryoshka_audit", "q111_supplier_hops_bfs"}
-
-# Documented plan restructures whose job counts legitimately moved off
-# the promoted record's stale map (SCALING.md map-gate notes; the
-# promoted BENCH_local.json predates them). Maps to the EXPECTED job
-# count on the current tree: a leg reading the expected value matches
-# the committed plans; a leg reading the promoted record's old value
-# would mean the OLD plan regressed back in. Entries are removed when
-# a newer record is promoted with the restructured maps baked in.
-RESTRUCTURED_EXPECTED_JOBS = {
-    # r17 q103 funnel: one user-keyed aggregate replaced the
-    # three-stage join chain — 10 jobs -> 3, 8 Exchanges -> 2
-    # (OPTIMIZATION_r17.md §2.2, plans/r17/q103_*, SCALING.md
-    # "Map-gate note for the r17 optimization tree")
-    "q103_funnel_conversion": 3,
-    # r18 (OPTIMIZATION_r18.md): q75's first convergence probe fused
-    # into one single-plan job over a lazily-checkpointed seed (24 ->
-    # 18); lazy dependency-ordered checkpoints removed the dedicated
-    # eager-checkpoint job of the similarity banded frame (q25 6 -> 5,
-    # q41 7 -> 6, q93 15 -> 14), q107's two unit frames (8 -> 6), and
-    # q61's shingle frame (5 -> 4)
-    "q75_neardup_fixpoint": 18,
-    "q25_embedding_neardup": 5,
-    "q41_ann_bucketed_topk": 6,
-    "q93_semantic_dedup": 14,
-    "q107_matryoshka_audit": 6,
-    "q61_contamination_check": 4,
-}
-
-
-def test_driver_records_clear_the_settled_alarm():
-    """The executable driver-record gate of SCALING.md's disposition
-    (round 17, VERDICT r16 directive #2): the r16 driver leg was the
-    first ever above its own pre-floor band (raw 1.440 vs upper
-    1.390), and driver legs cannot be re-run, so a widened margin was
-    rejected — a 0.10 margin would let a leg carrying ~3 s of
-    intra-suite stalls PROMOTE. A ratio-only alarm was pinned first,
-    then FALSIFIED the same day: the 01:33:55 r17-session leg read
-    raw 1.618 (settled post 0.054) on a tree byte-identical to a
-    1.341 sibling 23 minutes earlier — job maps unchanged, nothing
-    improved, pure box stall. So the gate is a CONJUNCTION of the two
-    artifact-checkable disposition legs: a record fails only when raw
-    exceeds the settled alarm — max(1.6, pred(post) + 0.05) — AND its
-    n_jobs map differs from the promoted record beyond the documented
-    q107/q111 ±1 AQE wobble. A breach on unchanged maps is what both
-    measured box-state breaches look like (the r16 driver's 1.440
-    over its pre-floor band; the 1.618 leg over the alarm); a
-    plan-shape
-    regression moves the maps and still fails loudly; a same-shape
-    slowdown is the per-query pre-registered bands' job, not a
-    suite-level absolute ratio that measurably swings 1.34 -> 1.62 on
-    an identical tree. An out-of-band-but-map-identical leg still
-    owes a dated SCALING.md adjudication entry (process) — it just
-    cannot red the board on box noise alone. r11-r16 all clear the
-    alarm outright."""
-    import glob
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_local.json")) as fh:
-        promoted_nj = json.load(fh)["n_jobs"]
-    promoted_pairs = [
-        int(promoted_nj[i : i + 2]) for i in range(0, len(promoted_nj), 2)
-    ]
-    names = sorted(QUERIES)
-    checked = 0
-    for path in sorted(glob.glob(os.path.join(repo, "BENCH_r*.json"))):
-        with open(path) as fh:
-            parsed = (json.load(fh) or {}).get("parsed") or {}
-        cal = parsed.get("calibration") or {}
-        nj = parsed.get("n_jobs")
-        osec = parsed.get("oracle_suite_sec")
-        raw = parsed.get("spark_vs_oracle_ratio")
-        post = cal.get("spark_job_floor_sec")
-        if not (nj and osec and raw and post is not None):
-            continue  # pre-calibration rounds (r01-r10) carry no block
-        pairs = [int(nj[i : i + 2]) for i in range(0, len(nj), 2)]
-        if any(p >= N_JOBS_CAP for p in pairs):
-            continue  # saturated encoding undercounts J_total (see above)
-        checked += 1
-        j_total = sum(pairs)
-        alarm = max(1.6, 1 + j_total * post / 2 / osec + 0.05)
-        if raw <= alarm:
-            continue
-        # ratio breach: absolve only on map identity with the promoted
-        # record (modulo the documented wobble pair); a record whose
-        # maps cannot be compared is NOT absolved — fail conservative
-        if len(pairs) == len(promoted_pairs):
-            diffs = {
-                n: (a, b)
-                for n, a, b in zip(names, pairs, promoted_pairs)
-                if a != b
-            }
-            wobble_only = all(
-                (n in AQE_WOBBLE_QUERIES and abs(a - b) <= 1)
-                or (
-                    # a documented restructure reading its EXPECTED
-                    # count is the current tree's plan, not drift —
-                    # the promoted record's map is simply stale there
-                    n in RESTRUCTURED_EXPECTED_JOBS
-                    and a == RESTRUCTURED_EXPECTED_JOBS[n]
-                )
-                for n, (a, b) in diffs.items()
-            )
-            if wobble_only:
-                continue  # box-state breach; adjudicate in SCALING.md
-        else:
-            diffs = "registry size changed — maps incomparable"
-        raise AssertionError(
-            f"{os.path.basename(path)}: driver raw ratio {raw} exceeds "
-            f"the settled alarm {alarm:.3f} (J_total={j_total}, "
-            f"post={post}, oracle={osec}s) AND its job maps moved vs "
-            f"the promoted record ({diffs}) — per SCALING.md's "
-            "driver-leg disposition this is not box state; bisect the "
-            "round's diff before trusting the board"
-        )
-    assert checked >= 6, f"expected >= 6 calibrated driver records, saw {checked}"
 
 
 def test_job_latency_floors_satisfy_probe_algebra(spark):
@@ -496,9 +270,8 @@ def test_bench_main_subset_prints_parseable_line_with_n_jobs():
     assert int(art["n_jobs"]) >= 1
     # the archive file is the contractual home of the named per-query
     # maps — n_stages_by_query above all, since it is NOT on the
-    # printed line (tail budget) and BENCH_local promotion copies the
-    # archive verbatim; a regression here silently drops the stage
-    # evidence from every promoted record
+    # printed line (tail budget); a regression here silently drops the
+    # stage evidence from every run
     new = set(glob.glob(os.path.join(repo, ".bench_archive", "*.json"))) - before
     # one timestamped archive file per run, plus the stable-name named
     # sidecar latest.json (VERDICT r17 directive #2) — which counts in

@@ -206,22 +206,11 @@ def test_null_element_vs_nan_vector(spark, tmp_path, oracle_sf_dir):
     number in Spark and DuckDB). Arrow hands the kernels NaN for both
     cases, so the distinction is restored JVM-side (_whole_vecs) —
     without it the kernels kept NULL-element rows the oracles drop."""
-    import os
-
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sbs_suptech_etl_v2_spark.io import TABLES
     from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
-    from tests.parity import assert_parity
+    from tests.parity import assert_parity, lake_with
 
-    fixture = tmp_path / "sf_nullelem"
-    fixture.mkdir()
-    for t in TABLES:
-        if t != "embeddings":
-            os.symlink(
-                f"{oracle_sf_dir}/{t}.parquet", str(fixture / f"{t}.parquet")
-            )
     tbl = pq.read_table(f"{oracle_sf_dir}/embeddings.parquet")
     rows = tbl.slice(0, 60).to_pylist()
     dim = len(rows[0]["embedding"])
@@ -231,20 +220,19 @@ def test_null_element_vs_nan_vector(spark, tmp_path, oracle_sf_dir):
     rows[11]["embedding"] = [float("nan")] * dim
     # victim 3: whole-NULL embedding -> dropped by both engines
     rows[13]["embedding"] = None
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=tbl.schema),
-        str(fixture / "embeddings.parquet"),
+    fixture = lake_with(
+        oracle_sf_dir, tmp_path / "sf_nullelem", "embeddings", rows, tbl.schema
     )
 
     for q in ("q24_topk_cosine", "q25_embedding_neardup"):
-        assert_parity(spark, QUERIES[q], ORACLE[q], str(fixture), q)
+        assert_parity(spark, QUERIES[q], ORACLE[q], fixture, q)
 
     # the live-vector set itself: NULL-element + whole-NULL dropped,
     # NaN kept
     from sbs_suptech_etl_v2_spark.operators.similarity import _dbl, _unit
     from pyspark.sql import functions as F
 
-    emb = spark.read.parquet(str(fixture / "embeddings.parquet"))
+    emb = spark.read.parquet(f"{fixture}/embeddings.parquet")
     live = {
         r["vec_id"]
         for r in _unit(
@@ -722,15 +710,13 @@ def test_quantize_malformed_vectors(spark, tmp_path, oracle_sf_dir):
     astype(int64). Ragged widths quantize per width group, bit-equal
     to a clean same-width run."""
     import math
-    import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
 
-    from sbs_suptech_etl_v2_spark.io import TABLES
+    from sbs_suptech_etl_v2_spark.paritycheck import oracle_connection
     from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
-    from tests.parity import assert_parity, run_oracle_full
+    from tests.parity import assert_parity, lake_with
 
     q = "q51_quantize_embeddings"
     tbl = pq.read_table(f"{oracle_sf_dir}/embeddings.parquet")
@@ -738,20 +724,11 @@ def test_quantize_malformed_vectors(spark, tmp_path, oracle_sf_dir):
     dim = len(rows[0]["embedding"])
 
     def fixture(name, mutate):
-        d = tmp_path / name
-        d.mkdir()
-        for t in TABLES:
-            if t != "embeddings":
-                os.symlink(
-                    f"{oracle_sf_dir}/{t}.parquet", str(d / f"{t}.parquet")
-                )
         muts = [dict(r) for r in rows]
         mutate(muts)
-        pq.write_table(
-            pa.Table.from_pylist(muts, schema=tbl.schema),
-            str(d / "embeddings.parquet"),
-        )
-        return str(d), muts
+        return lake_with(
+            oracle_sf_dir, tmp_path / name, "embeddings", muts, tbl.schema
+        ), muts
 
     # --- oracle-runnable: NULL / all-zero -> NULL triple --------------
     def mut_a(m):
@@ -778,8 +755,8 @@ def test_quantize_malformed_vectors(spark, tmp_path, oracle_sf_dir):
         m[6]["embedding"] = m[6]["embedding"][: dim // 2]  # ragged
 
     sf_b, mut_rows_b = fixture("sf_q51b", mut_b)
-    with pytest.raises(Exception):
-        run_oracle_full(ORACLE[q], sf_b)
+    with oracle_connection(sf_b) as con, pytest.raises(Exception):
+        con.execute(ORACLE[q]).fetchall()
     out_b = {r["vec_id"]: r for r in QUERIES[q](spark, sf_b).collect()}
     assert len(out_b) == len(rows)
     for i in (2, 4, 5):  # non-finite / undefined scale -> NULL triple

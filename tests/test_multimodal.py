@@ -61,26 +61,14 @@ def test_null_payload_rows_match_oracle(spark, tmp_path, sf_dir):
     on NULL text, so a NULL image payload produces identical rows on
     both engines (previously the oracle re-derived non-NULL dimensions
     from doc_id and a robustness fixture would have failed parity)."""
-    import os
-
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sbs_suptech_etl_v2_spark.io import TABLES
     from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
-    from tests.parity import assert_parity
+    from tests.parity import assert_parity, lake_with
 
-    fixture = tmp_path / "sf_null_img"
-    fixture.mkdir()
-    for t in TABLES:
-        if t != "documents":
-            os.symlink(f"{sf_dir}/{t}.parquet", str(fixture / f"{t}.parquet"))
     tbl = pq.read_table(f"{sf_dir}/documents.parquet")
     rows = tbl.slice(0, 20).to_pylist()
     rows[3]["text"] = None
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=tbl.schema),
-        str(fixture / "documents.parquet"),
-    )
+    fixture = lake_with(sf_dir, tmp_path / "sf_null_img", "documents", rows, tbl.schema)
     for q in ("q38_image_features", "q55_image_resize"):
-        assert_parity(spark, QUERIES[q], ORACLE[q], str(fixture), q)
+        assert_parity(spark, QUERIES[q], ORACLE[q], fixture, q)

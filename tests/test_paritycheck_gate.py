@@ -9,7 +9,9 @@ pin the gate itself:
   accepts every family the 121-query registry actually emits;
 * ``canon_pandas_cell`` renders fetchdf() cells identically to the
   fetchall() rendering for every type DuckDB can hand back, across a
-  fuzzed value range (the NaN/NaT/ndarray/midnight-date traps).
+  fuzzed value range (the NaN/NaT/ndarray/midnight-date traps);
+* ``compare`` flips exactly the verdict flag each kind of divergence
+  belongs to, on a tiny Spark frame against DuckDB ``VALUES`` SQL.
 """
 
 from __future__ import annotations
@@ -23,9 +25,12 @@ import pytest
 from pyspark.sql import types as T
 
 from sbs_suptech_etl_v2_spark.paritycheck import (
+    VERDICT_FLAGS,
     canon_grid,
     canon_pandas_cell,
+    compare,
     duckdb_family,
+    oracle_connection,
     spark_family,
     type_mismatches,
 )
@@ -150,15 +155,9 @@ def test_no_oracle_outputs_decimal_or_hugeint(sf_dir):
     INTERNAL exact accumulation; outputs narrow to DOUBLE or BIGINT on
     both engines.
     """
-    from sbs_suptech_etl_v2_spark.io import TABLES
     from sbs_suptech_etl_v2_spark.registry import ORACLE
 
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
+    with oracle_connection(sf_dir) as con:
         offenders = []
         for name, sql in sorted(ORACLE.items()):
             for cname, ctype, *_ in con.execute("DESCRIBE " + sql).fetchall():
@@ -166,13 +165,40 @@ def test_no_oracle_outputs_decimal_or_hugeint(sf_dir):
                 if "HUGEINT" in s or "DECIMAL" in s:
                     offenders.append((name, cname, s))
         assert not offenders, offenders
-    finally:
-        con.close()
 
 
 def test_float_rendering_matches_parity_canon():
-    # same %.17g discipline as parity.py's fetchall canonicalizer
+    # the %.17g float discipline every compare() leg renders with
     assert canon_pandas_cell(0.1, "DOUBLE") == "%.17g" % 0.1
     assert canon_pandas_cell(float("nan"), "DOUBLE") == "NULL"
     assert canon_pandas_cell(Decimal("1.500000"), "DECIMAL(18,6)") == "1.5"
     assert canon_pandas_cell(math.pi, "DOUBLE") == "%.17g" % math.pi
+
+
+_ROWS = [(1, "a", 2.5), (2, "b", 0.5), (3, None, 1.0)]
+_SCHEMA = "k long, s string, x double"
+_ORACLE = (
+    "SELECT * FROM (VALUES (1, 'a', 2.5::DOUBLE), (2, 'b', 0.5::DOUBLE), "
+    "(3, NULL, 1.0::DOUBLE)) t(k, s, x)"
+)
+# DuckDB's SUM over an integer column is HUGEINT; Spark's is bigint
+_SUM_ORACLE = "SELECT k, SUM(k) AS total FROM (VALUES (1), (2), (3)) t(k) GROUP BY k"
+
+
+@pytest.mark.parametrize(
+    "rows, schema, sql, failed",
+    [
+        (_ROWS, _SCHEMA, _ORACLE, set()),
+        (_ROWS[:2], _SCHEMA, _ORACLE, {"rows_match", "hash_match"}),
+        ([(1, "a", 2.5), (2, "b", 0.75), (3, None, 1.0)], _SCHEMA, _ORACLE, {"hash_match"}),
+        # "t" sorts where "s" did, so the value grid is unchanged
+        (_ROWS, "k long, t string, x double", _ORACLE, {"schema_match"}),
+        ([(1, 1), (2, 2), (3, 3)], "k long, total long", _SUM_ORACLE, {"types_match"}),
+    ],
+    ids=["identical", "dropped_row", "changed_value", "renamed_column", "hugeint_sum"],
+)
+def test_compare_flips_only_the_diverging_flag(spark, rows, schema, sql, failed):
+    with duckdb.connect() as con:
+        verdict = compare(spark.createDataFrame(rows, schema), sql, con)
+    assert verdict["oracle_rows"] == 3
+    assert {f for f in VERDICT_FLAGS if not verdict[f]} == failed, verdict

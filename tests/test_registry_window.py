@@ -27,7 +27,7 @@ WINDOW_SIZE = 50
 # q26/q29/q18 literal-quoting carriers); slots 29-40 = the remaining
 # r15-fresh leftovers; slots 41-50 = the oldest r16-fresh backfill.
 # Update this literal TOGETHER with registry.py each rotation.
-ROTATION_R17 = [
+ROTATION = [
     # slots 1-21: r17-restructured/rewritten lead (q103 first)
     "q103_funnel_conversion",
     "q104_revenue_interpolation",
@@ -86,13 +86,13 @@ ROTATION_R17 = [
 
 
 def test_window_prefix_matches_committed_rotation():
-    assert len(ROTATION_R17) == WINDOW_SIZE
-    assert len(set(ROTATION_R17)) == WINDOW_SIZE
+    assert len(ROTATION) == WINDOW_SIZE
+    assert len(set(ROTATION)) == WINDOW_SIZE
     prefix = list(QUERIES)[:WINDOW_SIZE]
-    assert prefix == ROTATION_R17, (
+    assert prefix == ROTATION, (
         "the driver-facing 50-entry registry prefix no longer matches "
         "the committed rotation list — if this is an intentional "
-        "rotation, update ROTATION_R17 in this test alongside "
+        "rotation, update ROTATION in this test alongside "
         "registry.py; if not, a refactor silently reordered the window"
     )
 

@@ -218,15 +218,14 @@ def test_q101_chunks_cover_and_reconstruct(spark, tmp_path, seed):
         assert covered == set(range(len(toks)))
 
 
-def test_q99_pmi_identity_survives_null_text(spark, tmp_path):
+def test_q99_pmi_identity_survives_null_text(spark, sf_dir, tmp_path):
     """The arithmetic bigram total (n_tokens - n_docs) must count only
     docs that PRODUCED tokens — a NULL text yields zero tokens and
     zero bigrams on both engines, so COUNT(*) would undercount
     n_bigrams by one per NULL doc and shift every PMI value."""
-    import duckdb
-
     from sbs_suptech_etl_v2_spark.operators.textops import bigram_pmi
     from sbs_suptech_etl_v2_spark.registry import ORACLE
+    from tests.parity import assert_parity, lake_with
 
     base = "a b a b c " * 3  # enough mass to clear PMI_MIN_COUNT
     texts = [base.strip(), base.strip(), None, "a b a b a b", None]
@@ -241,18 +240,6 @@ def test_q99_pmi_identity_survives_null_text(spark, tmp_path):
             ),
         }
     )
-    sf = _write(tmp_path, "documents", docs)
-    got = sorted(
-        (r["w1"], r["w2"], r["c12"], r["pmi"]) for r in bigram_pmi(spark, sf).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
-    )
-    want = sorted(
-        (w1, w2, c12, pmi)
-        for (w1, w2, c12, _c1, _c2, pmi) in con.execute(
-            ORACLE["q99_bigram_pmi"]
-        ).fetchall()
-    )
-    assert got == want and got  # non-vacuous
+    sf = lake_with(sf_dir, tmp_path / "lake", "documents", docs.to_pylist(), docs.schema)
+    verdict = assert_parity(spark, bigram_pmi, ORACLE["q99_bigram_pmi"], sf, "q99")
+    assert verdict["spark_rows"]  # non-vacuous
