@@ -53,11 +53,12 @@ INSCRIPCIONES_SCHEMA = (
 
 def extract_structured(
     docs: DataFrame,
-    port_method_name: str,
+    port_method_name: str | None,
     out_schema: str,
     key_cols: tuple[str, ...] = ("doc_id",),
     content_col: str = "content",
     port_factory: Callable[[], Any] | None = None,
+    method_col: str | None = None,
 ) -> DataFrame:
     """Run a transform-port method over every row via ``mapInPandas``.
 
@@ -67,6 +68,12 @@ def extract_structured(
     task via ``port_factory`` (never serialized from the driver) — the
     production port holds an unpicklable client. Default:
     ``FakeTransformer``.
+
+    ``method_col`` names a column of ``docs`` holding each row's port
+    method name, for batches that mix document types; it replaces
+    ``port_method_name``. A field a row's method does not return comes
+    out NULL, so ``out_schema`` may be the union of several methods'
+    fields.
     """
 
     value_cols = [
@@ -80,15 +87,22 @@ def extract_structured(
         import pandas as pd
 
         port = factory()
-        method: Callable[[str], dict] = getattr(port, port_method_name)
 
-        def call(content: str) -> dict:
-            return with_throttling_retry(method, content)
+        def call(item: tuple[str, str]) -> dict:
+            content, method = item
+            return with_throttling_retry(getattr(port, method), content)
 
         for pdf in batches:
-            extracted = bounded_map(call, pdf[content_col].tolist())
-            # explicit columns: an empty batch must still match the schema
-            out = pd.DataFrame(extracted, columns=value_cols)
+            methods = (
+                pdf[method_col].tolist() if method_col else [port_method_name] * len(pdf)
+            )
+            extracted = bounded_map(call, zip(pdf[content_col].tolist(), methods))
+            # explicit columns: an empty batch must still match the schema,
+            # and a field the row's method lacks is None, not a float NaN
+            out = pd.DataFrame(
+                [[row.get(c) for c in value_cols] for row in extracted],
+                columns=value_cols,
+            )
             for i, k in enumerate(key_cols):
                 out.insert(i, k, pdf[k].values)
             yield out

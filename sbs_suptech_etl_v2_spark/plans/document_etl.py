@@ -4,32 +4,34 @@ The reference wires two levels of LangGraph state machines: an
 orchestrator that routes by document type
 (workflow_orchestator.py:166-188) and a per-type
 Extract→Transform→Load→Final pipeline (workflow_base.py:44-55). Here
-the whole thing is ONE declarative composition over a requests
-DataFrame:
+the whole thing is ONE routed frame per batch, not three pipelines:
 
-1. **route (A1)** — three filtered branches: REGISTRATION →
-   inscripciones, APPRAISAL → tasaciones, everything else → pólizas
-   (the reference's default fall-through, workflow_orchestator.py:61-71).
-2. **extract (S4/W1)** — decode the document payload; the truncated
-   first-pages concat goes to ``document_content_total`` and the FULL
-   text to ``document_content_llm`` — the reference's observed
+1. **route (A1)** — ``flow`` is a column: REGISTRATION → inscripciones,
+   APPRAISAL → tasaciones, everything else → pólizas (the reference's
+   default fall-through, workflow_orchestator.py:61-71).
+2. **extract (S4/W1)** — decode the document payload once for the
+   whole batch; the truncated first-pages concat goes to
+   ``document_content_total`` and the FULL text to
+   ``document_content_llm`` — the reference's observed
    (swapped-looking) behavior **[B]**, reproduced deliberately
-   (textract_extractor_document.py:58-68).
-3. **transform (A2-A4 + C1-C3)** — the LLM port per domain via
-   Arrow-batched ``mapInPandas``; period month/year refined.
-4. **load (K1/K2 + F8)** — per-row text artifacts, stringified
-   metadata map merged into the lake table; content columns dropped
-   before the metadata sink.
-5. **final (A11/F10/C9/K3)** — success conjunction gates the
-   notification projection; nested JSON bodies go to the chunk-by-10
-   writer.
+   (textract_extractor_document.py:58-68). Period month/year refined.
+3. **transform (A2-A4)** — ONE Arrow-batched ``mapInPandas`` port pass
+   that picks each row's port method from its flow. Its output carries
+   the pass-through columns and the union of the three flows' field
+   columns (disjoint names; a row's other-flow fields are NULL).
+4. **load (K1/K2 + F8)** — one text-artifact write and one metadata
+   merge for the whole batch; only the truncated content column
+   reaches the cache, and none reaches the metadata sink.
+5. **final (A11/F10/C9/K3)** — rows that fail extraction rejoin by
+   ``unionByName`` with ``success=False``; only successes are
+   notified, through the chunk-by-10 writer.
 
 Every stage is the operator already exercised by the oracle-checked
 queries — this module only composes them, exactly like the reference's
-graph wires its nodes. Scale: routing is three filters over one scan
-(no shuffle); the per-domain branches reunite with ``unionByName``;
-the only shuffles are the metadata merge key and the text-artifact
-write partitioning.
+graph wires its nodes. Scale: routing is a ``CASE`` over one scan (no
+shuffle, no per-flow branches); the only shuffles are the port's
+fan-out, the metadata merge key and the text-artifact write
+partitioning.
 """
 
 from __future__ import annotations
@@ -51,39 +53,29 @@ from sbs_suptech_etl_v2_spark.sinks.writers import (
     write_text_artifacts,
 )
 
-POLIZAS_OUT = (
-    "record_id string, policy_number string, policy_name string, "
-    "policy_start_date string, policy_end_date string"
+# the one port pass: pass-through columns, then the three flows'
+# fields (disjoint names), every one a string
+_PASS = (
+    "record_id", "parent_id", "session_id", "flow", "document_type",
+    "period_month", "period_year", "document_content_total",
 )
-TASACIONES_OUT = (
-    "record_id string, expert_warranty_name string, tasacion_date string, "
-    "commercial_value string, realization_value string, tasacion_owner string"
+_FIELDS = (
+    "inscription_number", "legal_name", "inscription_date",
+    "expert_warranty_name", "tasacion_date", "commercial_value",
+    "realization_value", "tasacion_owner",
+    "policy_number", "policy_name", "policy_start_date", "policy_end_date",
 )
-INSCRIPCIONES_OUT = (
-    "record_id string, inscription_number string, legal_name string, "
-    "inscription_date string"
-)
-
-_FLOWS = (
-    ("inscripciones", "llm_caller_inscripciones", INSCRIPCIONES_OUT),
-    ("tasaciones", "llm_caller_tasaciones", TASACIONES_OUT),
-    ("polizas", "llm_caller_polizas", POLIZAS_OUT),
-)
+PORT_OUT = ", ".join(f"{c} string" for c in (*_PASS, *_FIELDS))
 
 
-def _route(requests: DataFrame) -> dict[str, DataFrame]:
-    """A1 — type-routed branches with the reference's default fall-through."""
-    return {
-        "inscripciones": requests.filter(F.col("document_type") == "REGISTRATION"),
-        "tasaciones": requests.filter(F.col("document_type") == "APPRAISAL"),
-        "polizas": requests.filter(
-            ~F.col("document_type").isin("REGISTRATION", "APPRAISAL")
-        ),
-    }
-
-
-def _extract(branch: DataFrame) -> DataFrame:
-    """S4/W1 — decoded content, first-pages vs full split, success flag."""
+def _extract(requests: DataFrame) -> DataFrame:
+    """A1 + S4/W1 + C2/C3 — routed flow, content split, refined periods."""
+    doc_type = F.col("document_type")
+    flow = (
+        F.when(doc_type == "REGISTRATION", "inscripciones")
+        .when(doc_type == "APPRAISAL", "tasaciones")
+        .otherwise("polizas")
+    )
     text = F.decode(F.col("content"), "utf-8")
     words = F.split(text, " ")
     n_pages = F.ceil(F.size(words) / F.lit(PAGE_WORDS)).cast("int")
@@ -96,47 +88,29 @@ def _extract(branch: DataFrame) -> DataFrame:
         ),
         "\n\n",
     )
-    return branch.select(
+    return requests.select(
         "record_id",
         "parent_id",
         "session_id",
+        flow.alias("flow"),
         "document_type",
-        "period_month",
-        "period_year",
+        refine_month(F.col("period_month")).alias("period_month"),
+        refine_year(F.col("period_year")).alias("period_year"),
         # [B] reproduced: truncated text -> _total, full text -> _llm
         first_pages.alias("document_content_total"),
         text.alias("document_content_llm"),
-        (F.length(text) > 0).alias("extract_success"),
+        F.coalesce(F.length(text) > 0, F.lit(False)).alias("extract_success"),
     )
 
 
-def _transform(
-    extracted: DataFrame, port_method: str, out_schema: str, port_factory=None
-) -> DataFrame:
-    """A2-A4 + C2/C3 — port extraction (F4-gated) + period refinement."""
-    gated = extracted.filter(F.col("extract_success"))
-    fields = extract_structured(
-        gated.select("record_id", F.col("document_content_llm").alias("content")),
-        port_method,
-        out_schema,
-        key_cols=("record_id",),
-        port_factory=port_factory,
-    )
-    return (
-        gated.join(fields, "record_id", "left")
-        .withColumn("period_month", refine_month(F.col("period_month")))
-        .withColumn("period_year", refine_year(F.col("period_year")))
-        .withColumn("transform_success", F.lit(True))
-    )
-
-
-def _metadata_map(transformed: DataFrame, extracted_cols: list[str]) -> DataFrame:
-    """C10 — stringified open metadata map for the K2 merge."""
+def _metadata_map(loaded: DataFrame) -> DataFrame:
+    """C10 — stringified open metadata map for the K2 merge; the other
+    flows' NULL fields drop out with the rest of the NULLs."""
     entries: list = []
-    for c in ["document_type", "period_month", "period_year", *extracted_cols]:
+    for c in ["document_type", "period_month", "period_year", *_FIELDS]:
         entries.append(F.lit(c))
-        entries.append(F.col(c).cast("string"))
-    return transformed.select(
+        entries.append(F.col(c))
+    return loaded.select(
         "record_id",
         F.map_filter(
             F.create_map(*entries), lambda _, v: v.isNotNull()
@@ -153,74 +127,56 @@ def run_document_etl(
 ) -> DataFrame:
     """Run the full Extract→Transform→Load→Notify plan.
 
-    ``requests`` must carry the DocumentContractState columns plus a
-    binary ``content`` payload (from the listing scan or the stream
-    decoder). Side effects: ``{lake_dir}/txt/*.txt`` artifacts and the
-    ``{lake_dir}/metadata`` merged table. Returns the per-document
-    result rows (record_id, document_type, success) after notifying.
+    ``requests`` must carry the DocumentContractState columns (string
+    ids, type and period tokens) plus a binary ``content`` payload
+    (from the listing scan or the stream decoder), and a ``record_id``
+    must appear at most once per batch: K1 names one file per id and
+    K2 merges on it. Side effects: ``{lake_dir}/txt/*.txt`` artifacts
+    and the ``{lake_dir}/metadata`` merged table. Returns one row per
+    request (record_id, parent_id, session_id, flow, success) after
+    notifying.
 
-    The transform output is ``persist()``ed before the first action:
-    the plan fires three actions per flow (K1 text write, K2 metadata
-    merge, results/notify), and without the persist each one would
-    re-execute the ``mapInPandas`` LLM port — exactly the reference's
-    double-execution bug **[B]** (workflow_orchestator.py:82-83) at 3×
-    the external-call spend. The returned result frame is
-    ``localCheckpoint``ed (it is small — one flag row per request) so
-    the cached port output can be released before returning.
+    The batch is one routed frame: a single port pass over every
+    extracted row, unioned with the failed extracts, ``persist()``ed
+    once. K1, K2 and K3 then run once each, in that order, over its
+    successes, so the port executes exactly once per document (the
+    reference re-ran it per action, workflow_orchestator.py:82-83
+    **[B]**) and nothing is notified before its load ran. The returned
+    result projection is ``localCheckpoint``ed (one small row per
+    request) so the cache can be released before returning.
     """
     notifier = notifier if notifier is not None else NotificationBatchWriter()
-    branches = _route(requests)
-    results = []
-    persisted: list[DataFrame] = []
-    for flow, port_method, out_schema in _FLOWS:
-        extracted = _extract(branches[flow])
-        transformed = _transform(extracted, port_method, out_schema, port_factory)
-        # one port execution per flow: cache across the K1/K2/notify actions
-        transformed = transformed.persist()
-        persisted.append(transformed)
-        extracted_cols = [
-            f.split(" ")[0] for f in out_schema.split(", ") if not f.startswith("record_id")
-        ]
-        # K1 — text artifacts from the executors, then F8 content drop
-        write_text_artifacts(
-            transformed.select(
-                "record_id", F.col("document_content_total").alias("content")
-            ),
-            lake_dir,
+    extracted = _extract(requests)
+    ported = extract_structured(
+        extracted.filter(F.col("extract_success")).withColumn(
+            "port_method", F.concat(F.lit("llm_caller_"), F.col("flow"))
+        ),
+        None,
+        PORT_OUT,
+        key_cols=_PASS,
+        content_col="document_content_llm",
+        port_factory=port_factory,
+        method_col="port_method",
+    )
+    failed = extracted.filter(~F.col("extract_success")).select(
+        "record_id", "parent_id", "session_id", "flow"
+    )
+    batch = (
+        ported.withColumn("success", F.lit(True))
+        .unionByName(
+            failed.withColumn("success", F.lit(False)), allowMissingColumns=True
         )
-        loaded = (
-            transformed.drop("document_content_total", "document_content_llm")
-            .withColumn("load_success", F.lit(True))
-        )
-        # K2 — merge the stringified metadata into the lake table
-        merge_metadata(
-            spark, f"{lake_dir}/metadata", _metadata_map(loaded, extracted_cols)
-        )
-        # F4-gated stages drop failed rows from the load path; the result
-        # set keeps EVERY request with its conjunction verdict (A11) —
-        # rows that never reached transform/load report success=False
-        flags = loaded.select("record_id", "transform_success", "load_success")
-        results.append(
-            extracted.select(
-                "record_id", "parent_id", "session_id", "extract_success"
-            )
-            .join(flags, "record_id", "left")
-            .select(
-                "record_id",
-                "parent_id",
-                "session_id",
-                F.lit(flow).alias("flow"),
-                (
-                    F.col("extract_success")
-                    & F.coalesce(F.col("transform_success"), F.lit(False))
-                    & F.coalesce(F.col("load_success"), F.lit(False))
-                ).alias("success"),
-            )
-        )
-    merged = results[0]
-    for other in results[1:]:
-        merged = merged.unionByName(other)
-    ok = merged.filter(F.col("success"))
+        .persist()
+    )
+    ok = batch.filter(F.col("success"))
+    # K1 — text artifacts from the executors, then F8 content drop
+    write_text_artifacts(
+        ok.select("record_id", F.col("document_content_total").alias("content")),
+        lake_dir,
+    )
+    # K2 — merge the stringified metadata into the lake table
+    merge_metadata(spark, f"{lake_dir}/metadata", _metadata_map(ok))
+    # K3 — A11: only loaded successes are notified
     notifications = ok.select(
         F.col("record_id").alias("recordId"),
         F.to_json(
@@ -235,9 +191,11 @@ def run_document_etl(
         ).alias("body"),
     )
     notifier(notifications, batch_id=0)
-    # cut the lineage of the (small) result frame so the port caches can
-    # be released — callers may run further actions on the return value
-    merged = materialize(merged, eager=True)
-    for df in persisted:
-        df.unpersist()
-    return merged
+    # cut the lineage of the (small) result frame so the cache can be
+    # released — callers may run further actions on the return value
+    results = materialize(
+        batch.select("record_id", "parent_id", "session_id", "flow", "success"),
+        eager=True,
+    )
+    batch.unpersist()
+    return results

@@ -45,6 +45,7 @@ from sbs_suptech_etl_v2_spark.functions.scalars import (
 )
 
 SQS_BATCH_MAX = 10
+METADATA_SCHEMA = "record_id string, metadata map<string,string>"
 
 
 def write_text_artifacts(df: DataFrame, out_dir: str) -> None:
@@ -55,14 +56,24 @@ def write_text_artifacts(df: DataFrame, out_dir: str) -> None:
     format, C5). ``foreachPartition`` keeps the write distributed —
     the driver never sees row data; with S3 the open() becomes a
     put_object on a per-partition client.
+
+    A ``record_id`` that cannot name a file inside ``txt/`` — NULL,
+    empty, ``.``/``..``, or holding a path separator — raises
+    ``ValueError`` before that row's file is opened: ids come from
+    outside input, and ``../x`` would write outside the sink.
     """
     target = os.path.join(out_dir, "txt")
     os.makedirs(target, exist_ok=True)
     rows = df.select("record_id", "content")
+    separators = {"/", os.sep}
 
     def write_partition(it: Iterator[Row]) -> None:
         for row in it:
-            path = os.path.join(target, f"{row['record_id']}.txt")
+            rid = row["record_id"]
+            name = "" if rid is None else str(rid)
+            if name in ("", ".", "..") or any(s in name for s in separators):
+                raise ValueError(f"record_id {rid!r} cannot name a text artifact")
+            path = os.path.join(target, f"{name}.txt")
             with open(path, "w", encoding="utf-8") as fh:
                 fh.write(row["content"] if row["content"] is not None else "")
 
@@ -130,11 +141,11 @@ def merge_metadata(
         F.col("record_id"), stringify_map_values(F.col("metadata")).alias("new_meta")
     )
     if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
+        # the table's schema is this sink's own: reading it with the
+        # schema given skips the footer-inference job
+        existing = spark.read.schema(METADATA_SCHEMA).parquet(table_path)
     else:
-        existing = new.sparkSession.createDataFrame(
-            [], "record_id string, metadata map<string,string>"
-        )
+        existing = new.sparkSession.createDataFrame([], METADATA_SCHEMA)
     merged = (
         existing.withColumnRenamed("metadata", "old_meta")
         .join(new, "record_id", "full_outer")

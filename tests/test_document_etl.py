@@ -1,18 +1,33 @@
 """Golden end-to-end test of the composed document-ETL plan.
 
-Twelve requests across the three domains run the full
-Extract→Transform→Load→Notify composition against deterministic
-fixture contents; assertions cover routing, the [B] content split,
-extracted fields in the merged metadata, per-row artifacts, and
-chunked notifications (SURVEY §5 golden-output strategy).
+Twelve requests across the three domains plus one empty payload run
+the full Extract→Transform→Load→Notify composition against
+deterministic fixture contents; assertions cover routing, the [B]
+content split, extracted fields in the merged metadata, per-row
+artifacts, chunked notifications, a re-delivery merge and the batch's
+Spark job count (SURVEY §5 golden-output strategy).
 """
 
 from __future__ import annotations
 
 import json
 
+from bench import _settled_group_count
 from sbs_suptech_etl_v2_spark.plans.document_etl import run_document_etl
 from sbs_suptech_etl_v2_spark.sinks.writers import NotificationBatchWriter
+
+FLOW_FIELDS = {
+    "polizas": {"policy_number", "policy_name", "policy_start_date", "policy_end_date"},
+    "tasaciones": {
+        "expert_warranty_name", "tasacion_date", "commercial_value",
+        "realization_value", "tasacion_owner",
+    },
+    "inscripciones": {"inscription_number", "legal_name", "inscription_date"},
+}
+# Spark jobs of one run_document_etl call on the golden fixture into a
+# fresh lake (local[4]): the port pass and its cache, one K1 write, one
+# K2 merge, one notify and the result checkpoint
+BATCH_JOBS = 6
 
 
 def _polizas_text(i: int) -> str:
@@ -36,7 +51,16 @@ def _inscripciones_text(i: int) -> str:
     )
 
 
+_SCHEMA = (
+    "record_id string, parent_id string, key string, session_id string, "
+    "document_type string, period_month string, period_year string, "
+    "content binary"
+)
+
+
 def _requests(spark):
+    """Twelve routable requests, then ``rec_empty``: an APPRAISAL with an
+    empty payload, which fails extraction."""
     rows = []
     for i in range(12):
         dtype = ["POLICY", "REGISTRATION", "APPRAISAL", "DEFAULT"][i % 4]
@@ -58,12 +82,8 @@ def _requests(spark):
                 text.encode("utf-8"),
             )
         )
-    return spark.createDataFrame(
-        rows,
-        "record_id string, parent_id string, key string, session_id string, "
-        "document_type string, period_month string, period_year string, "
-        "content binary",
-    )
+    rows.append(("rec_empty", "par_0", "k", "s0", "APPRAISAL", "Mayo", "2023", b""))
+    return spark.createDataFrame(rows, _SCHEMA)
 
 
 def test_full_document_etl_plan(spark, tmp_path):
@@ -78,9 +98,13 @@ def test_full_document_etl_plan(spark, tmp_path):
     assert rows["rec_3"]["flow"] == "polizas"  # DEFAULT fall-through
     assert rows["rec_1"]["flow"] == "inscripciones"
     assert rows["rec_2"]["flow"] == "tasaciones"
-    assert len(rows) == 12 and all(r["success"] for r in rows.values())
+    assert len(rows) == 13
+    assert all(r["success"] for k, r in rows.items() if k != "rec_empty")
+    # the failed extract keeps its routed flow and reports success=False
+    assert rows["rec_empty"]["flow"] == "tasaciones"
+    assert rows["rec_empty"]["success"] is False
 
-    # K1 artifacts: one txt per document
+    # K1 artifacts: one txt per document, none for the failed extract
     txt = tmp_path / "lake" / "txt"
     assert sorted(p.name for p in txt.iterdir()) == sorted(
         f"rec_{i}.txt" for i in range(12)
@@ -99,6 +123,11 @@ def test_full_document_etl_plan(spark, tmp_path):
     assert meta["rec_2"]["commercial_value"] == "250000"
     assert meta["rec_1"]["inscription_number"] == "1001"
     assert meta["rec_1"]["inscription_date"] == "06/12/2021"
+    # each map holds its own flow's fields and no other flow's keys
+    assert sorted(meta) == sorted(f"rec_{i}" for i in range(12))
+    for rid, m in meta.items():
+        want = {"document_type", "period_month", "period_year"} | FLOW_FIELDS[rows[rid]["flow"]]
+        assert set(m) == want, rid
 
     # K3 notifications: 12 successes, every chunk ≤10 (per-partition
     # chunking — executors send independently), nested JSON body
@@ -109,6 +138,72 @@ def test_full_document_etl_plan(spark, tmp_path):
     body = json.loads(notifier.sent_batches[0][0]["MessageBody"])
     assert body["type"].startswith("regulatory-compliance")
     assert set(body["data"]) == {"recordId", "parentId"}
+
+
+def test_redelivery_merges_new_wins(spark, tmp_path):
+    """A second batch into the same lake re-delivers two records with
+    changed text: changed fields take the new value, fields the new text
+    lacks keep the old one, untouched records stay as they were."""
+    lake = str(tmp_path / "lake")
+    run_document_etl(spark, _requests(spark), lake, NotificationBatchWriter())
+    before = {
+        r["record_id"]: dict(r["metadata"])
+        for r in spark.read.parquet(f"{lake}/metadata").collect()
+    }
+    again = spark.createDataFrame(
+        [
+            # pólizas without the holder section: policy_name is NULL
+            ("rec_0", "par_0", "k", "s0", "POLICY", "Junio", "2023",
+             b"POLIZA DE SEGURO POL-500 | Vigencia desde el 01/04/2024 hasta el 01/04/2025"),
+            # tasaciones with a new value and no owner
+            ("rec_2", "par_2", "k", "s0", "APPRAISAL", "Mayo", "2023",
+             b"INFORME DE TASACION | Perito: ING 2 | Fecha de tasacion: 05/02/2019 | "
+             b"Valor comercial: S/ 300000 | Valor de realizacion: S/ 225000"),
+        ],
+        _SCHEMA,
+    )
+    notifier = NotificationBatchWriter()
+    results = run_document_etl(spark, again, lake, notifier)
+    assert sorted((r["record_id"], r["success"]) for r in results.collect()) == [
+        ("rec_0", True), ("rec_2", True),
+    ]
+    meta = {
+        r["record_id"]: dict(r["metadata"])
+        for r in spark.read.parquet(f"{lake}/metadata").collect()
+    }
+    assert meta["rec_0"] == {
+        **before["rec_0"],
+        "policy_number": "POL-500",
+        "policy_start_date": "01/04/2024",
+        "policy_end_date": "01/04/2025",
+        "period_month": "6",
+    }
+    assert meta["rec_0"]["policy_name"] == "CLIENTE 0"  # kept: new text lacks it
+    assert meta["rec_2"] == {**before["rec_2"], "commercial_value": "300000"}
+    assert meta["rec_2"]["tasacion_owner"] == "SOC 2"
+    assert {k: v for k, v in meta.items() if k not in ("rec_0", "rec_2")} == {
+        k: v for k, v in before.items() if k not in ("rec_0", "rec_2")
+    }
+    assert "POL-500" in (tmp_path / "lake" / "txt" / "rec_0.txt").read_text()
+    assert sorted(e["Id"] for b in notifier.sent_batches for e in b) == ["rec_0", "rec_2"]
+
+
+def test_batch_job_count_is_pinned(spark, tmp_path):
+    """One routed port pass and one K1/K2/K3 action each: the batch's
+    job count is deterministic, so a plan change that adds an action
+    (or re-runs the port) moves it."""
+    sc = spark.sparkContext
+    requests = _requests(spark)
+    group = "document-etl-batch"
+    sc.setJobGroup(group, group)
+    try:
+        run_document_etl(spark, requests, str(tmp_path / "lake"), NotificationBatchWriter())
+        live = _settled_group_count(sc.statusTracker(), group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert live == BATCH_JOBS, (
+        f"run_document_etl on the golden fixture: pinned {BATCH_JOBS} jobs, live {live}"
+    )
 
 
 def test_port_executes_once_per_request(spark, tmp_path):
@@ -158,17 +253,16 @@ def test_port_executes_once_per_request(spark, tmp_path):
         port_factory=factory,
     )
     # two extra caller-side actions on the returned frame: still no re-run
-    assert results.count() == 12
-    assert len(results.collect()) == 12
-    assert len(os.listdir(calls_dir)) == 12  # exactly one port call per request
+    assert results.count() == 13
+    assert len(results.collect()) == 13
+    # exactly one port call per non-empty request; the empty one never
+    # reaches the port
+    assert len(os.listdir(calls_dir)) == 12
 
 
 def test_failed_extract_produces_no_notification(spark, tmp_path):
     empty_content = spark.createDataFrame(
-        [("rec_x", "p", "k", "s", "POLICY", "Mayo", "2023", b"")],
-        "record_id string, parent_id string, key string, session_id string, "
-        "document_type string, period_month string, period_year string, "
-        "content binary",
+        [("rec_x", "p", "k", "s", "POLICY", "Mayo", "2023", b"")], _SCHEMA
     )
     notifier = NotificationBatchWriter()
     results = run_document_etl(spark, empty_content, str(tmp_path / "lake"), notifier)

@@ -135,6 +135,20 @@ def test_write_text_artifacts_one_file_per_row(spark, tmp_path):
     assert (txt / "r3.txt").read_text() == ""
 
 
+@pytest.mark.parametrize(
+    ("record_id", "shown"), [("../escape", "'../escape'"), (None, "None")]
+)
+def test_write_text_artifacts_rejects_unsafe_record_ids(spark, tmp_path, record_id, shown):
+    """An id that cannot name a file inside txt/ fails the write, naming
+    the id, instead of escaping the sink (``../x``) or writing
+    ``None.txt`` for a NULL id."""
+    out = tmp_path / "out"
+    df = spark.createDataFrame([(record_id, "x")], "record_id string, content string")
+    with pytest.raises(Exception, match=f"ValueError: record_id {shown}"):
+        write_text_artifacts(df.coalesce(1), str(out))
+    assert sorted(p.name for p in tmp_path.rglob("*") if p.is_file()) == []
+
+
 def test_merge_metadata_new_wins_and_idempotent(spark, tmp_path):
     path = str(tmp_path / "meta")
     first = spark.createDataFrame(
