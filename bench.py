@@ -455,8 +455,8 @@ def main() -> None:
 
     samples: dict[str, list[float]] = {n: [] for n in names}
     # Per-query Spark job counts, via job groups: everything the query
-    # does — builder-time actions (e.g. the dedup fixpoint's 1-row
-    # convergence probes) AND the noop materialization — runs on this
+    # does — builder-time actions (e.g. the dedup fixpoint's per-round
+    # eager checkpoints) AND the noop materialization — runs on this
     # thread between setJobGroup and the read, so the count is exactly
     # the jobs a driver box pays the per-job scheduling floor for.
     # Counts are plan properties (stable across rounds modulo AQE);

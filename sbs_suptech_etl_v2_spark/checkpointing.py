@@ -94,11 +94,13 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         # No lineage cut: accept recomputation. PLAN-INSPECTION ONLY —
         # the plan-quality tests use it to see through checkpoints to
         # the underlying exchange shapes. It is NOT a deployment
-        # posture: operators whose structure depends on the cut
-        # (iterative loops would otherwise double their plan per round;
-        # multi-consumer sampled layouts would depend on exchange
-        # reuse) either force a local cut regardless (see
-        # _fixpoint_clusters_from_pairs) or may silently degrade.
+        # posture: operators whose structure depends on the cut either
+        # force a local cut regardless through materialize_required
+        # (the dedup fixpoint loop, whose plan would otherwise double
+        # per round and whose eager per-round cut is the job that
+        # delivers its convergence observation) or may silently degrade
+        # (multi-consumer sampled layouts would depend on exchange
+        # reuse).
         return df
     return df.localCheckpoint(eager=eager)
 

@@ -36,7 +36,7 @@ and verification stay JVM-side codegen expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -672,10 +672,8 @@ def _initial_labels(edges: DataFrame) -> DataFrame:
 def _neighbor_joined(labels: DataFrame, edges: DataFrame) -> DataFrame:
     """``labels`` left-joined with its per-node neighbor-min — the
     shared frame of one propagation round: selecting ``_propagated()``
-    from it IS the round, and aggregating both ``sum(label)`` and
-    ``sum(_propagated())`` from it proves/refutes a fixpoint in ONE
-    single-plan job (the r18 probe restructure — the prior probe
-    unioned two full unroll legs, executing the seed rounds twice).
+    from it IS the round, and selecting ``label`` beside it keeps the
+    pre-round label for the fixpoint loop's convergence test.
 
     The edge list is tiny and lineage-cut -> broadcast it in both
     joins, so the node-sized labels side never shuffles in a round.
@@ -717,8 +715,7 @@ def _pointer_jump(labels: DataFrame) -> DataFrame:
     round (shuffle on the label key; the frame is edge-bounded, never
     corpus-sized). Safe to interleave with propagation: label values
     are always ids of nodes in the same component and only decrease
-    (label(x) <= x inductively), so the monotone sum(label) convergence
-    probe still proves a fixpoint.
+    (label(x) <= x inductively).
     """
     mapping = labels.select(
         F.col("doc_id").alias("m_doc"), F.col("label").alias("m_label")
@@ -779,154 +776,77 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replaced (measured ~0.5 s/query). The count window consumes the
     # unroll exactly once, so no further materialize is needed — the
     # whole clustering is ONE job on top of the two checkpoints. The
-    # fixpoint variant below, whose round count is unbounded, keeps
-    # per-round persistence.
+    # fixpoint variant below, whose round count is unbounded, cuts every
+    # round after this seed with an eager checkpoint.
     return _nontrivial_clusters(labels)
 
 
-MAX_FIXPOINT_ROUNDS = 20  # safety valve; diameter of real dup graphs is tiny
+# runaway valve, seed included: the 18 propagate+jump rounds after the
+# seed cover a component diameter of about 2^18
+MAX_FIXPOINT_ROUNDS = 20
 
 
 def neardup_clusters_fixpoint(
-    spark: SparkSession,
-    sf_dir: str,
-    max_rounds: int = MAX_FIXPOINT_ROUNDS,
-    pointer_doubling: bool = False,
+    spark: SparkSession, sf_dir: str, max_rounds: int = MAX_FIXPOINT_ROUNDS
 ) -> DataFrame:
     """[EXT-1] near-dup clustering run to CONVERGENCE — the production
     form of ``neardup_clusters``'s bounded loop.
 
     Same propagation round (broadcast edge join + min-label fold), but
-    iterated until a fixpoint instead of a fixed count. Convergence
-    detection costs one tiny aggregate per round: labels only ever
-    DECREASE (``least``), so ``sum(label)`` is strictly monotonic until
-    the fixpoint — an unchanged sum proves an unchanged labeling, no
-    old-vs-new join needed. ``max_rounds`` is the runaway valve (a
-    path graph of length n needs ~n propagation rounds; real dup
-    graphs are star-shaped and converge in 1-2).
-
-    The loop is SEEDED with the bounded ``CLUSTER_ITERATIONS``-round
-    pure-plan unroll (q50's plan): duplicate graphs with diameter <=
-    the seed — the overwhelmingly common case — pay one materialize
-    plus two tiny sum probes total, instead of a persist + probe action
-    per round. Extra propagation rounds past the fixpoint cannot change
-    any label (``least`` is idempotent), so seeding never changes the
-    result, only the action count.
-
-    ``pointer_doubling=True`` composes every probe round with a
-    ``_pointer_jump`` step — the large-diameter production posture
-    (O(log diameter) rounds instead of O(diameter); see
-    ``_pointer_jump``). Identical results either way — the flag trades
-    a per-round self-join for fewer rounds, worth it exactly when
-    components are chain-shaped rather than star-shaped.
+    iterated until a fixpoint instead of a fixed count, with a pointer
+    jump after every unconverged round so chain-shaped components
+    converge in O(log diameter) rounds (see ``_pointer_jump``).
 
     Deterministic and identical to the bounded version whenever the
     graph diameter <= the bound — the registry checks this path against
     the SAME DuckDB oracle as q50.
     """
     pairs = materialize(minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"))
-    return _fixpoint_clusters_from_pairs(pairs, max_rounds, pointer_doubling)
+    return _fixpoint_clusters_from_pairs(pairs, max_rounds)
 
 
-def _fixpoint_clusters_from_pairs(
-    pairs: DataFrame, max_rounds: int, pointer_doubling: bool
-) -> DataFrame:
+def _fixpoint_clusters_from_pairs(pairs: DataFrame, max_rounds: int) -> DataFrame:
     """Fixpoint label propagation over an already-materialized pair list.
 
-    Split out so tests can drive the convergence loop with adversarial
-    graphs (long chains that do NOT converge inside the seed) through
-    the exact production path.
+    Seeded with q50's ``CLUSTER_ITERATIONS``-round pure-plan unroll.
+    Each further round projects ``(doc_id, prev, label)`` — the labels
+    before and after one propagation — and cuts it with an eager
+    checkpoint whose job also reports ``sum(prev)`` and ``sum(label)``
+    through ``DataFrame.observe``, so testing convergence costs no job
+    of its own. Equal sums end the loop; otherwise the cut labels take
+    one pointer jump and the next round starts. Why that is correct:
+
+    - labels only decrease (``label = least(prev, ...)`` row by row), so
+      equal sums mean no label changed: a propagation fixpoint;
+    - a propagation fixpoint is constant on each component (every node
+      holds the same label as all its neighbors), so it is also a jump
+      fixpoint — testing before the jump skips nothing;
+    - every cut is eager, so each round's frame is computed by exactly
+      one job and there is no race between consumers to argue.
+
+    ``max_rounds`` counts the seed rounds too. Split out so tests can
+    drive the loop with adversarial graphs (long chains far past the
+    seed) through the exact production path.
     """
     edges = _bidirectional_edges(pairs)
     labels = _initial_labels(edges)
     seed_rounds = min(CLUSTER_ITERATIONS, max_rounds)
     for _ in range(seed_rounds):
         labels = _propagate_min_label(labels, edges)
-    if seed_rounds >= max_rounds:
-        return _nontrivial_clusters(labels)
-    # FIRST probe, single-plan (r18, VERDICT r17 #3/#5): the seed
-    # unroll is LAZILY checkpointed, then BOTH the pre- and post-round
-    # sums aggregate from ONE _neighbor_joined frame — sum(label) is
-    # the seed labeling, sum(_propagated()) the labeling one round
-    # later, equal iff the labeling is a fixpoint (labels only ever
-    # decrease). The prior protocol unioned two aggregates over two
-    # SEPARATE pure plans (the 4-round unroll AND its 5-round
-    # extension, no subtree sharing between union legs) and then the
-    # output action re-executed the 4-round unroll a third time;
-    # measured 24 -> 18 jobs for q75 (the remaining 18 are the pairs
-    # chain + one unroll traversal + the window — structural).
-    # RACE PROOF for the lazy cut: this probe is the FIRST action to
-    # touch the seed labels, and within its plan every stage that
-    # scans them is ordered by AQE stage dependencies — the
-    # neighbor-min shuffle computes the labels RDD (persisting its
-    # blocks), its broadcast feeds the final aggregate, and only then
-    # does the aggregate's left side re-scan the now-cached blocks;
-    # no two stages can compute the unroll concurrently. The output
-    # action below then reads the checkpointed blocks instead of
-    # re-running the unroll. The pointer-doubling posture skips this
-    # shortcut: its jump self-joins the step frame.
-    if not pointer_doubling:
-        labels = materialize_required(labels, eager=False)
-        joined = _neighbor_joined(labels, edges)
-        row = joined.agg(
-            F.sum("label").alias("s0"),
-            F.sum(_propagated()).alias("s1"),
-        ).first()
-        if row["s0"] == row["s1"]:
-            return _nontrivial_clusters(labels)
-        # not converged: one more round from the (now-checkpointed)
-        # seed, then loop from round seed+1 with the classic
-        # persist-per-round protocol
-        labels = materialize(
-            joined.select("doc_id", _propagated().alias("label")), eager=True
-        )
-        prev_sum: int | None = row["s1"]
-        start_round = seed_rounds + 1
-    else:
-        labels = materialize(labels, eager=True)
-        prev_sum = None  # fused into the first probe below
-        start_round = seed_rounds
-    for round_no in range(start_round, max_rounds):
-        step = _propagate_min_label(labels, edges)
-        if pointer_doubling:
-            # the jump self-joins its input — cut lineage so the
-            # propagation round computes once and both jump references
-            # share the checkpointed blocks
-            step = materialize_required(step, eager=False)
-            step = _pointer_jump(step)
-        prev_frame = labels
-        # LAZY lineage cut per round (not .persist()): a persisted frame
-        # keeps its full logical plan, so the round-over-round plan tree
-        # doubled every iteration — planning went exponential and OOMed
-        # the driver on chain graphs with diameter ≳ 12 (caught by
-        # tests/test_pointer_doubling.py::test_fixpoint_loop_converges_
-        # past_the_seed). localCheckpoint truncates the plan itself;
-        # the probe action below materializes it, and the blocks are
-        # reclaimed by the ContextCleaner when the frame goes out of
-        # scope — no persist/unpersist bookkeeping.
-        labels = materialize_required(step, eager=False)
-        if prev_sum is None:
-            # FIRST probe: collect the pre-round and post-round sums in
-            # ONE job (a union of two 1-row aggregates) — the common
-            # converged-after-seed case then pays a single probe action
-            # instead of two.
-            both = (
-                prev_frame.agg(F.sum("label").alias("s"))
-                .select(F.lit(0).alias("r"), "s")
-                .unionByName(
-                    labels.agg(F.sum("label").alias("s")).select(
-                        F.lit(1).alias("r"), "s"
-                    )
-                )
-                .collect()
+    for _ in range(seed_rounds, max_rounds):
+        sums = Observation()
+        labels = materialize_required(
+            _neighbor_joined(labels, edges)
+            .select(
+                "doc_id", F.col("label").alias("prev"), _propagated().alias("label")
             )
-            sums = {row["r"]: row["s"] for row in both}
-            prev_sum, cur_sum = sums[0], sums[1]
-        else:
-            cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
+            .observe(sums, F.sum("prev").alias("prev"), F.sum("label").alias("label")),
+            eager=True,
+        )
+        observed = sums.get
+        if observed["prev"] == observed["label"]:
             break
-        prev_sum = cur_sum
+        labels = _pointer_jump(labels)
     return _nontrivial_clusters(labels)
 
 

@@ -3,10 +3,13 @@
 The reference's core transform: document text → typed fields via an
 LLM port. Here the port runs inside ``mapInPandas`` (Arrow-batched —
 the UDTF-shaped boundary SURVEY §2.11 prescribes for table-producing
-ports), composed with the A10 retry wrapper and A9 bounded concurrency
-from the ports layer. The deterministic ``FakeTransformer`` implements
-the prompts' extraction intent as regexes, so the DuckDB oracle can
-check every row with ``regexp_extract``.
+ports) under A9 bounded concurrency from the ports layer. The A10
+throttling retry lives in the port itself (``ProductionTransformer``
+wraps every call, as the reference adapter does), so this layer calls
+each port method once per row and never retries on top. The
+deterministic ``FakeTransformer`` implements the prompts' extraction
+intent as regexes, so the DuckDB oracle can check every row with
+``regexp_extract``.
 
 Document contents are synthesized deterministically from ``doc_id``
 (the driver tables carry no Spanish policy text); both engines build
@@ -28,11 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.io import spread, table
-from sbs_suptech_etl_v2_spark.ports.transformer import (
-    FakeTransformer,
-    bounded_map,
-    with_throttling_retry,
-)
+from sbs_suptech_etl_v2_spark.ports.transformer import FakeTransformer, bounded_map
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -62,10 +61,11 @@ def extract_structured(
 ) -> DataFrame:
     """Run a transform-port method over every row via ``mapInPandas``.
 
-    One Arrow batch in → one extracted batch out; within a batch the
-    port is invoked through ``with_throttling_retry`` (A10) under
-    ``bounded_map`` (A9). The port instance is constructed inside the
-    task via ``port_factory`` (never serialized from the driver) — the
+    One Arrow batch in → one extracted batch out; within a batch each
+    row's port method runs once under ``bounded_map`` (A9) — the A10
+    retry is the port's own, so an error it gives up on fails the task.
+    The port instance is constructed inside the task via
+    ``port_factory`` (never serialized from the driver) — the
     production port holds an unpicklable client. Default:
     ``FakeTransformer``.
 
@@ -90,7 +90,7 @@ def extract_structured(
 
         def call(item: tuple[str, str]) -> dict:
             content, method = item
-            return with_throttling_retry(getattr(port, method), content)
+            return getattr(port, method)(content)
 
         for pdf in batches:
             methods = (

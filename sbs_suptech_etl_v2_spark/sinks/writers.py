@@ -95,12 +95,7 @@ def _atomic_swap(spark: SparkSession, df: DataFrame, table_path: str) -> None:
     os.rename(tmp, table_path)
 
 
-def merge_metadata(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    strategy: str = "parquet_swap",
-) -> None:
+def merge_metadata(spark: SparkSession, table_path: str, updates: DataFrame) -> None:
     """K2 — MERGE-style metadata upsert with map merge, new wins.
 
     ``updates``: ``(record_id string, metadata map<string,string>)``.
@@ -109,12 +104,11 @@ def merge_metadata(
     after stringify-all (C10). The join is a full outer on record_id —
     at scale both sides shuffle once on the merge key.
 
-    ``strategy``: ``parquet_swap`` is the CANONICAL (and only) form —
-    write-to-temp + directory rename. The reference's DynamoDB
-    ``update_item`` loop is per-item atomic; the set-oriented swap
-    yields the same observable state transition (every matched row
-    merged, every unmatched row inserted) in one commit, atomic
-    against crash-before-rename.
+    The commit is a parquet swap: write-to-temp + directory rename. The
+    reference's DynamoDB ``update_item`` loop is per-item atomic; the
+    set-oriented swap yields the same observable state transition
+    (every matched row merged, every unmatched row inserted) in one
+    commit, atomic against crash-before-rename.
 
     CONCURRENCY CONTRACT (read before deploying next to live readers):
     the swap is NOT snapshot-isolated — between the ``rmtree`` of the
@@ -132,11 +126,6 @@ def merge_metadata(
     lives outside this repo (the package is unavailable here and a
     shipped-but-unrunnable path would be a stub).
     """
-    if strategy != "parquet_swap":
-        raise ValueError(
-            f"unknown merge strategy {strategy!r}; parquet_swap is the "
-            "canonical K2 merge (see docstring)"
-        )
     new = updates.select(
         F.col("record_id"), stringify_map_values(F.col("metadata")).alias("new_meta")
     )

@@ -260,6 +260,44 @@ def test_port_executes_once_per_request(spark, tmp_path):
     assert len(os.listdir(calls_dir)) == 12
 
 
+def test_throttled_port_call_is_not_retried_by_the_operator(spark, tmp_path):
+    """The A10 throttling retry belongs to the port (``ProductionTransformer``
+    wraps its own calls); the extraction operator calls each row's
+    port method once. A port that throttles forever and does not retry
+    must therefore run exactly once for the row, and the batch fails —
+    a retry stacked in the operator would call it 6 times and back off
+    for ~31 s first."""
+    import os
+    import uuid as uuid_mod
+
+    import pytest
+
+    calls_dir = str(tmp_path / "calls")
+    os.makedirs(calls_dir)
+
+    def factory():
+        from sbs_suptech_etl_v2_spark.ports.transformer import ThrottlingError
+
+        class ThrottledTransformer:
+            def llm_caller_polizas(self, content):
+                with open(os.path.join(calls_dir, uuid_mod.uuid4().hex), "w") as fh:
+                    fh.write("1")
+                raise ThrottlingError("throttled")
+
+        return ThrottledTransformer()
+
+    request = spark.createDataFrame(
+        [("rec_t", "p", "k", "s", "POLICY", "Mayo", "2023", _polizas_text(1).encode())],
+        _SCHEMA,
+    )
+    with pytest.raises(Exception, match="ThrottlingError"):
+        run_document_etl(
+            spark, request, str(tmp_path / "lake"), NotificationBatchWriter(),
+            port_factory=factory,
+        )
+    assert len(os.listdir(calls_dir)) == 1
+
+
 def test_failed_extract_produces_no_notification(spark, tmp_path):
     empty_content = spark.createDataFrame(
         [("rec_x", "p", "k", "s", "POLICY", "Mayo", "2023", b"")], _SCHEMA

@@ -1,17 +1,19 @@
 """Source-scan pin: no driver-side data paths in the package.
 
 The standing scale claim (SCALING.md "Global invariants") is that no
-operator ever pulls data to the driver — the ONLY driver actions are
-the dedup fixpoint's 1-row convergence probes (a distributed iterative
-algorithm must observe convergence somewhere, and a 1-row aggregate
-probe is the bounded way to do it). Until now that claim was re-audited
-by hand each round; this test pins it: a `.collect(`/`.toPandas(`/
-`.first(`/`.toLocalIterator(`/`.show(` appearing anywhere else in the
-package fails the suite and names the file (the CLI's print sink — a
-row ITERATOR, bounded by construction — is the one allow-listed
-toLocalIterator, and the oracle harness in paritycheck.py, which no
-query path calls, the one other collect). Streaming/sink modules go through foreachBatch and
-executor-side writers, so they are covered by the same rule.
+operator ever pulls data to the driver: no operator runs a driver
+action at all. Even the dedup fixpoint, an iterative algorithm that
+must observe convergence, reads its per-round sums from
+``DataFrame.observe`` metrics delivered by the eager checkpoint that
+materializes the round, not from a probe action. This test pins the
+claim: a `.collect(`/`.toPandas(`/`.first(`/`.toLocalIterator(`/
+`.show(` appearing anywhere in the package outside two non-operator
+sites fails the suite and names the file. The two sites are the CLI's
+print sink (a row ITERATOR, bounded by construction — the one
+toLocalIterator) and the oracle harness in paritycheck.py, which no
+query path calls (the one collect). Streaming/sink modules go through
+foreachBatch and executor-side writers, so they are covered by the
+same rule.
 
 The scan tokenizes each file and drops COMMENT and STRING tokens
 before matching, so a marker inside a comment or docstring doesn't
@@ -33,20 +35,15 @@ import sbs_suptech_etl_v2_spark as pkg
 PKG_ROOT = pathlib.Path(pkg.__file__).parent
 
 # every allowed driver-action site: file (relative to the package) ->
-# exact allowed occurrence count. The three dedup sites are the
-# fixpoint's convergence probes, all 1-row aggregates: the r18
-# single-plan first probe (.first() of the fused pre/post-round sum
-# pair), the pointer-doubling loop's fused union-aggregate .collect(),
-# and the steady-state loop's per-round sum .first(); __main__.py's
-# toLocalIterator IS the CLI's print sink — the one place whose whole
-# job is to stream rows to the driver's stdout, and an iterator (one
-# partition in flight, never the full frame) is the bounded way to do
-# it; paritycheck.py's collect is the oracle harness's Spark leg
-# (compare() checks a query's whole result against DuckDB on the Spark
-# driver) — no operator or query path calls it; nothing else is
-# allowed.
+# exact allowed occurrence count. No operator module is listed.
+# __main__.py's toLocalIterator IS the CLI's print sink — the one place
+# whose whole job is to stream rows to the driver's stdout, and an
+# iterator (one partition in flight, never the full frame) is the
+# bounded way to do it; paritycheck.py's collect is the oracle
+# harness's Spark leg (compare() checks a query's whole result against
+# DuckDB on the Spark driver) — no operator or query path calls it;
+# nothing else is allowed.
 ALLOWED = {
-    "operators/dedup.py": {".collect(": 1, ".first(": 2},
     "__main__.py": {".toLocalIterator(": 1},
     "paritycheck.py": {".collect(": 1},
 }

@@ -242,18 +242,17 @@ def test_q70_argmax_second_agg_runs_on_bounded_frame(spark, sf_dir):
 
 
 def test_q75_fixpoint_shares_q50_checkpoint_shape(spark, sf_dir):
-    # round 6: when the graph converges inside the seed (the corpus
-    # does), the fixpoint returns q50's PURE seed-unroll plan — count
-    # window over edge-bounded broadcast-join branches that all bottom
-    # at the checkpointed pair list. Same assertions as the q50 guard;
-    # a materialized-labels ExistingRDD root would mean the shortcut
-    # stopped firing and the extra checkpoint job came back.
+    # the fixpoint loop ends on an eager checkpoint of the converged
+    # labels, so the returned plan is only the count window over that
+    # ExistingRDD: one keyed exchange (the window's partitioning on the
+    # label) and no join. A join here would mean the output plan
+    # re-runs propagation rounds instead of reading the cut labels.
     plan = _plan(spark, sf_dir, "q75_neardup_fixpoint")
-    assert "ExistingRDD" in plan  # checkpointed edge list at every leaf
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "ExistingRDD" in plan
+    assert "Join" not in plan
     tree = plan.split("\n\n")[0]
     assert tree.count("Window") == 1
-    assert _keyed_exchanges(plan) <= 8
+    assert _keyed_exchanges(plan) == 1
 
 
 def test_q71_kmeans_centroids_broadcast_and_bounded_shuffles(spark, sf_dir):

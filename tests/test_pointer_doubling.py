@@ -1,10 +1,12 @@
 """Pointer-doubling (pointer-jumping) fixpoint clustering.
 
-Two claims: (1) composing propagation with a pointer jump converges in
+Claims: (1) composing propagation with a pointer jump converges in
 O(log diameter) rounds where plain min-label propagation needs
 O(diameter) — shown on a synthetic chain component, the shape that
-stalls propagation at scale; (2) the ``pointer_doubling`` flag does not
-change the operator's result on the real corpus.
+stalls propagation at scale; (2) the fixpoint loop, which always jumps,
+gives q50's bounded result on the real corpus and the exact connected
+components on chains far longer than its round count, on random graphs
+and on an empty pair list.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.operators.dedup import (
+    MAX_FIXPOINT_ROUNDS,
     _bidirectional_edges,
     _fixpoint_clusters_from_pairs,
     _initial_labels,
@@ -53,36 +56,55 @@ def test_doubling_converges_in_log_rounds_where_propagation_does_not(spark):
     assert _labels_after(edges, CHAIN_N - 1, jump=False) == converged
 
 
-def test_pointer_doubling_flag_is_result_invariant(spark, sf_dir):
+def _chain_clusters(spark, n, max_rounds):
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a bigint, doc_b bigint"
+    ).localCheckpoint(eager=True)
+    return sorted(
+        map(
+            tuple,
+            _fixpoint_clusters_from_pairs(pairs, max_rounds)
+            .select("doc_id", "cluster_id", "cluster_size")
+            .collect(),
+        )
+    )
+
+
+def test_fixpoint_matches_bounded_q50_on_corpus(spark, sf_dir):
     base = neardup_clusters(spark, sf_dir)
-    doubled = neardup_clusters_fixpoint(spark, sf_dir, pointer_doubling=True)
+    fixpoint = neardup_clusters_fixpoint(spark, sf_dir)
     key = ["doc_id", "cluster_id", "cluster_size"]
     assert sorted(map(tuple, base.select(*key).collect())) == sorted(
-        map(tuple, doubled.select(*key).collect())
+        map(tuple, fixpoint.select(*key).collect())
     )
 
 
 def test_fixpoint_loop_converges_past_the_seed(spark):
-    # the round-6 pure-plan first probe short-circuits graphs that
-    # converge inside the seed; this chain does NOT (diameter 16 >>
-    # seed 2), so the test drives the full persist-per-round loop —
-    # both with and without pointer doubling — through the exact
-    # production path and checks the final labeling is the component
-    # minimum everywhere
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(CHAIN_N - 1)], "doc_a bigint, doc_b bigint"
-    ).localCheckpoint(eager=True)
-    expect = sorted((i, 0, CHAIN_N) for i in range(CHAIN_N))
-    for doubling in (False, True):
-        got = sorted(
-            map(
-                tuple,
-                _fixpoint_clusters_from_pairs(pairs, 25, doubling)
-                .select("doc_id", "cluster_id", "cluster_size")
-                .collect(),
-            )
-        )
-        assert got == expect, f"pointer_doubling={doubling}"
+    # this chain does NOT converge inside the seed (diameter 16 >> seed
+    # 2), so the test drives the per-round checkpoint loop through the
+    # exact production path and checks the final labeling is the
+    # component minimum everywhere
+    assert _chain_clusters(spark, CHAIN_N, 25) == sorted(
+        (i, 0, CHAIN_N) for i in range(CHAIN_N)
+    )
+
+
+def test_fixpoint_clusters_chain_longer_than_max_rounds(spark):
+    # a 40-node chain has diameter 39, about twice MAX_FIXPOINT_ROUNDS:
+    # propagation alone (one hop per round) would leave its far end
+    # split off; with a jump after every round it converges in a few
+    n = 40
+    assert n - 1 > MAX_FIXPOINT_ROUNDS
+    assert _chain_clusters(spark, n, MAX_FIXPOINT_ROUNDS) == sorted(
+        (i, 0, n) for i in range(n)
+    )
+
+
+def test_fixpoint_of_no_pairs_is_empty(spark):
+    pairs = spark.createDataFrame([], "doc_a bigint, doc_b bigint").localCheckpoint(
+        eager=True
+    )
+    assert _fixpoint_clusters_from_pairs(pairs, MAX_FIXPOINT_ROUNDS).collect() == []
 
 
 def test_fixpoint_respects_max_rounds_valve(spark):
@@ -92,14 +114,14 @@ def test_fixpoint_respects_max_rounds_valve(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(CHAIN_N - 1)], "doc_a bigint, doc_b bigint"
     ).localCheckpoint(eager=True)
-    rows = _fixpoint_clusters_from_pairs(pairs, 4, False).collect()
+    rows = _fixpoint_clusters_from_pairs(pairs, 4).collect()
     assert rows  # chain stays one (partial) cluster family
     assert all(r["cluster_id"] <= r["doc_id"] for r in rows)
 
 
 def test_fixpoint_matches_union_find_on_random_graphs(spark):
-    # property: on arbitrary pair graphs the production fixpoint (both
-    # postures) computes exactly the connected components a plain
+    # property: on arbitrary pair graphs the production fixpoint
+    # computes exactly the connected components a plain
     # union-find computes. Deterministic seed batch instead of
     # @given — each case spins real Spark jobs, so a handful of
     # adversarial shapes (chains, stars, cliques-by-parity, random)
@@ -141,23 +163,21 @@ def test_fixpoint_matches_union_find_on_random_graphs(spark):
         pairs = [(a, b) for a, b in pairs if a != b]
         pdf = spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
         want = union_find_components(max(max(p) for p in pairs) + 1, pairs)
-        for doubling in (False, True):
-            got = sorted(
-                map(
-                    tuple,
-                    _fixpoint_clusters_from_pairs(
-                        pdf.localCheckpoint(eager=True), 60, doubling
-                    )
-                    .select("doc_id", "cluster_id", "cluster_size")
-                    .collect(),
-                )
+        got = sorted(
+            map(
+                tuple,
+                _fixpoint_clusters_from_pairs(pdf.localCheckpoint(eager=True), 60)
+                .select("doc_id", "cluster_id", "cluster_size")
+                .collect(),
             )
-            assert got == want, (pairs, doubling)
+        )
+        assert got == want, pairs
 
 
 def test_jump_is_label_monotone(spark):
-    # label(label(u)) <= label(u): the convergence probe's monotonicity
-    # argument depends on this
+    # label(label(u)) <= label(u): a jump never moves a label away from
+    # the component minimum, so jumping between rounds keeps the loop
+    # monotone
     edges = _chain_edges(spark)
     labels = _propagate_min_label(_initial_labels(edges), edges).localCheckpoint()
     before = {r["doc_id"]: r["label"] for r in labels.collect()}

@@ -273,18 +273,6 @@ def test_kafka_request_stream_schema_when_connector_present(spark):
     }
 
 
-def test_merge_metadata_rejects_unknown_strategy(spark, tmp_path):
-    # parquet_swap is the single canonical K2 merge; anything else
-    # (including the removed 'delta' wiring) must fail fast with an
-    # actionable message, never fall back silently
-    updates = spark.createDataFrame(
-        [("r1", {"k": "v"})], "record_id string, metadata map<string,string>"
-    )
-    for strategy in ("delta", "iceberg"):
-        with pytest.raises(ValueError, match="unknown merge strategy"):
-            merge_metadata(spark, str(tmp_path / "t"), updates, strategy=strategy)
-
-
 def test_idempotent_batch_sink_skips_replayed_epochs(spark, tmp_path):
     from sbs_suptech_etl_v2_spark.sinks.writers import IdempotentBatchSink
 
