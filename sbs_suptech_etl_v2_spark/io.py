@@ -80,35 +80,28 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Ensure ``df`` is partitioned at least ``defaultParallelism``-wide
-    before a CPU-heavy stage (Python kernel, interpreted HOF chain,
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions before a
+    CPU-heavy stage (Python kernel, interpreted HOF chain,
     external-call fan-out).
 
     The test parquet files are single-row-group, so Spark's scan yields
     ONE partition per file and everything downstream of the scan runs on
-    one core of 32 unless a shuffle intervenes. On a production lake the
-    input arrives with >= cores partitions and this is a no-op — the
-    partition-count probe makes the repartition conditional, so no
-    shuffle is ever added at scale. When it does fire, the shuffled
-    frame is the narrow kernel input (ids + text / vectors), never wide
-    intermediate state.
+    one core unless a shuffle intervenes. The shuffled frame is the
+    narrow kernel input (ids + text / vectors), never wide intermediate
+    state.
+
+    The repartition is unconditional. Deciding whether the input is
+    already wide needs its partition count, and
+    ``df.rdd.getNumPartitions()`` plans the frame and, under AQE,
+    executes every upstream query stage as jobs the caller never asked
+    for (on a listing-scan batch, the listing's sorts). The trade:
+    an input that already arrives at least ``defaultParallelism`` wide
+    (a many-row-group lake scan, a ``createDataFrame`` at the core
+    count) pays one round-robin exchange of the kernel input it did not
+    need.
     """
-    target = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # the probe converts the plan to an RDD (a full physical-planning
-    # round trip, ~50-100 ms driver-side); memoize it on the DataFrame
-    # object — table() returns session-cached frames, so repeated
-    # queries over the same table pay the probe once
-    nparts = getattr(df, "_sg_nparts", None)
-    if nparts is None:
-        nparts = df.rdd.getNumPartitions()
-        try:
-            df._sg_nparts = nparts
-        except AttributeError:
-            pass
-    if nparts >= target:
-        return df
-    return df.repartition(target)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

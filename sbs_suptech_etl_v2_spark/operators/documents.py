@@ -278,8 +278,8 @@ def pages_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes on the wire at 100 TB.
     """
     # no spread() here: the hash repartition below collapses any
-    # round-robin redistribution anyway (CollapseRepartition), so the
-    # spread would contribute only its planning-probe latency
+    # round-robin redistribution anyway (CollapseRepartition), so a
+    # spread would add nothing to the plan
     #
     # Expressions are SQL-text (selectExpr / F.expr with SQL lambdas),
     # not Column algebra: the Column/HOF form issued ~420 py4j round

@@ -52,12 +52,11 @@ INSCRIPCIONES_SCHEMA = (
 
 def extract_structured(
     docs: DataFrame,
-    port_method_name: str | None,
+    method: Column,
     out_schema: str,
     key_cols: tuple[str, ...] = ("doc_id",),
     content_col: str = "content",
     port_factory: Callable[[], Any] | None = None,
-    method_col: str | None = None,
 ) -> DataFrame:
     """Run a transform-port method over every row via ``mapInPandas``.
 
@@ -69,11 +68,13 @@ def extract_structured(
     production port holds an unpicklable client. Default:
     ``FakeTransformer``.
 
-    ``method_col`` names a column of ``docs`` holding each row's port
-    method name, for batches that mix document types; it replaces
-    ``port_method_name``. A field a row's method does not return comes
-    out NULL, so ``out_schema`` may be the union of several methods'
-    fields.
+    ``method`` is each row's port method name: ``F.lit(name)`` for a
+    single-type batch, an expression for a batch that mixes document
+    types. A field a row's method does not return comes out NULL, so
+    ``out_schema`` may be the union of several methods' fields. A row
+    whose method is NULL makes no port call and comes out with its key
+    columns and NULL fields — the reference's transform is a no-op on a
+    failed extract (F4, workflow_polizas.py:55-57).
     """
 
     value_cols = [
@@ -81,6 +82,7 @@ def extract_structured(
         for f in out_schema.split(",")
         if f.strip().split(" ")[0] not in key_cols
     ]
+    method_name_col = "_port_method"
     factory = port_factory if port_factory is not None else FakeTransformer
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -88,15 +90,14 @@ def extract_structured(
 
         port = factory()
 
-        def call(item: tuple[str, str]) -> dict:
-            content, method = item
-            return getattr(port, method)(content)
+        def call(item: tuple[str, str | None]) -> dict:
+            content, name = item
+            return {} if name is None else getattr(port, name)(content)
 
         for pdf in batches:
-            methods = (
-                pdf[method_col].tolist() if method_col else [port_method_name] * len(pdf)
+            extracted = bounded_map(
+                call, zip(pdf[content_col].tolist(), pdf[method_name_col].tolist())
             )
-            extracted = bounded_map(call, zip(pdf[content_col].tolist(), methods))
             # explicit columns: an empty batch must still match the schema,
             # and a field the row's method lacks is None, not a float NaN
             out = pd.DataFrame(
@@ -110,7 +111,7 @@ def extract_structured(
     # fan the external-call batches across every core: the port
     # wraps a remote service, so width = throughput (and on the
     # single-row-group test files the scan arrives 1-partition)
-    return spread(docs).mapInPandas(run, out_schema)
+    return spread(docs).withColumn(method_name_col, method).mapInPandas(run, out_schema)
 
 
 def _lpad2(c: Column) -> Column:
@@ -162,7 +163,7 @@ def extract_polizas(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", _polizas_content().alias("content")
     )
-    return extract_structured(docs, "llm_caller_polizas", POLIZAS_SCHEMA)
+    return extract_structured(docs, F.lit("llm_caller_polizas"), POLIZAS_SCHEMA)
 
 
 EXTRACT_POLIZAS_SQL = f"""
@@ -226,7 +227,7 @@ def extract_tasaciones(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", _tasaciones_content().alias("content")
     )
-    return extract_structured(docs, "llm_caller_tasaciones", TASACIONES_SCHEMA)
+    return extract_structured(docs, F.lit("llm_caller_tasaciones"), TASACIONES_SCHEMA)
 
 
 EXTRACT_TASACIONES_SQL = f"""
@@ -284,7 +285,7 @@ def extract_inscripciones(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("page_idx") + 1).cast("int").alias("page_no"), "content"
     )
     return extract_structured(
-        pages, "llm_caller_inscripciones", INSCRIPCIONES_SCHEMA,
+        pages, F.lit("llm_caller_inscripciones"), INSCRIPCIONES_SCHEMA,
         key_cols=("doc_id", "page_no"),
     )
 

@@ -16,14 +16,17 @@ the whole thing is ONE routed frame per batch, not three pipelines:
    (swapped-looking) behavior **[B]**, reproduced deliberately
    (textract_extractor_document.py:58-68). Period month/year refined.
 3. **transform (A2-A4)** — ONE Arrow-batched ``mapInPandas`` port pass
-   that picks each row's port method from its flow. Its output carries
-   the pass-through columns and the union of the three flows' field
-   columns (disjoint names; a row's other-flow fields are NULL).
+   over every extracted row that picks each row's port method from its
+   flow. Its output carries the pass-through columns, the ``success``
+   flag and the union of the three flows' field columns (disjoint
+   names; a row's other-flow fields are NULL). A failed extract gets a
+   NULL method, so it makes no port call and all its fields are NULL
+   (the reference's transform gate F4, workflow_polizas.py:55-57).
 4. **load (K1/K2 + F8)** — one text-artifact write and one metadata
    merge for the whole batch; only the truncated content column
    reaches the cache, and none reaches the metadata sink.
-5. **final (A11/F10/C9/K3)** — rows that fail extraction rejoin by
-   ``unionByName`` with ``success=False``; only successes are
+5. **final (A11/F10/C9/K3)** — failed extracts never leave the batch
+   frame and report ``success=False``; only successes are loaded and
    notified, through the chunk-by-10 writer.
 
 Every stage is the operator already exercised by the oracle-checked
@@ -53,11 +56,11 @@ from sbs_suptech_etl_v2_spark.sinks.writers import (
     write_text_artifacts,
 )
 
-# the one port pass: pass-through columns, then the three flows'
-# fields (disjoint names), every one a string
+# the one port pass: pass-through columns (strings, then the extract
+# flag), then the three flows' fields (disjoint names, strings)
 _PASS = (
     "record_id", "parent_id", "session_id", "flow", "document_type",
-    "period_month", "period_year", "document_content_total",
+    "period_month", "period_year", "document_content_total", "success",
 )
 _FIELDS = (
     "inscription_number", "legal_name", "inscription_date",
@@ -65,7 +68,9 @@ _FIELDS = (
     "realization_value", "tasacion_owner",
     "policy_number", "policy_name", "policy_start_date", "policy_end_date",
 )
-PORT_OUT = ", ".join(f"{c} string" for c in (*_PASS, *_FIELDS))
+PORT_OUT = ", ".join(
+    f"{c} {'boolean' if c == 'success' else 'string'}" for c in (*_PASS, *_FIELDS)
+)
 
 
 def _extract(requests: DataFrame) -> DataFrame:
@@ -99,7 +104,7 @@ def _extract(requests: DataFrame) -> DataFrame:
         # [B] reproduced: truncated text -> _total, full text -> _llm
         first_pages.alias("document_content_total"),
         text.alias("document_content_llm"),
-        F.coalesce(F.length(text) > 0, F.lit(False)).alias("extract_success"),
+        F.coalesce(F.length(text) > 0, F.lit(False)).alias("success"),
     )
 
 
@@ -137,37 +142,28 @@ def run_document_etl(
     notifying.
 
     The batch is one routed frame: a single port pass over every
-    extracted row, unioned with the failed extracts, ``persist()``ed
-    once. K1, K2 and K3 then run once each, in that order, over its
-    successes, so the port executes exactly once per document (the
-    reference re-ran it per action, workflow_orchestator.py:82-83
-    **[B]**) and nothing is notified before its load ran. The returned
-    result projection is ``localCheckpoint``ed (one small row per
-    request) so the cache can be released before returning.
+    extracted row, failed extracts included (they carry
+    ``success=False`` and make no port call), ``persist()``ed once.
+    K1, K2 and K3 then run once each, in that order, over its
+    successes, so the port executes exactly once per successful
+    document (the reference re-ran it per action,
+    workflow_orchestator.py:82-83 **[B]**) and nothing is notified
+    before its load ran. The returned result projection is
+    ``localCheckpoint``ed (one small row per request) so the cache can
+    be released before returning.
     """
     notifier = notifier if notifier is not None else NotificationBatchWriter()
     extracted = _extract(requests)
-    ported = extract_structured(
-        extracted.filter(F.col("extract_success")).withColumn(
-            "port_method", F.concat(F.lit("llm_caller_"), F.col("flow"))
-        ),
-        None,
+    # F4: a failed extract gets a NULL method, so the pass makes no port
+    # call for it and its fields come out NULL
+    batch = extract_structured(
+        extracted,
+        F.when(F.col("success"), F.concat(F.lit("llm_caller_"), F.col("flow"))),
         PORT_OUT,
         key_cols=_PASS,
         content_col="document_content_llm",
         port_factory=port_factory,
-        method_col="port_method",
-    )
-    failed = extracted.filter(~F.col("extract_success")).select(
-        "record_id", "parent_id", "session_id", "flow"
-    )
-    batch = (
-        ported.withColumn("success", F.lit(True))
-        .unionByName(
-            failed.withColumn("success", F.lit(False)), allowMissingColumns=True
-        )
-        .persist()
-    )
+    ).persist()
     ok = batch.filter(F.col("success"))
     # K1 — text artifacts from the executors, then F8 content drop
     write_text_artifacts(

@@ -5,16 +5,23 @@ the full Extract→Transform→Load→Notify composition against
 deterministic fixture contents; assertions cover routing, the [B]
 content split, extracted fields in the merged metadata, per-row
 artifacts, chunked notifications, a re-delivery merge and the batch's
-Spark job count (SURVEY §5 golden-output strategy).
+Spark job count, on the fixture frame and on the same payloads read
+through the listing scan (SURVEY §5 golden-output strategy).
 """
 
 from __future__ import annotations
 
 import json
+import os
+import uuid
+
+from pyspark.sql import functions as F
 
 from bench import _settled_group_count
+from sbs_suptech_etl_v2_spark.operators.extraction import extract_structured
 from sbs_suptech_etl_v2_spark.plans.document_etl import run_document_etl
 from sbs_suptech_etl_v2_spark.sinks.writers import NotificationBatchWriter
+from sbs_suptech_etl_v2_spark.sources.entrypoints import listing_scan
 
 FLOW_FIELDS = {
     "polizas": {"policy_number", "policy_name", "policy_start_date", "policy_end_date"},
@@ -24,10 +31,14 @@ FLOW_FIELDS = {
     },
     "inscripciones": {"inscription_number", "legal_name", "inscription_date"},
 }
-# Spark jobs of one run_document_etl call on the golden fixture into a
-# fresh lake (local[4]): the port pass and its cache, one K1 write, one
-# K2 merge, one notify and the result checkpoint
-BATCH_JOBS = 6
+# Spark jobs of one run_document_etl call into a fresh lake (local[4]):
+# the port pass and its cache, one K1 write, one K2 merge, one notify
+# and the result checkpoint. The golden fixture's input is already
+# 4-wide, so the round-robin exchange io.spread adds before the port is
+# its cost over the minimum; the listing-scan batch (three unioned
+# sorted scans) pays its sorts once, inside the port pass.
+BATCH_JOBS = 8
+LISTING_BATCH_JOBS = 14
 
 
 def _polizas_text(i: int) -> str:
@@ -58,32 +69,109 @@ _SCHEMA = (
 )
 
 
+_TEXTS = {
+    "POLICY": _polizas_text,
+    "DEFAULT": _polizas_text,  # fall-through to pólizas
+    "REGISTRATION": _inscripciones_text,
+    "APPRAISAL": _tasaciones_text,
+}
+# listing prefix of each document type (DEFAULT lands with the pólizas)
+_PREFIXES = {
+    "POLICY": "Polizas",
+    "DEFAULT": "Polizas",
+    "REGISTRATION": "Inscripciones",
+    "APPRAISAL": "Tasaciones",
+}
+
+
+def _routable():
+    """(index, document_type, payload) of the twelve routable requests."""
+    for i in range(12):
+        dtype = ["POLICY", "REGISTRATION", "APPRAISAL", "DEFAULT"][i % 4]
+        yield i, dtype, _TEXTS[dtype](i).encode("utf-8")
+
+
 def _requests(spark):
     """Twelve routable requests, then ``rec_empty``: an APPRAISAL with an
     empty payload, which fails extraction."""
-    rows = []
-    for i in range(12):
-        dtype = ["POLICY", "REGISTRATION", "APPRAISAL", "DEFAULT"][i % 4]
-        text = {
-            "POLICY": _polizas_text,
-            "DEFAULT": _polizas_text,  # fall-through to pólizas
-            "REGISTRATION": _inscripciones_text,
-            "APPRAISAL": _tasaciones_text,
-        }[dtype](i)
-        rows.append(
-            (
-                f"rec_{i}",
-                f"par_{i % 3}",
-                f"Polizas/Mayo 2023/doc_{i}.pdf",
-                f"s{i % 2}",
-                dtype,
-                "Mayo",
-                "2023",
-                text.encode("utf-8"),
-            )
-        )
+    rows = [
+        (f"rec_{i}", f"par_{i % 3}", f"Polizas/Mayo 2023/doc_{i}.pdf",
+         f"s{i % 2}", dtype, "Mayo", "2023", payload)
+        for i, dtype, payload in _routable()
+    ]
     rows.append(("rec_empty", "par_0", "k", "s0", "APPRAISAL", "Mayo", "2023", b""))
     return spark.createDataFrame(rows, _SCHEMA)
+
+
+def _listed_requests(spark, root):
+    """The twelve routable payloads written as
+    ``{prefix}/Mayo 2023/rec_{i}.pdf`` and read back through one
+    ``listing_scan`` per prefix, unioned — the benchmark's batch shape."""
+    for i, dtype, payload in _routable():
+        folder = root / _PREFIXES[dtype] / "Mayo 2023"
+        folder.mkdir(parents=True, exist_ok=True)
+        (folder / f"rec_{i}.pdf").write_bytes(payload)
+    frames = []
+    for prefix, dtype in (
+        ("Polizas", "POLICY"), ("Tasaciones", "APPRAISAL"), ("Inscripciones", "REGISTRATION"),
+    ):
+        folder = F.split(F.split(F.col("key"), "/").getItem(0), " ")
+        frames.append(
+            listing_scan(spark, str(root), prefix).select(
+                F.regexp_extract("basename", r"^(.*)\.pdf$", 1).alias("record_id"),
+                F.lit("par").alias("parent_id"),
+                "key",
+                F.lit("s").alias("session_id"),
+                F.lit(dtype).alias("document_type"),
+                folder.getItem(0).alias("period_month"),
+                folder.getItem(1).alias("period_year"),
+                "content",
+            )
+        )
+    return frames[0].unionByName(frames[1]).unionByName(frames[2])
+
+
+def _counting_factory(calls_dir):
+    """A port factory whose transformer drops one uniquely-named marker
+    file in ``calls_dir`` per port call, from the executor."""
+
+    def factory():
+        from sbs_suptech_etl_v2_spark.ports.transformer import FakeTransformer
+
+        class CountingTransformer(FakeTransformer):
+            def _mark(self):
+                with open(os.path.join(calls_dir, uuid.uuid4().hex), "w") as fh:
+                    fh.write("1")
+
+            def llm_caller_polizas(self, content):
+                self._mark()
+                return super().llm_caller_polizas(content)
+
+            def llm_caller_inscripciones(self, content):
+                self._mark()
+                return super().llm_caller_inscripciones(content)
+
+            def llm_caller_tasaciones(self, content):
+                self._mark()
+                return super().llm_caller_tasaciones(content)
+
+        return CountingTransformer()
+
+    return factory
+
+
+def _batch_jobs(spark, requests, lake):
+    """One ``run_document_etl`` call on ``requests``: its Spark job
+    count and its results."""
+    sc = spark.sparkContext
+    # a fresh group per call: the status store keeps every group's jobs
+    group = f"document-etl-batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        results = run_document_etl(spark, requests, lake, NotificationBatchWriter())
+        return _settled_group_count(sc.statusTracker(), group), results
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_full_document_etl_plan(spark, tmp_path):
@@ -192,18 +280,34 @@ def test_batch_job_count_is_pinned(spark, tmp_path):
     """One routed port pass and one K1/K2/K3 action each: the batch's
     job count is deterministic, so a plan change that adds an action
     (or re-runs the port) moves it."""
-    sc = spark.sparkContext
-    requests = _requests(spark)
-    group = "document-etl-batch"
-    sc.setJobGroup(group, group)
-    try:
-        run_document_etl(spark, requests, str(tmp_path / "lake"), NotificationBatchWriter())
-        live = _settled_group_count(sc.statusTracker(), group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    live, _ = _batch_jobs(spark, _requests(spark), str(tmp_path / "lake"))
     assert live == BATCH_JOBS, (
         f"run_document_etl on the golden fixture: pinned {BATCH_JOBS} jobs, live {live}"
     )
+
+
+def test_listing_batch_job_count_is_pinned(spark, tmp_path):
+    """The same pin on the listing-scan batch shape: the listing's sorts
+    run inside the port pass only, with no second branch and no
+    partition-count probe re-running them. The batch must still route
+    by prefix and load every request."""
+    live, results = _batch_jobs(
+        spark, _listed_requests(spark, tmp_path / "requests"), str(tmp_path / "lake")
+    )
+    assert live == LISTING_BATCH_JOBS, (
+        f"run_document_etl on the listing batch: pinned {LISTING_BATCH_JOBS} jobs, live {live}"
+    )
+    flows = {"Polizas": "polizas", "Tasaciones": "tasaciones", "Inscripciones": "inscripciones"}
+    assert sorted((r["record_id"], r["flow"], r["success"]) for r in results.collect()) == sorted(
+        (f"rec_{i}", flows[_PREFIXES[dtype]], True) for i, dtype, _ in _routable()
+    )
+    meta = {
+        r["record_id"]: dict(r["metadata"])
+        for r in spark.read.parquet(str(tmp_path / "lake" / "metadata")).collect()
+    }
+    assert meta["rec_1"]["inscription_number"] == "1001"
+    assert meta["rec_3"]["policy_number"] == "POL-3"  # DEFAULT under Polizas/
+    assert meta["rec_0"]["period_month"] == "5"
 
 
 def test_port_executes_once_per_request(spark, tmp_path):
@@ -216,41 +320,14 @@ def test_port_executes_once_per_request(spark, tmp_path):
     drops a uniquely-named marker file from the executor; the total
     must equal the request count.
     """
-    import os
-    import uuid as uuid_mod
-
     calls_dir = str(tmp_path / "calls")
     os.makedirs(calls_dir)
-
-    def factory():
-        from sbs_suptech_etl_v2_spark.ports.transformer import FakeTransformer
-
-        class CountingTransformer(FakeTransformer):
-            def _mark(self):
-                path = os.path.join(calls_dir, uuid_mod.uuid4().hex)
-                with open(path, "w") as fh:
-                    fh.write("1")
-
-            def llm_caller_polizas(self, content):
-                self._mark()
-                return super().llm_caller_polizas(content)
-
-            def llm_caller_inscripciones(self, content):
-                self._mark()
-                return super().llm_caller_inscripciones(content)
-
-            def llm_caller_tasaciones(self, content):
-                self._mark()
-                return super().llm_caller_tasaciones(content)
-
-        return CountingTransformer()
-
     results = run_document_etl(
         spark,
         _requests(spark),
         str(tmp_path / "lake"),
         NotificationBatchWriter(),
-        port_factory=factory,
+        port_factory=_counting_factory(calls_dir),
     )
     # two extra caller-side actions on the returned frame: still no re-run
     assert results.count() == 13
@@ -260,6 +337,34 @@ def test_port_executes_once_per_request(spark, tmp_path):
     assert len(os.listdir(calls_dir)) == 12
 
 
+def test_null_method_row_makes_no_port_call(spark, tmp_path):
+    """A row whose port method is NULL passes through the extraction
+    pass with its key columns, NULL fields and no port call (F4)."""
+    calls_dir = str(tmp_path / "calls")
+    os.makedirs(calls_dir)
+    docs = spark.createDataFrame(
+        [
+            (1, "llm_caller_polizas", _polizas_text(1)),
+            (2, None, _polizas_text(2)),
+            (3, "llm_caller_tasaciones", _tasaciones_text(3)),
+        ],
+        "doc_id bigint, method string, content string",
+    )
+    out = extract_structured(
+        docs,
+        F.col("method"),
+        "doc_id bigint, method string, policy_number string, commercial_value string",
+        key_cols=("doc_id", "method"),
+        port_factory=_counting_factory(calls_dir),
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "llm_caller_polizas", "POL-1", None),
+        (2, None, None, None),
+        (3, "llm_caller_tasaciones", None, "250000"),
+    ]
+    assert len(os.listdir(calls_dir)) == 2
+
+
 def test_throttled_port_call_is_not_retried_by_the_operator(spark, tmp_path):
     """The A10 throttling retry belongs to the port (``ProductionTransformer``
     wraps its own calls); the extraction operator calls each row's
@@ -267,9 +372,6 @@ def test_throttled_port_call_is_not_retried_by_the_operator(spark, tmp_path):
     must therefore run exactly once for the row, and the batch fails —
     a retry stacked in the operator would call it 6 times and back off
     for ~31 s first."""
-    import os
-    import uuid as uuid_mod
-
     import pytest
 
     calls_dir = str(tmp_path / "calls")
@@ -280,7 +382,7 @@ def test_throttled_port_call_is_not_retried_by_the_operator(spark, tmp_path):
 
         class ThrottledTransformer:
             def llm_caller_polizas(self, content):
-                with open(os.path.join(calls_dir, uuid_mod.uuid4().hex), "w") as fh:
+                with open(os.path.join(calls_dir, uuid.uuid4().hex), "w") as fh:
                     fh.write("1")
                 raise ThrottlingError("throttled")
 

@@ -7,8 +7,11 @@ must observe convergence, reads its per-round sums from
 ``DataFrame.observe`` metrics delivered by the eager checkpoint that
 materializes the round, not from a probe action. This test pins the
 claim: a `.collect(`/`.toPandas(`/`.first(`/`.toLocalIterator(`/
-`.show(` appearing anywhere in the package outside two non-operator
-sites fails the suite and names the file. The two sites are the CLI's
+`.show(` call or an `.rdd` attribute appearing anywhere in the package
+outside two non-operator sites fails the suite and names the file.
+`.rdd` counts because converting a frame to an RDD plans it and, under
+AQE, executes every upstream query stage (`df.rdd.getNumPartitions()`
+is a hidden job, not a metadata read). The two sites are the CLI's
 print sink (a row ITERATOR, bounded by construction — the one
 toLocalIterator) and the oracle harness in paritycheck.py, which no
 query path calls (the one collect). Streaming/sink modules go through
@@ -55,6 +58,9 @@ ALLOWED = {
 # .toLocalIterator( joined in round 12 (ADVICE: the scan was weaker
 # than its docstring claimed without them).
 MARKERS = (".collect(", ".toPandas(", ".first(", ".toLocalIterator(", ".show(")
+# attribute markers match the attribute name as a whole token, so
+# `df.rdd_x` is not `df.rdd`
+ATTRIBUTES = (".rdd",)
 
 # FSTRING_* token kinds exist only on Python >= 3.12 (PEP 701);
 # on older runtimes f-strings arrive as single STRING tokens
@@ -80,16 +86,20 @@ def _code_text(path: pathlib.Path) -> str:
     return " ".join(t.string for t in toks if t.type not in _CODE_IRRELEVANT)
 
 
+def _counts(code: str) -> dict[str, int]:
+    """Occurrences of each marker in ``_code_text`` output."""
+    padded = f" {code} "
+    spaced = {m: f". {m[1:-1]} (" for m in MARKERS}
+    spaced.update({m: f" . {m[1:]} " for m in ATTRIBUTES})
+    return {m: n for m, s in spaced.items() if (n := padded.count(s))}
+
+
 def _scan() -> dict[str, dict[str, int]]:
     found: dict[str, dict[str, int]] = {}
     for path in sorted(PKG_ROOT.rglob("*.py")):
-        rel = str(path.relative_to(PKG_ROOT))
-        code = _code_text(path)
-        for m in MARKERS:
-            spaced = f". {m[1:-1]} ("
-            n = code.count(spaced)
-            if n:
-                found.setdefault(rel, {})[m] = n
+        counts = _counts(_code_text(path))
+        if counts:
+            found[str(path.relative_to(PKG_ROOT))] = counts
     return found
 
 
@@ -97,7 +107,7 @@ def test_only_allowed_driver_actions_in_package():
     found = _scan()
     assert found == ALLOWED, (
         "driver-action sites changed - if a new .collect()/.toPandas()/"
-        f".first() is intentional and bounded (1-row probe), add it "
+        f".first()/.rdd is intentional and bounded (1-row probe), add it "
         f"to ALLOWED with a justification; found={found}"
     )
 
@@ -105,14 +115,16 @@ def test_only_allowed_driver_actions_in_package():
 def test_scanner_is_not_fooled_by_hash_in_string(tmp_path):
     """Self-check for the false-negative hole the tokenizing scan
     closes: a real call after a '#'-bearing string literal must be
-    seen, and a docstring mentioning the marker must not count."""
+    seen, and a docstring mentioning the marker must not count. The
+    same holds for the `.rdd` attribute, which must also not match a
+    longer name that starts with it."""
     f = tmp_path / "probe.py"
     f.write_text(
-        '"""docstring mentions .collect( but is prose."""\n'
+        '"""docstring mentions .collect( and df.rdd but is prose."""\n'
         "def go(df):\n"
-        "    # comment mentions .collect( too\n"
+        "    # comment mentions .collect( and .rdd too\n"
         "    x = df.filter('#').collect()\n"
-        "    return x\n"
+        "    y = df.filter('.rdd').rdd_x\n"
+        "    return x, y, df.rdd.getNumPartitions()\n"
     )
-    code = _code_text(f)
-    assert code.count(". collect (") == 1
+    assert _counts(_code_text(f)) == {".collect(": 1, ".rdd": 1}

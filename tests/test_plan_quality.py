@@ -76,12 +76,12 @@ def test_q57_range_frame_shuffles_once(spark, sf_dir):
 
 
 def _keyed_exchanges(plan: str) -> int:
-    # io.spread may add a round-robin redistribution when the scan
-    # arrives narrower than the core count (single-row-group test
-    # files); a *keyed* Exchange (hash / range / single-partition)
-    # would mean the stage grew a real data-dependent shuffle. The
-    # partitioning spec appears once per physical exchange, in the
-    # formatted detail section's Arguments line.
+    # io.spread adds a round-robin redistribution of the kernel input,
+    # which is not keyed and not counted; a *keyed* Exchange (hash /
+    # range / single-partition) would mean the stage grew a real
+    # data-dependent shuffle. The partitioning spec appears once per
+    # physical exchange, in the formatted detail section's Arguments
+    # line.
     return sum(
         plan.count(k)
         for k in ("hashpartitioning", "rangepartitioning", "SinglePartition")
@@ -91,7 +91,7 @@ def _keyed_exchanges(plan: str) -> int:
 def test_q22_simhash_is_single_pass_vectorized(spark, sf_dir):
     # round-4 rewrite: the interpreted HOF Project became a NumPy
     # MapInPandas — plan must stay one scan -> MapInPandas with no
-    # keyed shuffle (spread's conditional round-robin is allowed)
+    # keyed shuffle (spread's round-robin is allowed)
     plan = _plan(spark, sf_dir, "q22_simhash_signatures")
     assert "MapInPandas" in plan
     assert _keyed_exchanges(plan) == 0
@@ -350,7 +350,7 @@ def test_q19_pages_explode_single_preexplode_shuffle(spark, sf_dir):
     # raw text crosses the wire once and hashpartitioning(doc_id)
     # satisfies both the (doc_id, page_no) page agg and the doc_id
     # rollup — the naive plan shuffled exploded per-word structs twice.
-    # spread()'s conditional round-robin may precede it; what must not
+    # spread()'s round-robin may precede it; what must not
     # appear is a SECOND keyed exchange above the explode.
     plan = _plan(spark, sf_dir, "q19_pages_explode")
     assert _keyed_exchanges(plan) <= 1  # naive plan carried two

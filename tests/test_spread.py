@@ -1,9 +1,10 @@
-"""io.spread — the conditional redistribution must be exactly that:
-widen narrow scans, leave production-width frames untouched (no
-shuffle added at scale), and never change data."""
+"""io.spread — an unconditional round-robin to ``defaultParallelism``:
+narrow scans are widened, wider frames are cut back to that width (the
+one exchange spread costs them), and data never changes."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.io import spread, table
@@ -20,17 +21,14 @@ def test_spread_widens_narrow_scan(spark, sf_dir):
     )
 
 
-def test_spread_is_noop_on_already_wide_frames(spark, sf_dir):
+@pytest.mark.parametrize("extra", [None, 2], ids=["narrow_scan", "wider_than_target"])
+def test_spread_yields_default_parallelism(spark, sf_dir, extra):
     target = spark.sparkContext.defaultParallelism
-    wide = table(spark, sf_dir, "documents").repartition(target + 2)
-    # already >= parallelism: spread must return the SAME frame, not a
-    # narrower repartition of it
-    assert spread(wide) is wide
-
-
-def test_spread_respects_explicit_partition_count(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    assert spread(docs, partitions=7).rdd.getNumPartitions() == 7
+    df = docs if extra is None else docs.repartition(target + extra)
+    out = spread(df)
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(out.select("doc_id").collect()) == sorted(docs.select("doc_id").collect())
 
 
 def test_spread_keeps_kernel_results_content_stable(spark, sf_dir):
