@@ -39,104 +39,34 @@ QUERIES: dict[str, QueryFn] = {
     # seated unchanged q102 alongside q99 on the textops.py one-liner
     # under exactly this reading, displacing q97's refresh by a round.
     #
-    # Round-17 rotation (VERDICT r16 directive #1; the r16 precompute,
-    # verified against CORRECTNESS_r16 — 50/50 hash-green; freshness
-    # after r16: 50 r16 / 50 r15 / 21 r14): no query or operator
-    # module changed this round (the round diff is this reorder plus
-    # test/doc work), so there are no changed-query seats; slots 1-21
-    # are the 21 r14-fresh leftovers in numeric order (q59-q78, q95 —
-    # includes the heavies q62/q66/q71/q74/q75/q76 with expectations
-    # pre-registered in SCALING.md); slots 22-50 backfill with the 29
-    # oldest r15-fresh in numeric order (q01-q13, q26-q35, q37-q40,
-    # q42, q43 — q43 reads no_oracle BY DESIGN; includes the q30
-    # watch-item re-entry, expected back at <= 0.4 s on a settled
-    # record).
-    # The prefix is PINNED by tests/test_registry_window.py: any
-    # reorder must update that test's committed list consciously.
-    # CORRECTNESS_local[_sf0.001|_sf0.1].json carry the full registry
-    # every round. Numeric order carries no semantic meaning; ORACLE
-    # stays sorted for readability and tests iterate the full dict.
-    # New queries, if any, enter at slot 1 (a changed query must
-    # re-earn its verdict the same round and therefore takes a seat).
-    #
-    # Round-18 rotation (VERDICT r17 directive #1 — it OVERRIDES the
-    # r17 precompute): the r17 round's only semantic restructure
-    # (q103) and every query path it rewrote were outside the r17
-    # window AND the precomputed r18 window, so their verdicts rode
-    # builder-run parity stamps only. This rotation leads with q103,
-    # then the r17-rewritten relational/text paths (q104 q105 q108
-    # q114 q117, q49 q79 q84 q94 q98 q100) and the similarity
-    # carriers (q24 q25 q41 q47 q71 q86 q90 q93 q107), then the
-    # round-18-changed queries (module-mate rule: q75 probe-fusion +
-    # propagate-helper refactor seats q75/q50/q92; q61 lazy shingle
-    # cut; q26/q29/q114 literal-quoting carriers; q18 ditto); then
-    # ALL 21 r15-fresh leftovers (q79-q94, q96, q98-q100, q102 —
-    # already partly seated above) and the oldest r16-fresh in
-    # numeric order (q14-q25 remainder, q36) fill to 50. Left for
-    # round 19: q01-q13, q27/q28, q30-q35, q37-q40, q42-q46, q48,
-    # q51-q60, q62-q70, q72-q74, q76-q78, q95, q97, q101, q106,
-    # q109-q113, q115/q116, q118-q121.
-    # Verified against CORRECTNESS_r17 before applying: every r17-
-    # window query is hash-green there (q43 no_oracle by design), so
-    # nothing seated here displaces an unverified query.
+    # Round-19 rotation (VERDICT r18 #2; the window is disjoint from
+    # r18's except changed paths): slots 1-14 are the paths changed
+    # since r18 — the dedup fixpoint (q75/q50/q92), the
+    # ``extract_structured`` signature (q31-q33) and the other
+    # ``io.spread`` callers (q21-q23, q30, q44, q51, q84, q86; spread
+    # became an unconditional repartition); slots 15-27 are q01-q13,
+    # never re-verified since their first verdict; slots 28-50 take the
+    # r18 "left for round 19" list in numeric order (q27-q62, skipping
+    # the queries seated above). Left for round 20: q63-q70, q72-q74,
+    # q76-q78, q95, q97, q101, q106, q109-q113, q115/q116, q118-q121,
+    # then the r18 window's queries that are not seated here.
     # ------------------------------------------------------------------
-    # -- slots 1-21: the r17-restructured/rewritten paths (VERDICT
-    #    r17 #1 list; q103 first) --
-    "q103_funnel_conversion": R.funnel_conversion,
-    "q104_revenue_interpolation": R.revenue_interpolation,
-    "q105_zscore_anomalies": R.zscore_anomalies,
-    "q108_nucleus_vocab": X4.nucleus_vocab,
-    "q114_bm25_retrieval": X4.bm25_retrieval,
-    "q117_segment_spend_gini": R.segment_spend_gini,
-    "q49_promo_revenue": R.promo_revenue_share,
-    "q79_chunk_dedup": X1.chunk_dedup_stats,
-    "q84_shingle_containment": X1.shingle_containment,
-    "q94_quantity_price_stats": R.quantity_price_stats,
-    "q98_user_snapshot_diff": R.user_snapshot_diff,
-    "q100_purchase_nearest_click": R.purchase_nearest_click,
-    "q24_topk_cosine": X2.topk_cosine,
-    "q25_embedding_neardup": X2.embedding_neardup,
-    "q41_ann_bucketed_topk": X2.ann_bucketed_topk,
-    "q47_ivf_topk": X2.ivf_topk,
-    "q71_kmeans_update": X2.kmeans_update,
-    "q86_pq_quantize": X2.pq_quantize,
-    "q90_ann_recall_audit": X2.ann_recall_audit,
-    "q93_semantic_dedup": X2.semantic_dedup,
-    "q107_matryoshka_audit": X2.matryoshka_audit,
-    # -- slots 22-28: round-18-changed queries --
+    # -- slots 1-14: paths changed since r18 --
     "q75_neardup_fixpoint": X1.neardup_clusters_fixpoint,
     "q50_neardup_clusters": X1.neardup_clusters,
     "q92_dedup_keep_canonical": X1.dedup_keep_canonical,
-    "q61_contamination_check": X5.contamination_check,
-    "q26_text_stats": X4.text_stats,
-    "q29_language_id": X4.language_id,
-    "q18_stage_gate_notifications": D.stage_gate_notifications,
-    # -- slots 29-40: remaining r15-fresh leftovers (numeric order) --
-    "q80_pii_redaction": X5.pii_redaction,
-    "q81_source_mixture": X5.source_mixture,
-    "q82_distribution_windows": R.order_distribution_windows,
-    "q83_nation_presence": R.nation_presence_reconcile,
-    "q85_length_histogram": X4.length_histogram,
-    "q87_surrogate_keys": R.surrogate_keys,
-    "q88_scene_segments": X3.scene_segments,
-    "q89_cogroup_attribution": R.cogroup_attribution,
-    "q91_unigram_surprisal": X4.unigram_surprisal,
-    "q96_only_late_supplier": R.only_late_supplier,
-    "q99_bigram_pmi": X4.bigram_pmi,
-    "q102_inverted_index": X4.inverted_index,
-    # -- slots 41-50: oldest r16-fresh backfill (numeric order) --
-    "q14_scalar_refinement": D.scalar_refinement,
-    "q15_path_parse": D.path_parse,
-    "q16_pages_concat": D.pages_concat,
-    "q17_metadata_merge": D.metadata_merge,
-    "q19_pages_explode": D.pages_explode,
-    "q20_exact_dedup": X1.exact_dedup,
+    "q31_extract_polizas": E.extract_polizas,
+    "q32_extract_tasaciones": E.extract_tasaciones,
+    "q33_extract_inscripciones": E.extract_inscripciones,
     "q21_minhash_neardup": X1.minhash_neardup,
     "q22_simhash_signatures": X1.simhash_signatures,
     "q23_ngram_jaccard": X1.ngram_jaccard,
-    "q36_request_decode": J.request_decode,
-    # -- beyond the 50-entry prefix ------------------------------------
-    # (round-19 lead candidates, numeric order)
+    "q30_doc_fingerprint": X4.doc_fingerprint,
+    "q44_ocr_extract_pages": E.ocr_extract_pages,
+    "q51_quantize_embeddings": X2.quantize_embeddings,
+    "q84_shingle_containment": X1.shingle_containment,
+    "q86_pq_quantize": X2.pq_quantize,
+    # -- slots 15-27: q01-q13 --
     "q01_pricing_summary": R.pricing_summary,
     "q02_metadata_lookup_join": R.metadata_lookup_join,
     "q03_top_orders_per_customer": R.top_orders_per_customer,
@@ -150,12 +80,9 @@ QUERIES: dict[str, QueryFn] = {
     "q11_positional_pick": R.positional_pick,
     "q12_set_ops": R.segment_set_ops,
     "q13_events_tumbling": R.events_tumbling_window,
+    # -- slots 28-50: the r18 "left for round 19" list (numeric order) --
     "q27_token_topk": X4.token_topk,
     "q28_tfidf_top_terms": X4.tfidf_top_terms,
-    "q30_doc_fingerprint": X4.doc_fingerprint,
-    "q31_extract_polizas": E.extract_polizas,
-    "q32_extract_tasaciones": E.extract_tasaciones,
-    "q33_extract_inscripciones": E.extract_inscripciones,
     "q34_blocks_page_text": B.blocks_page_text,
     "q35_notification_encode": J.notification_encode,
     "q37_artifact_keys": D.artifact_keys,
@@ -165,11 +92,9 @@ QUERIES: dict[str, QueryFn] = {
     "q42_token_counts": X4.token_counts,
     "q43_notification_ids": J.notification_ids,  # C7 uuid — no_oracle BY DESIGN (rows-only driver row);
     # q78_notification_ids_det is its hash-checked deterministic sibling
-    "q44_ocr_extract_pages": E.ocr_extract_pages,
     "q45_events_sliding": R.events_sliding_window,
     "q46_events_session": R.events_session_window,
     "q48_props_decode": J.props_decode,
-    "q51_quantize_embeddings": X2.quantize_embeddings,
     "q52_status_cube": R.order_status_cube,
     "q53_approx_distinct": R.segment_distinct_customers,
     "q54_purchase_asof_click": R.purchase_asof_click,
@@ -180,6 +105,8 @@ QUERIES: dict[str, QueryFn] = {
     "q59_percentiles": R.priority_price_percentiles,
     "q60_grouping_sets": R.status_priority_grouping_sets,
     "q62_repetition_stats": X5.repetition_stats,
+    # -- beyond the 50-entry prefix ------------------------------------
+    # (round-20 lead candidates, numeric order)
     "q63_lexicon_scrub": X5.lexicon_scrub,
     "q64_stratified_sample": X5.stratified_sample,
     "q65_sequence_packing": X5.sequence_packing,
@@ -209,6 +136,49 @@ QUERIES: dict[str, QueryFn] = {
     "q119_incremental_totals": R.incremental_priority_totals,
     "q120_monthly_momentum": R.monthly_revenue_momentum,
     "q121_cusum_changepoints": R.cusum_changepoints,
+    # (the r18 window, not seated this round; numeric order)
+    "q14_scalar_refinement": D.scalar_refinement,
+    "q15_path_parse": D.path_parse,
+    "q16_pages_concat": D.pages_concat,
+    "q17_metadata_merge": D.metadata_merge,
+    "q18_stage_gate_notifications": D.stage_gate_notifications,
+    "q19_pages_explode": D.pages_explode,
+    "q20_exact_dedup": X1.exact_dedup,
+    "q24_topk_cosine": X2.topk_cosine,
+    "q25_embedding_neardup": X2.embedding_neardup,
+    "q26_text_stats": X4.text_stats,
+    "q29_language_id": X4.language_id,
+    "q36_request_decode": J.request_decode,
+    "q41_ann_bucketed_topk": X2.ann_bucketed_topk,
+    "q47_ivf_topk": X2.ivf_topk,
+    "q49_promo_revenue": R.promo_revenue_share,
+    "q61_contamination_check": X5.contamination_check,
+    "q71_kmeans_update": X2.kmeans_update,
+    "q79_chunk_dedup": X1.chunk_dedup_stats,
+    "q80_pii_redaction": X5.pii_redaction,
+    "q81_source_mixture": X5.source_mixture,
+    "q82_distribution_windows": R.order_distribution_windows,
+    "q83_nation_presence": R.nation_presence_reconcile,
+    "q85_length_histogram": X4.length_histogram,
+    "q87_surrogate_keys": R.surrogate_keys,
+    "q88_scene_segments": X3.scene_segments,
+    "q89_cogroup_attribution": R.cogroup_attribution,
+    "q90_ann_recall_audit": X2.ann_recall_audit,
+    "q91_unigram_surprisal": X4.unigram_surprisal,
+    "q93_semantic_dedup": X2.semantic_dedup,
+    "q94_quantity_price_stats": R.quantity_price_stats,
+    "q96_only_late_supplier": R.only_late_supplier,
+    "q98_user_snapshot_diff": R.user_snapshot_diff,
+    "q99_bigram_pmi": X4.bigram_pmi,
+    "q100_purchase_nearest_click": R.purchase_nearest_click,
+    "q102_inverted_index": X4.inverted_index,
+    "q103_funnel_conversion": R.funnel_conversion,
+    "q104_revenue_interpolation": R.revenue_interpolation,
+    "q105_zscore_anomalies": R.zscore_anomalies,
+    "q107_matryoshka_audit": X2.matryoshka_audit,
+    "q108_nucleus_vocab": X4.nucleus_vocab,
+    "q114_bm25_retrieval": X4.bm25_retrieval,
+    "q117_segment_spend_gini": R.segment_spend_gini,
 }
 
 ORACLE: dict[str, str] = {

@@ -41,8 +41,7 @@ def _artifact(per_query_sec: float, jobs: int):
     oracle = {n: per_query_sec for n in ORACLE}
     n_jobs = {n: jobs for n in names}
     return names, build_artifact(
-        names, timings, oracle, 99.999, 99.999, 0.999, 0.1, n_jobs, 0.123,
-        (0.999, 0.123),
+        names, timings, oracle, 99.999, 99.999, 0.999, 0.1, n_jobs, 0.888
     )
 
 
@@ -50,15 +49,12 @@ def test_line_fits_tail_at_worst_case_magnitudes():
     # 99 s per query = 4-digit centiseconds everywhere — far beyond
     # any observed driver box (worst real suite: ~82 s TOTAL) — and
     # every n_jobs entry at the 2-digit cap.
-    # Budget note (r13): the bracketed "pre" floors cost 20 bytes and
-    # the note's trimmed "n_stages+" paid 9 of them back — worst case
-    # now sits at 1898 of the 1900 the headroom bar allows. That is
-    # DELIBERATELY tight, so BOTH numbers are pinned (ADVICE r13: the
-    # <= alone let the remaining 2 bytes be nibbled silently): the
-    # exact-length assert below makes ANY on-line field change — grow
-    # OR shrink — a conscious update of this literal, enforcing the
-    # displace-something policy rather than merely stating it.
-    WORST_CASE_BYTES = 1898
+    # Budget note: BOTH numbers are pinned (ADVICE r13: the <= alone
+    # let the last bytes under the headroom bar be nibbled silently):
+    # the exact-length assert below makes ANY on-line field change —
+    # grow OR shrink — a conscious update of this literal, enforcing
+    # the displace-something policy rather than merely stating it.
+    WORST_CASE_BYTES = 1862
     _, art = _artifact(99.0, 10_000)
     line = compact_line(art)
     assert len(line.encode()) <= TAIL_BYTES - MIN_HEADROOM, (
@@ -103,11 +99,13 @@ def test_line_roundtrips_and_aligns_with_registry():
         assert (o is None) == (n in no_oracle), n
     assert rt["value"] == round(1.234 * len(names), 3)
     assert rt["spark_vs_oracle_ratio"] is not None
+    assert set(rt["calibration"]) == {
+        "probe", "spark_sec", "duckdb_sec", "spark_job_floor_sec", "pre",
+    }
     assert rt["calibration"]["spark_job_floor_sec"] == 0.999
-    assert rt["calibration"]["spark_stage_floor_sec"] == 0.123
-    # r13 bracketing: pre = [job_floor, stage_floor] sampled before
-    # the suite; the scalar keys stay the post-suite sample
-    assert rt["calibration"]["pre"] == [0.999, 0.123]
+    # r13 bracketing: pre = [job_floor] sampled before the suite; the
+    # scalar key stays the post-suite sample
+    assert rt["calibration"]["pre"] == [0.888]
 
 
 def test_n_jobs_capped_and_fixed_width():
@@ -133,7 +131,6 @@ def test_archive_writes_stable_named_sidecar(tmp_path):
         "queries": {"q01_pricing_summary": 1.0},
         "oracle_queries": {"q01_pricing_summary": 0.5},
         "n_jobs_by_query": {"q01_pricing_summary": 3},
-        "n_stages_by_query": {"q01_pricing_summary": 4},
     }
     d = str(tmp_path / "arch")
     write_archive(full, d)
@@ -172,62 +169,38 @@ def test_no_oracle_side_is_optional():
     assert json.loads(compact_line(art))["value"] == round(0.5 * len(names), 3)
 
 
-def test_job_latency_floors_satisfy_probe_algebra(spark):
-    """Pin the _job_latency clamp (ADVICE r12, medium): the probe
-    algebra gives J = job_floor/2 − stage_floor, so any returned pair
-    with stage_floor > job_floor/2 encodes a NEGATIVE per-job cost —
-    a nonsensical calibration constant that two r12-promoted records
-    actually carried (job 0.072 with stage 0.047 → J = −11 ms). The
-    clamp S ≤ t2/2 makes the invariant structural; this test keeps it
-    from regressing."""
-    from bench import _job_latency
-
-    job_floor, stage_floor = _job_latency(spark)
-    assert job_floor > 0
-    assert 0.0 <= stage_floor <= job_floor / 2, (job_floor, stage_floor)
-
-
 def test_job_group_counting_measures_spark_jobs(spark):
-    """The n_jobs/n_stages measurements ride job groups: every job
-    submitted from this thread between setJobGroup and the read lands
-    in the group (bench.py's run loop). Pin the mechanism — if a Spark
-    upgrade changes group attribution, the bench artifact's n_jobs
-    silently becomes garbage and every floor-normalized ratio with it.
+    """The n_jobs measurement rides job groups: every job submitted
+    from this thread inside ``profile.counted``'s action lands in its
+    group (bench.py's run loop). Pin the mechanism — if a Spark upgrade
+    changes group attribution, the bench artifact's n_jobs silently
+    becomes garbage."""
+    from sbs_suptech_etl_v2_spark.profile import counted
 
-    Both reads go through bench's settled/drained readers, not raw
-    ``getJobIdsForGroup`` — the status store behind the tracker is fed
-    by the ASYNC listener bus, and an immediate raw read races it (the
-    exact undercount _settled_group_count exists to avoid; round-11
-    ADVICE caught this test itself re-introducing the race).
-    """
-    from bench import _group_stage_count, _settled_group_count
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("bench-contract-test-a", "a")
-    spark.range(10).count()
-    spark.range(10).count()
-    a = _settled_group_count(tracker, "bench-contract-test-a")
-    a_stages = _group_stage_count(tracker, "bench-contract-test-a")
+    _, a = counted(
+        spark, lambda: (spark.range(10).count(), spark.range(10).count())
+    )
     # a fresh group starts at zero — counts don't leak across groups
-    sc.setJobGroup("bench-contract-test-b", "b")
-    spark.range(10).count()
-    b = _settled_group_count(tracker, "bench-contract-test-b")
-    b_stages = _group_stage_count(tracker, "bench-contract-test-b")
-    sc.setLocalProperty("spark.jobGroup.id", None)
+    _, b = counted(spark, lambda: spark.range(10).count())
     # jobs-per-action varies with AQE (a count can run 1 or 2 jobs),
     # so pin proportionality, not absolutes: two identical actions
-    # register exactly twice one action's jobs/stages, in their own
-    # group (separate actions build separate plans — no cross-plan
-    # shuffle reuse exists to skip stages between them)
+    # register exactly twice one action's jobs, in their own group
     assert b >= 1, b
     assert a == 2 * b, (a, b)
-    # every job runs at least one executed stage (its result stage —
-    # under AQE a count() is 2 jobs and 2 EXECUTED stages: the reused
-    # map stage in the final job is skipped and must not be counted),
-    # and a count is at least 2 stages end-to-end (partial + final)
-    assert b_stages >= max(b, 2), (b_stages, b)
-    assert a_stages == 2 * b_stages, (a_stages, b_stages)
+
+
+def test_counted_twice_counts_each_call_once(spark):
+    """Two ``counted`` calls on the same action count the same jobs:
+    the status store keeps a finished group's jobs, so a second call
+    under a reused group would read both calls' jobs."""
+    from sbs_suptech_etl_v2_spark.profile import counted
+
+    def action():
+        return spark.range(10).count()
+
+    _, first = counted(spark, action)
+    _, second = counted(spark, action)
+    assert first == second >= 1, (first, second)
 
 
 def test_bench_main_subset_prints_parseable_line_with_n_jobs():
@@ -269,9 +242,7 @@ def test_bench_main_subset_prints_parseable_line_with_n_jobs():
     assert len(art["n_jobs"]) == 2
     assert int(art["n_jobs"]) >= 1
     # the archive file is the contractual home of the named per-query
-    # maps — n_stages_by_query above all, since it is NOT on the
-    # printed line (tail budget); a regression here silently drops the
-    # stage evidence from every run
+    # maps, which are NOT on the printed line (tail budget)
     new = set(glob.glob(os.path.join(repo, ".bench_archive", "*.json"))) - before
     # one timestamped archive file per run, plus the stable-name named
     # sidecar latest.json (VERDICT r17 directive #2) — which counts in
@@ -285,10 +256,5 @@ def test_bench_main_subset_prints_parseable_line_with_n_jobs():
         a_txt, b_txt = fh_a.read(), fh_b.read()
     assert a_txt == b_txt, "latest.json must mirror the timestamped archive"
     full = json.loads(a_txt)
-    for key in ("queries", "n_jobs_by_query", "n_stages_by_query"):
+    for key in ("queries", "n_jobs_by_query"):
         assert key in full, key
-    assert full["n_stages_by_query"]["q37_artifact_keys"] >= 1
-    assert (
-        full["n_stages_by_query"]["q37_artifact_keys"]
-        >= full["n_jobs_by_query"]["q37_artifact_keys"]
-    )

@@ -17,9 +17,9 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from bench import _settled_group_count
 from sbs_suptech_etl_v2_spark.operators.extraction import extract_structured
 from sbs_suptech_etl_v2_spark.plans.document_etl import run_document_etl
+from sbs_suptech_etl_v2_spark.profile import counted
 from sbs_suptech_etl_v2_spark.sinks.writers import NotificationBatchWriter
 from sbs_suptech_etl_v2_spark.sources.entrypoints import listing_scan
 
@@ -160,20 +160,6 @@ def _counting_factory(calls_dir):
     return factory
 
 
-def _batch_jobs(spark, requests, lake):
-    """One ``run_document_etl`` call on ``requests``: its Spark job
-    count and its results."""
-    sc = spark.sparkContext
-    # a fresh group per call: the status store keeps every group's jobs
-    group = f"document-etl-batch-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        results = run_document_etl(spark, requests, lake, NotificationBatchWriter())
-        return _settled_group_count(sc.statusTracker(), group), results
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def test_full_document_etl_plan(spark, tmp_path):
     lake = str(tmp_path / "lake")
     notifier = NotificationBatchWriter()
@@ -280,7 +266,10 @@ def test_batch_job_count_is_pinned(spark, tmp_path):
     """One routed port pass and one K1/K2/K3 action each: the batch's
     job count is deterministic, so a plan change that adds an action
     (or re-runs the port) moves it."""
-    live, _ = _batch_jobs(spark, _requests(spark), str(tmp_path / "lake"))
+    requests, lake = _requests(spark), str(tmp_path / "lake")
+    _, live = counted(
+        spark, lambda: run_document_etl(spark, requests, lake, NotificationBatchWriter())
+    )
     assert live == BATCH_JOBS, (
         f"run_document_etl on the golden fixture: pinned {BATCH_JOBS} jobs, live {live}"
     )
@@ -291,8 +280,10 @@ def test_listing_batch_job_count_is_pinned(spark, tmp_path):
     run inside the port pass only, with no second branch and no
     partition-count probe re-running them. The batch must still route
     by prefix and load every request."""
-    live, results = _batch_jobs(
-        spark, _listed_requests(spark, tmp_path / "requests"), str(tmp_path / "lake")
+    requests = _listed_requests(spark, tmp_path / "requests")
+    lake = str(tmp_path / "lake")
+    results, live = counted(
+        spark, lambda: run_document_etl(spark, requests, lake, NotificationBatchWriter())
     )
     assert live == LISTING_BATCH_JOBS, (
         f"run_document_etl on the listing batch: pinned {LISTING_BATCH_JOBS} jobs, live {live}"

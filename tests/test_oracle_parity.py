@@ -14,15 +14,14 @@ pair; a deliberate plan change commits the new pair to
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 
 import pytest
 
-from bench import _settled_group_count
 from sbs_suptech_etl_v2_spark import io
 from sbs_suptech_etl_v2_spark.paritycheck import compare, oracle_connection
+from sbs_suptech_etl_v2_spark.profile import counted
 from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
 from tests.parity import assert_verdict
 
@@ -34,8 +33,6 @@ SHAPE_PATH = os.path.join(
 with open(SHAPE_PATH) as _fh:
     SHAPE = json.load(_fh)
 
-_groups = itertools.count()
-
 
 @pytest.fixture(scope="module")
 def oracle_con(spark, oracle_sf_dir):
@@ -44,16 +41,6 @@ def oracle_con(spark, oracle_sf_dir):
     io.load(spark, oracle_sf_dir, *io.TABLES)
     with oracle_connection(oracle_sf_dir) as con:
         yield con
-    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-
-
-def _counted(spark, action):
-    """(action(), Spark jobs the action ran) via a fresh job group."""
-    sc = spark.sparkContext
-    group = f"shape-pin:{next(_groups)}"
-    sc.setJobGroup(group, group)
-    out = action()
-    return out, _settled_group_count(sc.statusTracker(), group)
 
 
 def _assert_pinned(name: str, live: list[int]) -> None:
@@ -74,16 +61,16 @@ def test_shape_pins_cover_the_registry():
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_query_matches_oracle(spark, oracle_sf_dir, oracle_con, name):
-    sdf, build_jobs = _counted(spark, lambda: QUERIES[name](spark, oracle_sf_dir))
-    verdict, jobs = _counted(spark, lambda: compare(sdf, ORACLE[name], oracle_con))
+    sdf, build_jobs = counted(spark, lambda: QUERIES[name](spark, oracle_sf_dir))
+    verdict, jobs = counted(spark, lambda: compare(sdf, ORACLE[name], oracle_con))
     assert_verdict(verdict, name)
     _assert_pinned(name, [build_jobs, jobs])
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE)))
 def test_no_oracle_query_is_pinned(spark, oracle_sf_dir, oracle_con, name):
-    sdf, build_jobs = _counted(spark, lambda: QUERIES[name](spark, oracle_sf_dir))
-    rows, jobs = _counted(spark, sdf.collect)
+    sdf, build_jobs = counted(spark, lambda: QUERIES[name](spark, oracle_sf_dir))
+    rows, jobs = counted(spark, sdf.collect)
     assert rows, f"{name}: empty result"
     _assert_pinned(name, [build_jobs, jobs])
 

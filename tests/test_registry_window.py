@@ -17,71 +17,67 @@ from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
 
 WINDOW_SIZE = 50
 
-# Round-18 rotation (VERDICT r17 directive #1, overriding the r17
-# precompute): slots 1-21 = the r17-restructured/rewritten paths the
-# driver has not oracle-verified since their rewrite (q103 — the only
-# semantic restructure — first, then the rewritten relational/text
-# builders and the similarity carriers, in the verdict's order);
-# slots 22-28 = the round-18-changed queries (q75 probe fusion +
-# propagate refactor seats q75/q50/q92; q61 lazy shingle cut; the
-# q26/q29/q18 literal-quoting carriers); slots 29-40 = the remaining
-# r15-fresh leftovers; slots 41-50 = the oldest r16-fresh backfill.
+# Round-19 rotation (VERDICT r18 #2): a window disjoint from r18's
+# except the paths changed since r18, which lead (slots 1-14); then
+# q01-q13 (slots 15-27), never re-verified since their first verdict;
+# then the r18 "left for round 19" list in numeric order (slots 28-50).
+# The full reasoning sits in registry.py's ordering note.
 # Update this literal TOGETHER with registry.py each rotation.
 ROTATION = [
-    # slots 1-21: r17-restructured/rewritten lead (q103 first)
-    "q103_funnel_conversion",
-    "q104_revenue_interpolation",
-    "q105_zscore_anomalies",
-    "q108_nucleus_vocab",
-    "q114_bm25_retrieval",
-    "q117_segment_spend_gini",
-    "q49_promo_revenue",
-    "q79_chunk_dedup",
-    "q84_shingle_containment",
-    "q94_quantity_price_stats",
-    "q98_user_snapshot_diff",
-    "q100_purchase_nearest_click",
-    "q24_topk_cosine",
-    "q25_embedding_neardup",
-    "q41_ann_bucketed_topk",
-    "q47_ivf_topk",
-    "q71_kmeans_update",
-    "q86_pq_quantize",
-    "q90_ann_recall_audit",
-    "q93_semantic_dedup",
-    "q107_matryoshka_audit",
-    # slots 22-28: round-18-changed queries
+    # slots 1-14: paths changed since r18 (dedup fixpoint, the
+    # extract_structured signature, the other io.spread callers)
     "q75_neardup_fixpoint",
     "q50_neardup_clusters",
     "q92_dedup_keep_canonical",
-    "q61_contamination_check",
-    "q26_text_stats",
-    "q29_language_id",
-    "q18_stage_gate_notifications",
-    # slots 29-40: remaining r15-fresh leftovers (numeric order)
-    "q80_pii_redaction",
-    "q81_source_mixture",
-    "q82_distribution_windows",
-    "q83_nation_presence",
-    "q85_length_histogram",
-    "q87_surrogate_keys",
-    "q88_scene_segments",
-    "q89_cogroup_attribution",
-    "q91_unigram_surprisal",
-    "q96_only_late_supplier",
-    "q99_bigram_pmi",
-    "q102_inverted_index",
-    # slots 41-50: oldest r16-fresh backfill (numeric order)
-    "q14_scalar_refinement",
-    "q15_path_parse",
-    "q16_pages_concat",
-    "q17_metadata_merge",
-    "q19_pages_explode",
-    "q20_exact_dedup",
+    "q31_extract_polizas",
+    "q32_extract_tasaciones",
+    "q33_extract_inscripciones",
     "q21_minhash_neardup",
     "q22_simhash_signatures",
     "q23_ngram_jaccard",
-    "q36_request_decode",
+    "q30_doc_fingerprint",
+    "q44_ocr_extract_pages",
+    "q51_quantize_embeddings",
+    "q84_shingle_containment",
+    "q86_pq_quantize",
+    # slots 15-27: q01-q13
+    "q01_pricing_summary",
+    "q02_metadata_lookup_join",
+    "q03_top_orders_per_customer",
+    "q04_semi_join_open_orders",
+    "q05_anti_join_no_orders",
+    "q06_revenue_by_nation",
+    "q07_branch_union",
+    "q08_priority_rollup",
+    "q09_distinct_agg",
+    "q10_running_window",
+    "q11_positional_pick",
+    "q12_set_ops",
+    "q13_events_tumbling",
+    # slots 28-50: the r18 "left for round 19" list (numeric order)
+    "q27_token_topk",
+    "q28_tfidf_top_terms",
+    "q34_blocks_page_text",
+    "q35_notification_encode",
+    "q37_artifact_keys",
+    "q38_image_features",
+    "q39_frame_sample",
+    "q40_nation_set_ops",
+    "q42_token_counts",
+    "q43_notification_ids",
+    "q45_events_sliding",
+    "q46_events_session",
+    "q48_props_decode",
+    "q52_status_cube",
+    "q53_approx_distinct",
+    "q54_purchase_asof_click",
+    "q55_image_resize",
+    "q56_audio_features",
+    "q57_range_frame",
+    "q58_salted_agg",
+    "q59_percentiles",
+    "q60_grouping_sets",
+    "q62_repetition_stats",
 ]
 
 
