@@ -107,9 +107,3 @@ def spread(df: DataFrame) -> DataFrame:
 def load(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     """Read several tables at once: ``li, ords = load(spark, d, "lineitem", "orders")``."""
     return tuple(table(spark, sf_dir, n) for n in names)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for ``spark.sql`` use."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -639,10 +639,14 @@ WHERE len(list_filter(range({N_HASHES}), i -> sa.sig[i+1] = sb.sig[i+1])) / {N_H
 """
 
 
-# 2 rounds cover the planted corpus's pair-graph diameter (star-shaped
-# duplicate groups: variant->original edges, diameter <= 2). Production
-# runs rounds to a fixpoint; the oracle SQL is generated from this same
-# constant so both engines always compute the identical bounded pass.
+# pure-plan seed of the fixpoint loop: the first rounds run as one
+# unrolled plan with no cut. Star-shaped duplicate groups (variant ->
+# original edges, diameter <= 2) converge inside it, so on the planted
+# corpus the first observed round only proves convergence. Not a
+# correctness bound: the loop runs on until the labels stop changing.
+# Each seed round references the previous labels twice, so the seed's
+# lineage branches 2^CLUSTER_ITERATIONS (= 4) ways, every branch
+# bottoming out at the checkpointed edge list.
 CLUSTER_ITERATIONS = 2
 
 
@@ -742,73 +746,19 @@ def _nontrivial_clusters(labels: DataFrame) -> DataFrame:
     )
 
 
-def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT-1] near-dup clustering — label propagation over the pair graph.
-
-    Turns the MinHash candidate pairs into dedup clusters: every
-    document starts labeled with its own id; each round every node
-    takes the min of its label and its neighbors' labels. Bounded to
-    {CLUSTER_ITERATIONS} rounds (covers paths of that length — the
-    planted star-shaped duplicate groups converge in one; production
-    runs rounds until a fixpoint, each round one join + one groupBy on
-    the edge list — the standard large-scale connected-components
-    recipe). Output: members of non-trivial clusters with the
-    canonical (min-id) representative and cluster size — the rows a
-    dedup pass would drop are exactly those with doc_id != cluster_id.
-    """
-    # materialize the (tiny) pair list once and truncate its lineage:
-    # every label iteration references the edge list, and without the
-    # checkpoint Spark re-executes the whole MinHash pipeline per
-    # reference (~6x) — the standard move for iterative algorithms.
-    # the durability posture (executor-memory localCheckpoint vs a
-    # reliable storage-backed checkpoint) is injectable via
-    # checkpointing.set_checkpoint_strategy — see checkpointing.py
-    pairs = materialize(minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"))
-    edges = _bidirectional_edges(pairs)
-    labels = _initial_labels(edges)
-    for _ in range(CLUSTER_ITERATIONS):
-        labels = _propagate_min_label(labels, edges)
-    # the bounded unroll is a PURE plan: each round references the
-    # previous labels twice, so lineage branches 2^rounds ways — but
-    # every branch bottoms out at the CHECKPOINTED edge list, so the
-    # worst case is 2^{CLUSTER_ITERATIONS} (= 4) scans of that tiny
-    # frame, cheaper than the per-round persist+count actions this
-    # replaced (measured ~0.5 s/query). The count window consumes the
-    # unroll exactly once, so no further materialize is needed — the
-    # whole clustering is ONE job on top of the two checkpoints. The
-    # fixpoint variant below, whose round count is unbounded, cuts every
-    # round after this seed with an eager checkpoint.
-    return _nontrivial_clusters(labels)
-
-
 # runaway valve, seed included: the 18 propagate+jump rounds after the
 # seed cover a component diameter of about 2^18
 MAX_FIXPOINT_ROUNDS = 20
 
 
-def neardup_clusters_fixpoint(
-    spark: SparkSession, sf_dir: str, max_rounds: int = MAX_FIXPOINT_ROUNDS
+def fixpoint_clusters_from_pairs(
+    pairs: DataFrame, max_rounds: int = MAX_FIXPOINT_ROUNDS
 ) -> DataFrame:
-    """[EXT-1] near-dup clustering run to CONVERGENCE — the production
-    form of ``neardup_clusters``'s bounded loop.
+    """Connected components of an already-materialized pair list
+    ``(doc_a, doc_b)`` by min-label propagation run to a fixpoint — the
+    one clustering loop behind q50/q75, q92 and q93.
 
-    Same propagation round (broadcast edge join + min-label fold), but
-    iterated until a fixpoint instead of a fixed count, with a pointer
-    jump after every unconverged round so chain-shaped components
-    converge in O(log diameter) rounds (see ``_pointer_jump``).
-
-    Deterministic and identical to the bounded version whenever the
-    graph diameter <= the bound — the registry checks this path against
-    the SAME DuckDB oracle as q50.
-    """
-    pairs = materialize(minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"))
-    return _fixpoint_clusters_from_pairs(pairs, max_rounds)
-
-
-def _fixpoint_clusters_from_pairs(pairs: DataFrame, max_rounds: int) -> DataFrame:
-    """Fixpoint label propagation over an already-materialized pair list.
-
-    Seeded with q50's ``CLUSTER_ITERATIONS``-round pure-plan unroll.
+    Seeded with a ``CLUSTER_ITERATIONS``-round pure-plan unroll.
     Each further round projects ``(doc_id, prev, label)`` — the labels
     before and after one propagation — and cuts it with an eager
     checkpoint whose job also reports ``sum(prev)`` and ``sum(label)``
@@ -824,9 +774,10 @@ def _fixpoint_clusters_from_pairs(pairs: DataFrame, max_rounds: int) -> DataFram
     - every cut is eager, so each round's frame is computed by exactly
       one job and there is no race between consumers to argue.
 
-    ``max_rounds`` counts the seed rounds too. Split out so tests can
-    drive the loop with adversarial graphs (long chains far past the
-    seed) through the exact production path.
+    Output: members of non-trivial clusters with the canonical
+    (min-id) representative as ``cluster_id`` and the cluster size.
+    ``max_rounds`` counts the seed rounds too; tests drive the loop
+    with adversarial graphs (long chains far past the seed) through it.
     """
     edges = _bidirectional_edges(pairs)
     labels = _initial_labels(edges)
@@ -850,68 +801,95 @@ def _fixpoint_clusters_from_pairs(pairs: DataFrame, max_rounds: int) -> DataFram
     return _nontrivial_clusters(labels)
 
 
-def _clusters_sql() -> str:
-    steps = []
-    prev = "labels0"
-    for i in range(1, CLUSTER_ITERATIONS + 1):
-        steps.append(
-            f"""labels{i} AS (
-  SELECT l.doc_id,
-         least(l.label, coalesce(n.nbr_label, l.label)) AS label
-  FROM {prev} l
-  LEFT JOIN (
-    SELECT e.src, MIN(p.label) AS nbr_label
-    FROM edges e JOIN {prev} p ON p.doc_id = e.dst
-    GROUP BY e.src
-  ) n ON n.src = l.doc_id
-)"""
-        )
-        prev = f"labels{i}"
-    joined_steps = ",\n".join(steps)
+def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT-1] near-dup clustering — connected components of the
+    MinHash pair graph (q50, and q75 under its fixpoint name).
+
+    Every document in a pair starts labeled with its own id; each round
+    every node takes the min of its label and its neighbors' labels,
+    with a pointer jump after each unconverged round, until no label
+    changes (``fixpoint_clusters_from_pairs``) — exact at any component
+    diameter. Output: members of non-trivial clusters with the
+    canonical (min-id) representative and cluster size — the rows a
+    dedup pass would drop are exactly those with doc_id != cluster_id.
+    """
+    # materialize the (tiny) pair list once and truncate its lineage:
+    # every label round references the edge list, and without the
+    # checkpoint Spark re-executes the whole MinHash pipeline per
+    # reference — the standard move for iterative algorithms. The
+    # durability posture (executor-memory localCheckpoint vs a reliable
+    # storage-backed checkpoint) is injectable via
+    # checkpointing.set_checkpoint_strategy — see checkpointing.py
+    pairs = materialize(minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"))
+    return fixpoint_clusters_from_pairs(pairs)
+
+
+def components_sql(pairs_sql: str, a: str, b: str, id_col: str) -> str:
+    """DuckDB oracle of ``fixpoint_clusters_from_pairs``: one row per
+    member of a non-trivial connected component of the pair list
+    ``pairs_sql`` (endpoint columns ``a``, ``b``) — ``id_col``,
+    ``cluster_id`` (the component's min id) and ``cluster_size``.
+
+    Exact at any component diameter: a recursive reachability closure
+    with ``UNION`` set semantics stops when a step adds no new
+    (node, reached) row — on cycles too — and each node takes the
+    ``MIN`` id it reaches (itself included, two hops out and back).
+    The pairs are ``AS MATERIALIZED``: every closure step reads them,
+    and without the hint DuckDB re-inlines the full mining pipeline
+    per reference (q93: 52 s vs 15 s at sf0.1) — the evaluate-once
+    semantics Spark gets from its checkpoint.
+    """
     return f"""
-WITH {_ORACLE_VARIANTS},
-pairs AS (
-  SELECT doc_a, doc_b FROM ({MINHASH_NEARDUP_SQL})
+WITH RECURSIVE pairs AS MATERIALIZED (
+  SELECT {a} AS a, {b} AS b FROM ({pairs_sql})
 ),
 edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
+  SELECT a AS src, b AS dst FROM pairs
+  UNION
+  SELECT b AS src, a AS dst FROM pairs
 ),
-labels0 AS (
-  SELECT doc_id, doc_id AS label FROM corpus
+reach(node, reached) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.node, e.dst FROM reach r JOIN edges e ON e.src = r.reached
 ),
-{joined_steps},
+labels AS (
+  SELECT node, MIN(reached) AS label FROM reach GROUP BY node
+),
 sizes AS (
-  SELECT label, COUNT(*) AS cluster_size FROM {prev} GROUP BY label
+  SELECT label, COUNT(*) AS cluster_size FROM labels GROUP BY label
 )
-SELECT l.doc_id, l.label AS cluster_id, CAST(s.cluster_size AS BIGINT) AS cluster_size
-FROM {prev} l JOIN sizes s ON s.label = l.label
+SELECT l.node AS {id_col}, l.label AS cluster_id,
+       CAST(s.cluster_size AS BIGINT) AS cluster_size
+FROM labels l JOIN sizes s ON s.label = l.label
 WHERE s.cluster_size > 1
 """
 
 
-NEARDUP_CLUSTERS_SQL = _clusters_sql()
+NEARDUP_CLUSTERS_SQL = components_sql(MINHASH_NEARDUP_SQL, "doc_a", "doc_b", "doc_id")
 
 
 def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT-1] the DEDUPLICATED corpus — the operational endpoint of the
     whole near-dup family.
 
-    q21 mines candidate pairs, q50 clusters them; this operator
-    actually applies the result: every near-dup cluster collapses to
-    its canonical (min-id) member, singletons pass through untouched.
+    q21 mines candidate pairs, q50 clusters them to a fixpoint (so a
+    duplicate chain of any length collapses to ONE survivor); this
+    operator actually applies the result: every near-dup cluster
+    collapses to its canonical (min-id) member, singletons pass
+    through untouched.
     Output is one row per SURVIVING document with its keep reason —
     'unique' (in no cluster) or 'canonical' (elected representative);
     the dropped rows are exactly the cluster members with
     doc_id != cluster_id. This is the frame a training-data pipeline
     writes back to the lake as the deduped corpus.
 
-    Plan: the cluster map is edge-bounded (never corpus-sized), so it
-    rides ONE broadcast left join against the corpus — the corpus
-    itself neither shuffles nor re-scans, and the filter
-    (no cluster row OR canonical) evaluates map-side. Cost on top of
-    q50 is a broadcast and a narrow projection.
+    Plan: the cluster map is q50's count window over the loop's last
+    cut labels — edge-bounded, never corpus-sized — so it rides ONE
+    broadcast left join against the corpus: the corpus itself neither
+    shuffles nor re-scans, and the filter (no cluster row OR
+    canonical) evaluates map-side. Cost on top of q50 is a broadcast
+    and a narrow projection.
     """
     corpus = _variant_corpus(table(spark, sf_dir, "documents"))
     clusters = neardup_clusters(spark, sf_dir).select("doc_id", "cluster_id")

@@ -42,6 +42,10 @@ from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.io import spread, table
 from sbs_suptech_etl_v2_spark.checkpointing import materialize
+from sbs_suptech_etl_v2_spark.operators.dedup import (
+    components_sql,
+    fixpoint_clusters_from_pairs,
+)
 
 TOP_K = 10
 QUERY_STRIDE = 100  # vec_id % stride == 0 → query vector
@@ -1813,90 +1817,29 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Abbas et al. 2023: semantically near-identical documents — not
     just byte-near ones — collapse before training): near-dup pairs
     from the sign-LSH miner (q25's plan) become an undirected graph,
-    min-label propagation yields connected components, and each
-    component is one semantic-duplicate cluster whose canonical member
-    (min vec_id) survives. Output: members of non-trivial clusters
-    with their cluster id and size — the rows a pipeline drops are
-    exactly those with vec_id != cluster_id.
+    and q50's fixpoint loop (``fixpoint_clusters_from_pairs``) yields
+    its connected components at any diameter; each component is one
+    semantic-duplicate cluster whose canonical member (min vec_id)
+    survives. Output: members of non-trivial clusters with their
+    cluster id and size — the rows a pipeline drops are exactly those
+    with vec_id != cluster_id.
 
     Plan: identical machinery to q50 — the (tiny, LSH-bounded) pair
-    list is checkpointed once, the bounded propagation unroll is a
-    pure plan over it, and one count window emits sizes. No all-pairs
-    product, no corpus-sized iteration state.
+    list is checkpointed once, every loop round is cut, and one count
+    window over the last cut emits sizes. No all-pairs product, no
+    corpus-sized iteration state.
     """
-    from sbs_suptech_etl_v2_spark.operators.dedup import (
-        CLUSTER_ITERATIONS,
-        _bidirectional_edges,
-        _initial_labels,
-        _nontrivial_clusters,
-        _propagate_min_label,
-    )
-
     pairs = materialize(
         embedding_neardup(spark, sf_dir).select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         )
     )
-    edges = _bidirectional_edges(pairs)
-    labels = _initial_labels(edges)
-    for _ in range(CLUSTER_ITERATIONS):
-        labels = _propagate_min_label(labels, edges)
-    return _nontrivial_clusters(labels).select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("cluster_id"),
-        F.col("cluster_size"),
+    return fixpoint_clusters_from_pairs(pairs).select(
+        F.col("doc_id").alias("vec_id"), "cluster_id", "cluster_size"
     )
 
 
-def _semantic_dedup_sql() -> str:
-    from sbs_suptech_etl_v2_spark.operators.dedup import CLUSTER_ITERATIONS
-
-    steps = []
-    prev = "labels0"
-    for i in range(1, CLUSTER_ITERATIONS + 1):
-        steps.append(
-            f"""labels{i} AS (
-  SELECT l.vec_id,
-         least(l.label, coalesce(n.nbr_label, l.label)) AS label
-  FROM {prev} l
-  LEFT JOIN (
-    SELECT e.src, MIN(p.label) AS nbr_label
-    FROM edges e JOIN {prev} p ON p.vec_id = e.dst
-    GROUP BY e.src
-  ) n ON n.src = l.vec_id
-)"""
-        )
-        prev = f"labels{i}"
-    joined = ",\n".join(steps)
-    # AS MATERIALIZED: the pair list feeds every propagation round;
-    # without the hint DuckDB re-inlines the full LSH mining pipeline
-    # per reference (measured 52 s vs 15 s at sf0.1) — the hint gives
-    # the oracle the same evaluate-once semantics Spark gets from the
-    # checkpoint, keeping the comparison honest
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT vec_a, vec_b FROM ({EMBEDDING_NEARDUP_SQL})
-),
-edges AS (
-  SELECT vec_a AS src, vec_b AS dst FROM pairs
-  UNION ALL
-  SELECT vec_b AS src, vec_a AS dst FROM pairs
-),
-labels0 AS (
-  SELECT DISTINCT src AS vec_id, src AS label FROM edges
-),
-{joined},
-sizes AS (
-  SELECT label, COUNT(*) AS cluster_size FROM {prev} GROUP BY label
-)
-SELECT l.vec_id, l.label AS cluster_id,
-       CAST(s.cluster_size AS BIGINT) AS cluster_size
-FROM {prev} l JOIN sizes s ON s.label = l.label
-WHERE s.cluster_size > 1
-"""
-
-
-SEMANTIC_DEDUP_SQL = _semantic_dedup_sql()
+SEMANTIC_DEDUP_SQL = components_sql(EMBEDDING_NEARDUP_SQL, "vec_a", "vec_b", "vec_id")
 
 
 # -- q107 matryoshka truncation audit ---------------------------------------

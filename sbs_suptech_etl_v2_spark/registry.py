@@ -40,21 +40,25 @@ QUERIES: dict[str, QueryFn] = {
     # under exactly this reading, displacing q97's refresh by a round.
     #
     # Round-19 rotation (VERDICT r18 #2; the window is disjoint from
-    # r18's except changed paths): slots 1-14 are the paths changed
-    # since r18 — the dedup fixpoint (q75/q50/q92), the
+    # r18's except changed paths): slots 1-15 are the paths changed
+    # since r18 — the near-dup clustering loop (q75/q50/q92, and q93,
+    # whose semantic dedup now runs the same loop), the
     # ``extract_structured`` signature (q31-q33) and the other
     # ``io.spread`` callers (q21-q23, q30, q44, q51, q84, q86; spread
-    # became an unconditional repartition); slots 15-27 are q01-q13,
-    # never re-verified since their first verdict; slots 28-50 take the
-    # r18 "left for round 19" list in numeric order (q27-q62, skipping
-    # the queries seated above). Left for round 20: q63-q70, q72-q74,
+    # became an unconditional repartition); slots 16-28 are q01-q13,
+    # never re-verified since their first verdict; slots 29-50 take the
+    # r18 "left for round 19" list in numeric order (q27-q60, skipping
+    # the queries seated above). Left for round 20: q62-q70, q72-q74,
     # q76-q78, q95, q97, q101, q106, q109-q113, q115/q116, q118-q121,
     # then the r18 window's queries that are not seated here.
     # ------------------------------------------------------------------
-    # -- slots 1-14: paths changed since r18 --
-    "q75_neardup_fixpoint": X1.neardup_clusters_fixpoint,
+    # -- slots 1-15: paths changed since r18 --
+    # q75 and q50 are one builder under two names (q75 kept its
+    # fixpoint name and seat)
+    "q75_neardup_fixpoint": X1.neardup_clusters,
     "q50_neardup_clusters": X1.neardup_clusters,
     "q92_dedup_keep_canonical": X1.dedup_keep_canonical,
+    "q93_semantic_dedup": X2.semantic_dedup,
     "q31_extract_polizas": E.extract_polizas,
     "q32_extract_tasaciones": E.extract_tasaciones,
     "q33_extract_inscripciones": E.extract_inscripciones,
@@ -66,7 +70,7 @@ QUERIES: dict[str, QueryFn] = {
     "q51_quantize_embeddings": X2.quantize_embeddings,
     "q84_shingle_containment": X1.shingle_containment,
     "q86_pq_quantize": X2.pq_quantize,
-    # -- slots 15-27: q01-q13 --
+    # -- slots 16-28: q01-q13 --
     "q01_pricing_summary": R.pricing_summary,
     "q02_metadata_lookup_join": R.metadata_lookup_join,
     "q03_top_orders_per_customer": R.top_orders_per_customer,
@@ -80,7 +84,7 @@ QUERIES: dict[str, QueryFn] = {
     "q11_positional_pick": R.positional_pick,
     "q12_set_ops": R.segment_set_ops,
     "q13_events_tumbling": R.events_tumbling_window,
-    # -- slots 28-50: the r18 "left for round 19" list (numeric order) --
+    # -- slots 29-50: the r18 "left for round 19" list (numeric order) --
     "q27_token_topk": X4.token_topk,
     "q28_tfidf_top_terms": X4.tfidf_top_terms,
     "q34_blocks_page_text": B.blocks_page_text,
@@ -104,9 +108,9 @@ QUERIES: dict[str, QueryFn] = {
     "q58_salted_agg": R.salted_status_totals,
     "q59_percentiles": R.priority_price_percentiles,
     "q60_grouping_sets": R.status_priority_grouping_sets,
-    "q62_repetition_stats": X5.repetition_stats,
     # -- beyond the 50-entry prefix ------------------------------------
     # (round-20 lead candidates, numeric order)
+    "q62_repetition_stats": X5.repetition_stats,
     "q63_lexicon_scrub": X5.lexicon_scrub,
     "q64_stratified_sample": X5.stratified_sample,
     "q65_sequence_packing": X5.sequence_packing,
@@ -165,7 +169,6 @@ QUERIES: dict[str, QueryFn] = {
     "q89_cogroup_attribution": R.cogroup_attribution,
     "q90_ann_recall_audit": X2.ann_recall_audit,
     "q91_unigram_surprisal": X4.unigram_surprisal,
-    "q93_semantic_dedup": X2.semantic_dedup,
     "q94_quantity_price_stats": R.quantity_price_stats,
     "q96_only_late_supplier": R.only_late_supplier,
     "q98_user_snapshot_diff": R.user_snapshot_diff,

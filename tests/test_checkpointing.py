@@ -22,7 +22,7 @@ import pytest
 from sbs_suptech_etl_v2_spark import checkpointing as ck
 from sbs_suptech_etl_v2_spark.operators.dedup import (
     MAX_FIXPOINT_ROUNDS,
-    _fixpoint_clusters_from_pairs,
+    fixpoint_clusters_from_pairs,
     neardup_clusters,
 )
 
@@ -71,6 +71,6 @@ def test_reliable_fixpoint_converges_on_long_chain(spark, tmp_path):
             )
         )
         rows = sorted(
-            map(tuple, _fixpoint_clusters_from_pairs(pairs, MAX_FIXPOINT_ROUNDS).collect())
+            map(tuple, fixpoint_clusters_from_pairs(pairs, MAX_FIXPOINT_ROUNDS).collect())
         )
     assert rows == [(i, 0, n) for i in range(n)]

@@ -151,19 +151,17 @@ def test_q25_embedding_neardup_is_bucket_grouped_kernel(spark, sf_dir):
 
 
 def test_q50_clusters_runs_unroll_as_one_job(spark, sf_dir):
-    # the bounded 2-round unroll + count window execute as ONE job on
-    # top of the checkpointed edge list (r5: dropping the intermediate
-    # labels materialize saved an action and ~0.5 s). Every keyed
-    # exchange is an edge-bounded neighbor-min regroup (the 2^rounds
-    # lineage branches each carry their copy) or the single label
-    # window; the corpus never rides any of them, and no pair product
-    # can appear.
+    # q50 runs q75's fixpoint loop, so its returned plan is q75's: the
+    # count window over the loop's last eager cut (ExistingRDD), one
+    # keyed exchange (the window's partitioning on the label) and no
+    # join. A join here would mean the output plan re-runs propagation
+    # rounds instead of reading the cut labels.
     plan = _plan(spark, sf_dir, "q50_neardup_clusters")
-    assert "ExistingRDD" in plan  # checkpointed edge list at every leaf
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "ExistingRDD" in plan
+    assert "Join" not in plan
     tree = plan.split("\n\n")[0]
     assert tree.count("Window") == 1
-    assert _keyed_exchanges(plan) <= 8
+    assert _keyed_exchanges(plan) == 1
 
 
 def test_q61_contamination_scores_without_shuffling_corpus(spark, sf_dir):
@@ -419,21 +417,21 @@ def test_q92_keep_canonical_broadcasts_cluster_map(spark, sf_dir):
     # corpus leg never grows a keyed exchange of its own
     plan = _plan(spark, sf_dir, "q92_dedup_keep_canonical")
     assert "BroadcastHashJoin" in plan
-    assert _keyed_exchanges(plan) <= 8  # q50's bound, unchanged
+    assert _keyed_exchanges(plan) == 1  # q50's label window, nothing more
     assert "SinglePartition" not in plan
 
 
 def test_q93_semantic_dedup_shares_q50_plan_family(spark, sf_dir):
-    # SemDeDup clustering must inherit q50's guarded shape: one count
-    # window over edge-bounded broadcast-join branches bottoming at the
-    # checkpointed LSH pair list — never an all-pairs product, never a
-    # corpus-sized iteration frame
+    # SemDeDup clustering runs q50's fixpoint loop over the checkpointed
+    # LSH pair list, so it must return q50's plan: one count window over
+    # the last eager cut (ExistingRDD), one keyed exchange and no join —
+    # never an all-pairs product, never a corpus-sized iteration frame
     plan = _plan(spark, sf_dir, "q93_semantic_dedup")
-    assert "ExistingRDD" in plan  # checkpointed pair list at every leaf
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "ExistingRDD" in plan
+    assert "Join" not in plan
     tree = plan.split("\n\n")[0]
     assert tree.count("Window") == 1
-    assert _keyed_exchanges(plan) <= 8
+    assert _keyed_exchanges(plan) == 1
 
 
 def test_q94_stats_is_two_level_salted_aggregate(spark, sf_dir):

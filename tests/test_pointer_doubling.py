@@ -4,24 +4,28 @@ Claims: (1) composing propagation with a pointer jump converges in
 O(log diameter) rounds where plain min-label propagation needs
 O(diameter) — shown on a synthetic chain component, the shape that
 stalls propagation at scale; (2) the fixpoint loop, which always jumps,
-gives q50's bounded result on the real corpus and the exact connected
-components on chains far longer than its round count, on random graphs
-and on an empty pair list.
+gives the exact connected components on chains far longer than its
+round count, on random graphs and on an empty pair list, and agrees
+row for row with the recursive-CTE oracle ``components_sql``; (3) the
+queries built on the loop (q92, q93) collapse a duplicate chain wider
+than the loop's seed into one cluster.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import duckdb
+import pytest
 
+from sbs_suptech_etl_v2_spark.io import table
+from sbs_suptech_etl_v2_spark.operators import dedup, similarity
 from sbs_suptech_etl_v2_spark.operators.dedup import (
     MAX_FIXPOINT_ROUNDS,
     _bidirectional_edges,
-    _fixpoint_clusters_from_pairs,
     _initial_labels,
     _pointer_jump,
     _propagate_min_label,
-    neardup_clusters,
-    neardup_clusters_fixpoint,
+    components_sql,
+    fixpoint_clusters_from_pairs,
 )
 
 CHAIN_N = 17  # diameter 16: propagation needs 16 rounds, doubling ~5
@@ -63,20 +67,75 @@ def _chain_clusters(spark, n, max_rounds):
     return sorted(
         map(
             tuple,
-            _fixpoint_clusters_from_pairs(pairs, max_rounds)
+            fixpoint_clusters_from_pairs(pairs, max_rounds)
             .select("doc_id", "cluster_id", "cluster_size")
             .collect(),
         )
     )
 
 
-def test_fixpoint_matches_bounded_q50_on_corpus(spark, sf_dir):
-    base = neardup_clusters(spark, sf_dir)
-    fixpoint = neardup_clusters_fixpoint(spark, sf_dir)
-    key = ["doc_id", "cluster_id", "cluster_size"]
-    assert sorted(map(tuple, base.select(*key).collect())) == sorted(
-        map(tuple, fixpoint.select(*key).collect())
+_ORACLE_CASES = {
+    "chain40": [(i, i + 1) for i in range(39)],
+    "cycle": [(3, 7), (7, 5), (5, 9), (9, 3)],
+    "star_min_leaf": [(8, 2), (8, 11), (8, 5), (8, 14)],
+    "two_components": [(1, 4), (4, 6), (20, 30), (30, 25)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ORACLE_CASES))
+def test_components_sql_matches_fixpoint(spark, case):
+    # the exact oracle (recursive reachability closure) and the Spark
+    # loop must give the same rows on shapes the 2-round seed cannot
+    # settle: a 40-chain, a cycle, a star whose centre is not the
+    # minimum, and disjoint components
+    pairs = _ORACLE_CASES[case]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pair_list (doc_a BIGINT, doc_b BIGINT)")
+    con.executemany("INSERT INTO pair_list VALUES (?, ?)", pairs)
+    want = sorted(
+        con.execute(
+            components_sql("SELECT * FROM pair_list", "doc_a", "doc_b", "doc_id")
+        ).fetchall()
     )
+    con.close()
+    pdf = spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
+    got = sorted(
+        map(
+            tuple,
+            fixpoint_clusters_from_pairs(pdf.localCheckpoint(eager=True))
+            .select("doc_id", "cluster_id", "cluster_size")
+            .collect(),
+        )
+    )
+    assert got == want
+    assert len({r[1] for r in want}) == (2 if case == "two_components" else 1)
+
+
+@pytest.mark.parametrize("query", ["q92", "q93"])
+def test_duplicate_chain_wider_than_seed_collapses(spark, sf_dir, monkeypatch, query):
+    # a 4-document duplicate chain a-b-c-d (diameter 3, one past the
+    # 2-round seed) over real lake ids: q92 must keep only its minimum
+    # and q93 must report it as ONE 4-member cluster
+    tbl, id_col = ("documents", "doc_id") if query == "q92" else ("embeddings", "vec_id")
+    ids = [r[0] for r in table(spark, sf_dir, tbl).select(id_col).orderBy(id_col).limit(4).collect()]
+    chain = list(zip(ids, ids[1:]))
+    if query == "q92":
+        monkeypatch.setattr(
+            dedup,
+            "minhash_neardup",
+            lambda spark, sf_dir: spark.createDataFrame(chain, "doc_a bigint, doc_b bigint"),
+        )
+        rows = dedup.dedup_keep_canonical(spark, sf_dir).collect()
+        kept = {r["doc_id"]: r["status"] for r in rows if r["doc_id"] in ids}
+        assert kept == {ids[0]: "canonical"}
+    else:
+        monkeypatch.setattr(
+            similarity,
+            "embedding_neardup",
+            lambda spark, sf_dir: spark.createDataFrame(chain, "vec_a bigint, vec_b bigint"),
+        )
+        rows = similarity.semantic_dedup(spark, sf_dir).collect()
+        assert sorted(map(tuple, rows)) == [(i, ids[0], 4) for i in ids]
 
 
 def test_fixpoint_loop_converges_past_the_seed(spark):
@@ -104,7 +163,7 @@ def test_fixpoint_of_no_pairs_is_empty(spark):
     pairs = spark.createDataFrame([], "doc_a bigint, doc_b bigint").localCheckpoint(
         eager=True
     )
-    assert _fixpoint_clusters_from_pairs(pairs, MAX_FIXPOINT_ROUNDS).collect() == []
+    assert fixpoint_clusters_from_pairs(pairs, MAX_FIXPOINT_ROUNDS).collect() == []
 
 
 def test_fixpoint_respects_max_rounds_valve(spark):
@@ -114,7 +173,7 @@ def test_fixpoint_respects_max_rounds_valve(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(CHAIN_N - 1)], "doc_a bigint, doc_b bigint"
     ).localCheckpoint(eager=True)
-    rows = _fixpoint_clusters_from_pairs(pairs, 4).collect()
+    rows = fixpoint_clusters_from_pairs(pairs, 4).collect()
     assert rows  # chain stays one (partial) cluster family
     assert all(r["cluster_id"] <= r["doc_id"] for r in rows)
 
@@ -166,7 +225,7 @@ def test_fixpoint_matches_union_find_on_random_graphs(spark):
         got = sorted(
             map(
                 tuple,
-                _fixpoint_clusters_from_pairs(pdf.localCheckpoint(eager=True), 60)
+                fixpoint_clusters_from_pairs(pdf.localCheckpoint(eager=True), 60)
                 .select("doc_id", "cluster_id", "cluster_size")
                 .collect(),
             )
