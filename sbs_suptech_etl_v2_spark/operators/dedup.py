@@ -808,8 +808,9 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every document in a pair starts labeled with its own id; each round
     every node takes the min of its label and its neighbors' labels,
     with a pointer jump after each unconverged round, until no label
-    changes (``fixpoint_clusters_from_pairs``) — exact at any component
-    diameter. Output: members of non-trivial clusters with the
+    changes (``fixpoint_clusters_from_pairs``) — exact for every
+    component the ``MAX_FIXPOINT_ROUNDS`` valve covers (diameter up to
+    about 2^18). Output: members of non-trivial clusters with the
     canonical (min-id) representative and cluster size — the rows a
     dedup pass would drop are exactly those with doc_id != cluster_id.
     """

@@ -1817,12 +1817,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Abbas et al. 2023: semantically near-identical documents — not
     just byte-near ones — collapse before training): near-dup pairs
     from the sign-LSH miner (q25's plan) become an undirected graph,
-    and q50's fixpoint loop (``fixpoint_clusters_from_pairs``) yields
-    its connected components at any diameter; each component is one
-    semantic-duplicate cluster whose canonical member (min vec_id)
-    survives. Output: members of non-trivial clusters with their
-    cluster id and size — the rows a pipeline drops are exactly those
-    with vec_id != cluster_id.
+    and q50's fixpoint loop (``fixpoint_clusters_from_pairs``) runs
+    min-label propagation over it until no label changes; each
+    connected component is one semantic-duplicate cluster whose
+    canonical member (min vec_id) survives. Output: members of
+    non-trivial clusters with their cluster id and size — the rows a
+    pipeline drops are exactly those with vec_id != cluster_id.
 
     Plan: identical machinery to q50 — the (tiny, LSH-bounded) pair
     list is checkpointed once, every loop round is cut, and one count
