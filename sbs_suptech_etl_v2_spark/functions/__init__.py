@@ -1,15 +1,8 @@
-"""Column-function layer: scalar cleanups (SURVEY §2.8), text analysis,
-and vector math. Everything here is built-in ``pyspark.sql.functions``
-composition — JVM-side, whole-stage-codegen'd, no Python UDFs."""
+"""Expression layer: the scalar SQL-text builders of SURVEY §2.8
+(``scalars`` — one form each, called by its registry query and by the
+document-ETL pipeline) and the salted skew helpers. All built-in Spark
+expressions — JVM-side, whole-stage-codegen'd, no Python UDFs."""
 
-from sbs_suptech_etl_v2_spark.functions.scalars import (  # noqa: F401
-    format_text_key,
-    map_merge_new_wins,
-    refine_dates,
-    refine_month,
-    refine_year,
-    stringify_map_values,
-)
 from sbs_suptech_etl_v2_spark.functions.skew import (  # noqa: F401
     salted_agg,
     salted_join,

@@ -1,20 +1,19 @@
-"""Scalar column functions — SURVEY §2.8 (C1-C12).
+"""Scalar expression builders — SURVEY §2.8 (C1-C12).
 
-Each function mirrors a scalar behavior of the reference's
-``workflow_service`` / loaders, re-expressed as a *pure Column
-expression* so it stays inside whole-stage codegen (no Python UDFs in
-the hot path). Reference citations are to /root/reference.
+Each builder mirrors a scalar behavior of the reference's
+``workflow_service`` / loaders / poller, re-expressed as Spark SQL text
+for a *built-in expression* so it stays inside whole-stage codegen (no
+Python UDFs in the hot path). Citations are paths in the reference
+repository.
 
 Divergences from reference bugs (SURVEY §7 "reference bugs"): we build
-the *intended* semantics — e.g. ``refine_month`` of an unknown month is
-NULL, not the string ``"None"`` (src/domain/services/workflow_service.py:16-36
-stringifies a Python None via ``str(dict.get(...))``).
+the *intended* semantics — e.g. ``refine_month_sql`` of an unknown
+month is NULL, not the string ``"None"``
+(src/domain/services/workflow_service.py:16-36 stringifies a Python
+None via ``str(dict.get(...))``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Spanish month-name dimension (J3: src/domain/services/workflow_service.py:17-36).
 # Small enough for a map literal — at any scale this is a broadcast-free
@@ -34,12 +33,6 @@ SPANISH_MONTHS: dict[str, int] = {
     "diciembre": 12,
 }
 
-def _month_map() -> Column:
-    # built lazily: Column construction needs an active SparkContext
-    return F.create_map(
-        *[F.lit(x) for kv in SPANISH_MONTHS.items() for x in (kv[0], str(kv[1]))]
-    )
-
 DATE_PATTERN = r"\b(\d{2}/\d{2}/\d{4})\b"
 
 
@@ -49,8 +42,7 @@ def sql_quote_regex(pattern: str) -> str:
     Spark's parser processes C-style escapes inside ``'...'`` literals
     (default ``spark.sql.parser.escapedStringLiterals=false``), so every
     backslash in the regex must be doubled to survive parsing — the
-    parsed string is then byte-identical to the raw-Python pattern the
-    Column API passes straight through py4j.
+    parsed string is then byte-identical to the raw Python pattern.
     """
     return pattern.replace("\\", "\\\\")
 
@@ -59,29 +51,30 @@ def sql_quote_literal(s: str) -> str:
     """Escape an arbitrary string for embedding in a single-quoted
     Spark SQL literal (ADVICE r17): backslashes first (the parser
     processes C-style escapes inside ``'...'`` by default), then
-    single quotes doubled per the SQL standard. Every ``*_sql`` twin
-    that interpolates a Python constant (stopwords, language profiles,
-    query terms, month names) routes through this, so a future
-    constant containing a quote cannot break parsing or silently
-    alter the query. Today's constants contain neither character, so
-    the emitted SQL — and therefore every committed plan — is
+    single quotes doubled per the SQL standard. Every ``*_sql`` builder
+    that interpolates a Python string (stopwords, language profiles,
+    query terms, month names, listing prefixes) routes through this, so
+    a string containing a quote cannot break parsing or silently alter
+    the query. Today's constants contain neither character, so the
+    emitted SQL — and therefore every committed plan — is
     byte-identical."""
     return s.replace("\\", "\\\\").replace("'", "''")
 
 
-# --- SQL-text twins -------------------------------------------------
-# The Column builders below assemble expressions one py4j round trip at
-# a time (~1-2 ms each on the virtualized bench boxes; a refinement
-# projection costs tens of trips). The *_sql twins return the SAME
-# expression as Spark SQL text, letting hot query builders compose a
-# whole projection into one selectExpr that parses JVM-side in a single
-# round trip (guide §5 — keep the driver out of per-expression work).
-# Equivalence is pinned by tests/test_scalars.py::test_sql_twins_match
-# and by the unchanged analyzed plans under plans/r17/.
+# --- expression builders ---------------------------------------------
+# Each returns Spark SQL text over embeddable expressions, so a caller
+# composes a whole projection into one ``selectExpr`` parsed JVM-side in
+# one py4j round trip (guide §5). The registry queries (q14/q15/q17/q37)
+# and the document-ETL pipeline call the same builders.
 
 
 def refine_dates_sql(expr: str) -> str:
-    """SQL-text twin of ``refine_dates`` over an embeddable expression."""
+    """C1 — first ``dd/mm/yyyy`` token in the string, else NULL.
+
+    Reference: src/domain/services/workflow_service.py:8-14.
+    ``regexp_extract`` returns ``""`` on no-match, so wrap in ``nullif``
+    to reproduce the reference's None.
+    """
     return f"nullif(regexp_extract({expr}, '{sql_quote_regex(DATE_PATTERN)}', 1), '')"
 
 
@@ -93,17 +86,49 @@ def _month_map_sql() -> str:
 
 
 def refine_month_sql(expr: str) -> str:
-    """SQL-text twin of ``refine_month``."""
+    """C2 — Spanish month name (any case, padded) → "1".."12" string;
+    unknown/NULL → NULL.
+
+    Reference: src/domain/services/workflow_service.py:16-36 (intended
+    semantics; the reference stringifies None to "None" — a bug we fix).
+    """
     return f"element_at({_month_map_sql()}, lower(trim({expr})))"
 
 
 def refine_year_sql(expr: str) -> str:
-    """SQL-text twin of ``refine_year``."""
+    """C3 — trimmed 4-digit year kept, anything else NULL.
+
+    Reference: src/domain/services/workflow_service.py:38-44.
+    """
     return f"CASE WHEN trim({expr}) RLIKE '^[0-9]{{4}}$' THEN trim({expr}) END"
 
 
+def refine_period_sql(folder: str) -> tuple[str, str]:
+    """F7 + C2/C3 — ``(month_sql, year_sql)`` of a ``"{Month} {Year}"``
+    folder name: both tokens only when the folder splits into exactly
+    two, then refined; a NULL or unparseable folder gives NULL for both.
+
+    Reference: src/infrastructure/adapters/pollers/s3_poller_document.py:29-41.
+    """
+    parts = f"split({folder}, ' ')"
+    month, year = (f"CASE WHEN size({parts}) = 2 THEN get({parts}, {i}) END" for i in (0, 1))
+    return refine_month_sql(month), refine_year_sql(year)
+
+
+def format_text_key_sql(record_id: str) -> str:
+    """C5 — S3 text-artifact key ``txt/{record_id}.txt``.
+
+    Reference: src/application/use_cases/workflows/workflow_polizas.py:85.
+    """
+    return f"format_string('txt/%s.txt', {record_id})"
+
+
 def stringify_map_values_sql(expr: str) -> str:
-    """SQL-text twin of ``stringify_map_values``."""
+    """C10 — cast every map value to string (DynamoDB loader normalizes
+    all metadata values with ``str(value)``).
+
+    Reference: src/infrastructure/adapters/loaders/dynamo_loader_document.py:45-46.
+    """
     return f"transform_values({expr}, (k, v) -> cast(v as string))"
 
 
@@ -114,66 +139,6 @@ _EMPTY_MAP_SQL = (
 
 
 def map_merge_new_wins_sql(old: str, new: str) -> str:
-    """SQL-text twin of ``map_merge_new_wins``."""
-    o = f"coalesce({old}, {_EMPTY_MAP_SQL})"
-    n = f"coalesce({new}, {_EMPTY_MAP_SQL})"
-    return (
-        f"map_filter(map_zip_with({o}, {n}, (k, ov, nv) -> coalesce(nv, ov)),"
-        " (k, v) -> v IS NOT NULL)"
-    )
-
-
-def refine_dates(col: Column | str) -> Column:
-    """C1 — first ``dd/mm/yyyy`` token in the string, else NULL.
-
-    Reference: src/domain/services/workflow_service.py:8-14.
-    ``regexp_extract`` returns ``""`` on no-match, so wrap in ``nullif``
-    to reproduce the reference's None.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.nullif(F.regexp_extract(c, DATE_PATTERN, 1), F.lit(""))
-
-
-def refine_month(col: Column | str) -> Column:
-    """C2 — Spanish month name (any case, padded) → "1".."12" string; unknown/NULL → NULL.
-
-    Reference: src/domain/services/workflow_service.py:16-36 (intended
-    semantics; the reference stringifies None to "None" — a bug we fix).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.element_at(_month_map(), F.lower(F.trim(c)))
-
-
-def refine_year(col: Column | str) -> Column:
-    """C3 — trimmed 4-digit year kept, anything else NULL.
-
-    Reference: src/domain/services/workflow_service.py:38-44.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.trim(c)
-    return F.when(t.rlike(r"^[0-9]{4}$"), t)
-
-
-def format_text_key(record_id: Column | str) -> Column:
-    """C5 — S3 text-artifact key ``txt/{record_id}.txt``.
-
-    Reference: src/application/use_cases/workflows/workflow_polizas.py:85.
-    """
-    c = F.col(record_id) if isinstance(record_id, str) else record_id
-    return F.format_string("txt/%s.txt", c)
-
-
-def stringify_map_values(map_col: Column | str) -> Column:
-    """C10 — cast every map value to string (DynamoDB loader normalizes
-    all metadata values with ``str(value)``).
-
-    Reference: src/infrastructure/adapters/loaders/dynamo_loader_document.py:45-46.
-    """
-    c = F.col(map_col) if isinstance(map_col, str) else map_col
-    return F.transform_values(c, lambda _, v: v.cast("string"))
-
-
-def map_merge_new_wins(old: Column | str, new: Column | str) -> Column:
     """C11 — python ``dict.update`` semantics: keys union, new wins.
 
     Spark's ``map_concat`` raises on duplicate keys (by default), so the
@@ -181,12 +146,9 @@ def map_merge_new_wins(old: Column | str, new: Column | str) -> Column:
     Reference: src/infrastructure/adapters/loaders/dynamo_loader_document.py:48.
     NULL maps are treated as empty.
     """
-    o = F.col(old) if isinstance(old, str) else old
-    n = F.col(new) if isinstance(new, str) else new
-    empty = F.map_from_arrays(F.array().cast("array<string>"), F.array().cast("array<string>"))
-    o = F.coalesce(o, empty)
-    n = F.coalesce(n, empty)
-    return F.map_filter(
-        F.map_zip_with(o, n, lambda _, ov, nv: F.coalesce(nv, ov)),
-        lambda _, v: v.isNotNull(),
+    o = f"coalesce({old}, {_EMPTY_MAP_SQL})"
+    n = f"coalesce({new}, {_EMPTY_MAP_SQL})"
+    return (
+        f"map_filter(map_zip_with({o}, {n}, (k, ov, nv) -> coalesce(nv, ov)),"
+        " (k, v) -> v IS NOT NULL)"
     )

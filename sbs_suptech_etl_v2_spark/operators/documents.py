@@ -25,9 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.functions.scalars import (
+    format_text_key_sql,
     map_merge_new_wins_sql,
     refine_dates_sql,
     refine_month_sql,
+    refine_period_sql,
     refine_year_sql,
     sql_quote_literal,
     stringify_map_values_sql,
@@ -66,7 +68,7 @@ def scalar_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inputs are synthesized per doc_id: a free-text sentence that may or
     may not embed a dd/mm/yyyy date, a month string (valid Spanish /
     garbage / NULL), and a year string (valid / padded / split / alpha /
-    NULL). All refinements are pure Column expressions — no UDFs.
+    NULL). All refinements are built-in SQL expressions — no UDFs.
     """
     # SQL-text form (two selectExprs instead of ~150 py4j round trips
     # of Column algebra — guide §5 driver-work note; analyzed plan is
@@ -152,15 +154,14 @@ def path_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = listed.filter(
         "NOT endswith(key, '/') AND endswith(lower(key), '.pdf')"
     )
-    month_tok = "CASE WHEN size(split(get(split(key, '/'), 1), ' ')) = 2 THEN get(split(get(split(key, '/'), 1), ' '), 0) END"
-    year_tok = "CASE WHEN size(split(get(split(key, '/'), 1), ' ')) = 2 THEN get(split(get(split(key, '/'), 1), ' '), 1) END"
+    period_month, period_year = refine_period_sql("get(split(key, '/'), 1)")
     return kept.selectExpr(
         "doc_id",
         "key",
         "get(split(key, '/'), 0) AS prefix",
         "get(split(key, '/'), size(split(key, '/')) - 1) AS basename",
-        f"{refine_month_sql(month_tok)} AS period_month",
-        f"{refine_year_sql(year_tok)} AS period_year",
+        f"{period_month} AS period_month",
+        f"{period_year} AS period_year",
     )
 
 
@@ -210,6 +211,21 @@ PAGE_WORDS = 10  # words per simulated page
 FIRST_PAGES = 2  # W1 analog cap (reference caps at 20 real pages)
 
 
+def n_pages_sql(words: str) -> str:
+    """Page count of a word array, ``PAGE_WORDS`` words per page."""
+    return f"cast(ceil(size({words}) / {PAGE_WORDS}) as int)"
+
+
+def first_pages_sql(words: str) -> str:
+    """W1 — the first ``FIRST_PAGES`` pages of a word array joined by
+    ``"\\n\\n"`` (textract_extractor_document.py:58-68); q16 and doc_etl."""
+    return (
+        f"array_join(transform(sequence(1, least({n_pages_sql(words)}, {FIRST_PAGES})),"
+        f" p -> array_join(slice({words}, (p - 1) * {PAGE_WORDS} + 1, {PAGE_WORDS}), ' ')),"
+        " '\\n\\n')"
+    )
+
+
 def pages_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6/W1/G3/G4 — per-page text + first-N concat, shuffle-free.
 
@@ -229,14 +245,11 @@ def pages_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged, see plans/r17/q16_pages_concat_*.txt)
     docs = table(spark, sf_dir, "documents")
     words = "split(text, ' ')"
-    n_pages = f"cast(ceil(size({words}) / {PAGE_WORDS}) as int)"
     return docs.selectExpr(
         "doc_id",
-        f"{n_pages} AS n_pages",
+        f"{n_pages_sql(words)} AS n_pages",
         f"cast(size({words}) as bigint) AS n_words",
-        f"array_join(transform(sequence(1, least({n_pages}, {FIRST_PAGES})),"
-        f" p -> array_join(slice({words}, (p - 1) * {PAGE_WORDS} + 1, {PAGE_WORDS}), ' ')),"
-        " '\\n\\n') AS first_pages",
+        f"{first_pages_sql(words)} AS first_pages",
     )
 
 
@@ -464,7 +477,7 @@ def artifact_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     body = "encode(text, 'utf-8')"
     staged = docs.selectExpr(
         f"{record_id} AS record_id",
-        f"format_string('txt/%s.txt', {record_id}) AS s3_key",
+        f"{format_text_key_sql(record_id)} AS s3_key",
         f"cast(length({body}) as bigint) AS body_bytes",
         f"sha2({body}, 256) AS body_sha256",
         "text",

@@ -6,8 +6,9 @@ egress encodes it (nested ``Notification`` with camelCase aliases,
 notification.py:5-29 / sqs_notification.py:31-33). Spark-first:
 ``from_json`` with an explicit camelCase schema + rename to
 snake_case on the way in; ``to_json(struct(...))`` with aliased fields
-on the way out. Both are pure Column expressions (whole-stage codegen,
-no Python in the loop).
+on the way out (``notification_body_sql``, which the document-ETL
+notify stage calls too). Both are built-in expressions (whole-stage
+codegen, no Python in the loop).
 
 Oracle note: DuckDB's json serializer and Spark's ``to_json`` agree on
 compact separators, but the oracle builds the expected JSON by string
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sbs_suptech_etl_v2_spark.functions.scalars import sql_quote_literal
 from sbs_suptech_etl_v2_spark.io import table
 from sbs_suptech_etl_v2_spark.operators.documents import NOTIFICATION_TYPE
 
@@ -40,6 +42,17 @@ REQUEST_SCHEMA = T.StructType(
 )
 
 
+def notification_body_sql(session: str, record: str, parent: str) -> str:
+    """K3/C9 — the JSON message body ``{sessionId, type, data:{recordId,
+    parentId}}`` (notification.py:5-29); q35 and the doc_etl notify
+    stage. ``struct(... AS name)`` keeps the aliased-struct plan."""
+    return (
+        f"to_json(struct({session} AS sessionId,"
+        f" '{sql_quote_literal(NOTIFICATION_TYPE)}' AS type,"
+        f" struct({record} AS recordId, {parent} AS parentId) AS data))"
+    )
+
+
 def notification_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C9/F10 — nested Notification encoded with ``to_json``.
 
@@ -55,19 +68,12 @@ def notification_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderkey") % 7 != 0)
         & (F.col("o_orderkey") % 11 != 0)
     )
-    body = F.to_json(
-        F.struct(
-            F.concat(F.lit("session_"), (F.col("o_custkey") % 10)).alias("sessionId"),
-            F.lit(NOTIFICATION_TYPE).alias("type"),
-            F.struct(
-                F.col("o_orderkey").cast("string").alias("recordId"),
-                F.concat(F.lit("parent_"), F.col("o_custkey")).alias("parentId"),
-            ).alias("data"),
-        )
+    body = notification_body_sql(
+        "concat('session_', o_custkey % 10)",
+        "cast(o_orderkey as string)",
+        "concat('parent_', o_custkey)",
     )
-    return ok.select(
-        F.col("o_orderkey").cast("string").alias("recordId"), body.alias("body")
-    )
+    return ok.selectExpr("cast(o_orderkey as string) AS recordId", f"{body} AS body")
 
 
 NOTIFICATION_ENCODE_SQL = f"""

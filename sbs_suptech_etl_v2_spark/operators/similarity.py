@@ -883,6 +883,34 @@ def _sql_dot(a: str, b: str) -> str:
     )
 
 
+def _dbl_list(signs: list[int]) -> str:
+    return "[" + ", ".join(f"{float(s)!r}" for s in signs) + "]::DOUBLE[]"
+
+
+# One-row CTE of DOUBLE[] columns, the LSH hyperplanes p{band}{plane}
+# and the near-dup perturbation pattern, joined where the oracles read
+# vectors: a literal inlined into a list lambda is rebuilt for every
+# element read. ±1.0 factors are exact either way (bit-identical rows).
+_PLANES_CTE = "planes AS (\n  SELECT " + ",\n    ".join(
+    [f"{_dbl_list(s)} AS p{b}{p}" for b, band in enumerate(PLANES) for p, s in enumerate(band)]
+    + [f"{_dbl_list(_plane_signs(7, 7))} AS variant"]
+) + "\n)"
+
+
+def _sql_bucket(band: int) -> str:
+    return " + ".join(
+        f"CASE WHEN {_sql_dot('v', f'p{band}{p}')} > 0 THEN {1 << p} ELSE 0 END"
+        for p in range(PLANES_PER_BAND)
+    )
+
+
+# (vec_id, u, band, bucket) rows of the ``unit`` CTE, one per band
+_BANDED_UNION = "\n  UNION ALL\n".join(
+    f"  SELECT vec_id, u, {b} AS band, {_sql_bucket(b)} AS bucket FROM unit, planes"
+    for b in range(N_BANDS)
+)
+
+
 def topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT-2] brute-force top-k cosine — the ANN exactness baseline.
 
@@ -986,13 +1014,9 @@ def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_sql() -> str:
-    banded = "\n  UNION ALL\n".join(
-        f"  SELECT vec_id, u, {b} AS band, {_sql_bucket(b)} AS bucket FROM unit"
-        for b in range(N_BANDS)
-    )
-    return f"""
-WITH vecs AS (
+ANN_BUCKETED_TOPK_SQL = f"""
+WITH {_PLANES_CTE},
+vecs AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 unit AS (
@@ -1002,7 +1026,7 @@ unit AS (
   WHERE {_sql_dot('v', 'v')} > 0  -- zero-norm vectors excluded (see _unit)
 ),
 banded AS (
-{banded}
+{_BANDED_UNION}
 ),
 scored AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -1197,25 +1221,9 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).dropDuplicates(["vec_a", "vec_b"])
 
 
-def _sql_bucket(band: int) -> str:
-    terms = []
-    for p in range(PLANES_PER_BAND):
-        arr = "[" + ", ".join(f"{float(s)!r}" for s in PLANES[band][p]) + "]"
-        terms.append(
-            f"CASE WHEN {_sql_dot('v', arr)} > 0 THEN {1 << p} ELSE 0 END"
-        )
-    return " + ".join(terms)
-
-
-_VARIANT_ARR = "[" + ", ".join(f"{float(s)!r}" for s in _plane_signs(7, 7)) + "]"
-
-_BANDED_UNION = "\n  UNION ALL\n".join(
-    f"  SELECT vec_id, u, {b} AS band, {_sql_bucket(b)} AS bucket FROM unit"
-    for b in range(N_BANDS)
-)
-
 EMBEDDING_NEARDUP_SQL = f"""
-WITH base AS (
+WITH {_PLANES_CTE},
+base AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 corpus AS (
@@ -1223,8 +1231,8 @@ corpus AS (
   UNION ALL
   SELECT vec_id + {NEARDUP_OFFSET} AS vec_id,
          list_transform(range(1, len(v) + 1),
-                        i -> v[i] + {PERTURB} * ({_VARIANT_ARR})[i]) AS v
-  FROM base WHERE vec_id % {NEARDUP_STRIDE} = 0
+                        i -> v[i] + {PERTURB} * variant[i]) AS v
+  FROM base, planes WHERE vec_id % {NEARDUP_STRIDE} = 0
 ),
 unit AS (
   SELECT vec_id, v,
@@ -1244,9 +1252,6 @@ pairs AS (
 )
 SELECT vec_a, vec_b, cosine FROM pairs
 """
-
-
-ANN_BUCKETED_TOPK_SQL = _ann_sql()
 
 
 def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1327,7 +1332,8 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RECALL_AUDIT_SQL = f"""
-WITH vecs AS (
+WITH {_PLANES_CTE},
+vecs AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 unit AS (

@@ -14,7 +14,7 @@ the whole thing is ONE routed frame per batch, not three pipelines:
    ``document_content_total`` and the FULL text to
    ``document_content_llm`` — the reference's observed
    (swapped-looking) behavior **[B]**, reproduced deliberately
-   (textract_extractor_document.py:58-68). Period month/year refined.
+   (textract_extractor_document.py:58-68). Periods refined (C2/C3).
 3. **transform (A2-A4)** — ONE Arrow-batched ``mapInPandas`` port pass
    over every extracted row that picks each row's port method from its
    flow. Its output carries the pass-through columns, the ``success``
@@ -29,12 +29,13 @@ the whole thing is ONE routed frame per batch, not three pipelines:
    frame and report ``success=False``; only successes are loaded and
    notified, through the chunk-by-10 writer.
 
-Every stage is the operator already exercised by the oracle-checked
-queries — this module only composes them, exactly like the reference's
-graph wires its nodes. Scale: routing is a ``CASE`` over one scan (no
-shuffle, no per-flow branches); the only shuffles are the port's
-fan-out, the metadata merge key and the text-artifact write
-partitioning.
+Every stage is the operator or expression builder already exercised
+by the oracle-checked queries — C2/C3 (q14), W1 (q16), the port pass
+(q31-q33), C10/C11 (q17, in ``merge_metadata``), the K3 body (q35) —
+and this module only composes them, like the reference's graph wires
+its nodes. Scale: routing is a ``CASE`` over one scan (no shuffle, no
+per-flow branches); the only shuffles are the port's fan-out, the
+metadata merge key and the text-artifact write partitioning.
 """
 
 from __future__ import annotations
@@ -43,13 +44,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.checkpointing import materialize
-from sbs_suptech_etl_v2_spark.functions.scalars import refine_month, refine_year
-from sbs_suptech_etl_v2_spark.operators.documents import (
-    FIRST_PAGES,
-    NOTIFICATION_TYPE,
-    PAGE_WORDS,
-)
+from sbs_suptech_etl_v2_spark.functions.scalars import refine_month_sql, refine_year_sql
+from sbs_suptech_etl_v2_spark.operators.documents import first_pages_sql
 from sbs_suptech_etl_v2_spark.operators.extraction import extract_structured
+from sbs_suptech_etl_v2_spark.operators.jsonops import notification_body_sql
 from sbs_suptech_etl_v2_spark.sinks.writers import (
     NotificationBatchWriter,
     merge_metadata,
@@ -75,51 +73,33 @@ PORT_OUT = ", ".join(
 
 def _extract(requests: DataFrame) -> DataFrame:
     """A1 + S4/W1 + C2/C3 — routed flow, content split, refined periods."""
-    doc_type = F.col("document_type")
-    flow = (
-        F.when(doc_type == "REGISTRATION", "inscripciones")
-        .when(doc_type == "APPRAISAL", "tasaciones")
-        .otherwise("polizas")
-    )
-    text = F.decode(F.col("content"), "utf-8")
-    words = F.split(text, " ")
-    n_pages = F.ceil(F.size(words) / F.lit(PAGE_WORDS)).cast("int")
-    first_pages = F.array_join(
-        F.transform(
-            F.sequence(F.lit(1), F.least(n_pages, F.lit(FIRST_PAGES))),
-            lambda i: F.array_join(
-                F.slice(words, (i - 1) * PAGE_WORDS + 1, PAGE_WORDS), " "
-            ),
-        ),
-        "\n\n",
-    )
-    return requests.select(
+    text = "decode(content, 'utf-8')"
+    words = f"split({text}, ' ')"
+    return requests.selectExpr(
         "record_id",
         "parent_id",
         "session_id",
-        flow.alias("flow"),
+        "CASE WHEN document_type = 'REGISTRATION' THEN 'inscripciones'"
+        " WHEN document_type = 'APPRAISAL' THEN 'tasaciones'"
+        " ELSE 'polizas' END AS flow",
         "document_type",
-        refine_month(F.col("period_month")).alias("period_month"),
-        refine_year(F.col("period_year")).alias("period_year"),
+        f"{refine_month_sql('period_month')} AS period_month",
+        f"{refine_year_sql('period_year')} AS period_year",
         # [B] reproduced: truncated text -> _total, full text -> _llm
-        first_pages.alias("document_content_total"),
-        text.alias("document_content_llm"),
-        F.coalesce(F.length(text) > 0, F.lit(False)).alias("success"),
+        f"{first_pages_sql(words)} AS document_content_total",
+        f"{text} AS document_content_llm",
+        f"coalesce(length({text}) > 0, false) AS success",
     )
 
 
 def _metadata_map(loaded: DataFrame) -> DataFrame:
     """C10 — stringified open metadata map for the K2 merge; the other
     flows' NULL fields drop out with the rest of the NULLs."""
-    entries: list = []
-    for c in ["document_type", "period_month", "period_year", *_FIELDS]:
-        entries.append(F.lit(c))
-        entries.append(F.col(c))
-    return loaded.select(
-        "record_id",
-        F.map_filter(
-            F.create_map(*entries), lambda _, v: v.isNotNull()
-        ).alias("metadata"),
+    entries = ", ".join(
+        f"'{c}', {c}" for c in ("document_type", "period_month", "period_year", *_FIELDS)
+    )
+    return loaded.selectExpr(
+        "record_id", f"map_filter(map({entries}), (k, v) -> v IS NOT NULL) AS metadata"
     )
 
 
@@ -173,18 +153,9 @@ def run_document_etl(
     # K2 — merge the stringified metadata into the lake table
     merge_metadata(spark, f"{lake_dir}/metadata", _metadata_map(ok))
     # K3 — A11: only loaded successes are notified
-    notifications = ok.select(
-        F.col("record_id").alias("recordId"),
-        F.to_json(
-            F.struct(
-                F.col("session_id").alias("sessionId"),
-                F.lit(NOTIFICATION_TYPE).alias("type"),
-                F.struct(
-                    F.col("record_id").alias("recordId"),
-                    F.col("parent_id").alias("parentId"),
-                ).alias("data"),
-            )
-        ).alias("body"),
+    notifications = ok.selectExpr(
+        "record_id AS recordId",
+        f"{notification_body_sql('session_id', 'record_id', 'parent_id')} AS body",
     )
     notifier(notifications, batch_id=0)
     # cut the lineage of the (small) result frame so the cache can be

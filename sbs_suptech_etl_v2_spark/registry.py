@@ -40,19 +40,25 @@ QUERIES: dict[str, QueryFn] = {
     # under exactly this reading, displacing q97's refresh by a round.
     #
     # Round-19 rotation (VERDICT r18 #2; the window is disjoint from
-    # r18's except changed paths): slots 1-15 are the paths changed
+    # r18's except changed paths): slots 1-20 are the paths changed
     # since r18 — the near-dup clustering loop (q75/q50/q92, and q93,
     # whose semantic dedup now runs the same loop), the
-    # ``extract_structured`` signature (q31-q33) and the other
+    # ``extract_structured`` signature (q31-q33), the other
     # ``io.spread`` callers (q21-q23, q30, q44, q51, q84, q86; spread
-    # became an unconditional repartition); slots 16-28 are q01-q13,
-    # never re-verified since their first verdict; slots 29-50 take the
-    # r18 "left for round 19" list in numeric order (q27-q60, skipping
-    # the queries seated above). Left for round 20: q62-q70, q72-q74,
+    # became an unconditional repartition), the document builders the
+    # doc_etl pipeline now shares (q15 ``refine_period_sql``, q16
+    # ``first_pages_sql``; q35 and q37 sit in slots 34-50) and the
+    # embedding oracles that read the ``planes`` CTE (q25, q41, q90;
+    # q93 is seated above); slots 21-33 are q01-q13, never re-verified
+    # since their first verdict; slots 34-50 take the r18 "left for
+    # round 19" list in numeric order (q27-q55, skipping the queries
+    # seated above). The other queries of documents.py, jsonops.py and
+    # similarity.py are not reseated: their builders and oracles did
+    # not change. Left for round 20: q56-q60, q62-q70, q72-q74,
     # q76-q78, q95, q97, q101, q106, q109-q113, q115/q116, q118-q121,
     # then the r18 window's queries that are not seated here.
     # ------------------------------------------------------------------
-    # -- slots 1-15: paths changed since r18 --
+    # -- slots 1-20: paths changed since r18 --
     # q75 and q50 are one builder under two names (q75 kept its
     # fixpoint name and seat)
     "q75_neardup_fixpoint": X1.neardup_clusters,
@@ -70,7 +76,12 @@ QUERIES: dict[str, QueryFn] = {
     "q51_quantize_embeddings": X2.quantize_embeddings,
     "q84_shingle_containment": X1.shingle_containment,
     "q86_pq_quantize": X2.pq_quantize,
-    # -- slots 16-28: q01-q13 --
+    "q15_path_parse": D.path_parse,
+    "q16_pages_concat": D.pages_concat,
+    "q25_embedding_neardup": X2.embedding_neardup,
+    "q41_ann_bucketed_topk": X2.ann_bucketed_topk,
+    "q90_ann_recall_audit": X2.ann_recall_audit,
+    # -- slots 21-33: q01-q13 --
     "q01_pricing_summary": R.pricing_summary,
     "q02_metadata_lookup_join": R.metadata_lookup_join,
     "q03_top_orders_per_customer": R.top_orders_per_customer,
@@ -84,7 +95,7 @@ QUERIES: dict[str, QueryFn] = {
     "q11_positional_pick": R.positional_pick,
     "q12_set_ops": R.segment_set_ops,
     "q13_events_tumbling": R.events_tumbling_window,
-    # -- slots 29-50: the r18 "left for round 19" list (numeric order) --
+    # -- slots 34-50: the r18 "left for round 19" list (numeric order) --
     "q27_token_topk": X4.token_topk,
     "q28_tfidf_top_terms": X4.tfidf_top_terms,
     "q34_blocks_page_text": B.blocks_page_text,
@@ -103,13 +114,13 @@ QUERIES: dict[str, QueryFn] = {
     "q53_approx_distinct": R.segment_distinct_customers,
     "q54_purchase_asof_click": R.purchase_asof_click,
     "q55_image_resize": X3.image_resize,
+    # -- beyond the 50-entry prefix ------------------------------------
+    # (round-20 lead candidates, numeric order)
     "q56_audio_features": X3.audio_features,
     "q57_range_frame": R.rolling_spend_range_frame,
     "q58_salted_agg": R.salted_status_totals,
     "q59_percentiles": R.priority_price_percentiles,
     "q60_grouping_sets": R.status_priority_grouping_sets,
-    # -- beyond the 50-entry prefix ------------------------------------
-    # (round-20 lead candidates, numeric order)
     "q62_repetition_stats": X5.repetition_stats,
     "q63_lexicon_scrub": X5.lexicon_scrub,
     "q64_stratified_sample": X5.stratified_sample,
@@ -142,18 +153,14 @@ QUERIES: dict[str, QueryFn] = {
     "q121_cusum_changepoints": R.cusum_changepoints,
     # (the r18 window, not seated this round; numeric order)
     "q14_scalar_refinement": D.scalar_refinement,
-    "q15_path_parse": D.path_parse,
-    "q16_pages_concat": D.pages_concat,
     "q17_metadata_merge": D.metadata_merge,
     "q18_stage_gate_notifications": D.stage_gate_notifications,
     "q19_pages_explode": D.pages_explode,
     "q20_exact_dedup": X1.exact_dedup,
     "q24_topk_cosine": X2.topk_cosine,
-    "q25_embedding_neardup": X2.embedding_neardup,
     "q26_text_stats": X4.text_stats,
     "q29_language_id": X4.language_id,
     "q36_request_decode": J.request_decode,
-    "q41_ann_bucketed_topk": X2.ann_bucketed_topk,
     "q47_ivf_topk": X2.ivf_topk,
     "q49_promo_revenue": R.promo_revenue_share,
     "q61_contamination_check": X5.contamination_check,
@@ -167,7 +174,6 @@ QUERIES: dict[str, QueryFn] = {
     "q87_surrogate_keys": R.surrogate_keys,
     "q88_scene_segments": X3.scene_segments,
     "q89_cogroup_attribution": R.cogroup_attribution,
-    "q90_ann_recall_audit": X2.ann_recall_audit,
     "q91_unigram_surprisal": X4.unigram_surprisal,
     "q94_quantity_price_stats": R.quantity_price_stats,
     "q96_only_late_supplier": R.only_late_supplier,
@@ -260,8 +266,8 @@ ORACLE: dict[str, str] = {
     "q72_status_unpivot": R.STATUS_COUNTS_UNPIVOT_SQL,
     "q73_order_calendar": R.ORDER_CALENDAR_SQL,
     "q74_edit_distance": X1.VARIANT_EDIT_DISTANCE_SQL,
-    # fixpoint clustering converges to the bounded-round labeling on
-    # this corpus (diameter <= 2), so it shares q50's oracle
+    # q75 and q50 are one builder (the fixpoint loop), so they share
+    # one oracle: the recursive-CTE closure, exact at any diameter
     "q75_neardup_fixpoint": X1.NEARDUP_CLUSTERS_SQL,
     "q76_session_paths": R.SESSION_EVENT_PATHS_SQL,
     "q77_rank_functions": R.ORDER_RANK_FUNCTIONS_SQL,

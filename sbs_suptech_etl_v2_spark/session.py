@@ -46,7 +46,6 @@ def _default_driver_mem() -> str:
 def get_spark(
     app_name: str = "sbs_suptech_etl_v2_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
@@ -58,13 +57,13 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # respect the advisory partition size instead of padding the

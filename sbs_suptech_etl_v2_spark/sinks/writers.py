@@ -39,9 +39,9 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.functions.scalars import (
-    format_text_key,
-    map_merge_new_wins,
-    stringify_map_values,
+    format_text_key_sql,
+    map_merge_new_wins_sql,
+    stringify_map_values_sql,
 )
 
 SQS_BATCH_MAX = 10
@@ -101,8 +101,11 @@ def merge_metadata(spark: SparkSession, table_path: str, updates: DataFrame) -> 
     ``updates``: ``(record_id string, metadata map<string,string>)``.
     Semantics of dynamo_loader_document.py:33-58 set-oriented:
     unmatched rows insert; matched rows get ``old.update(new)`` (C11)
-    after stringify-all (C10). The join is a full outer on record_id —
-    at scale both sides shuffle once on the merge key.
+    after stringify-all (C10). Both are q17's SQL-text builders
+    (``stringify_map_values_sql``, ``map_merge_new_wins_sql``) through
+    ``F.expr``, so the oracle-checked expressions are the ones that
+    merge. The join is a full outer on record_id — at scale both sides
+    shuffle once on the merge key.
 
     The commit is a parquet swap: write-to-temp + directory rename. The
     reference's DynamoDB ``update_item`` loop is per-item atomic; the
@@ -127,7 +130,7 @@ def merge_metadata(spark: SparkSession, table_path: str, updates: DataFrame) -> 
     shipped-but-unrunnable path would be a stub).
     """
     new = updates.select(
-        F.col("record_id"), stringify_map_values(F.col("metadata")).alias("new_meta")
+        "record_id", F.expr(stringify_map_values_sql("metadata")).alias("new_meta")
     )
     if os.path.exists(table_path):
         # the table's schema is this sink's own: reading it with the
@@ -140,7 +143,7 @@ def merge_metadata(spark: SparkSession, table_path: str, updates: DataFrame) -> 
         .join(new, "record_id", "full_outer")
         .select(
             "record_id",
-            map_merge_new_wins(F.col("old_meta"), F.col("new_meta")).alias("metadata"),
+            F.expr(map_merge_new_wins_sql("old_meta", "new_meta")).alias("metadata"),
         )
     )
     _atomic_swap(spark, merged, table_path)
@@ -180,11 +183,13 @@ def _spool_sender(spool_dir: str) -> Callable[[list[dict[str, Any]]], None]:
 class NotificationBatchWriter:
     """K3 — SQS-shaped notification sink, chunked by {SQS_BATCH_MAX}.
 
-    Callable as ``foreachBatch(writer)``: each partition builds its own
-    client via ``client_factory`` and sends its rows as ``{Id,
-    MessageBody}`` entries (the reference's sqs_notification.py:29-39
-    shape) in chunks of ≤10 — the intended semantics behind the
-    reference's unchunked send **[B]**. Sends happen in
+    Callable as ``foreachBatch(writer)`` over ``(recordId, body)`` rows,
+    the columns the callers of ``jsonops.notification_body_sql``
+    project: each partition builds its own client via
+    ``client_factory`` and sends its rows as ``{Id, MessageBody}``
+    entries (the reference's sqs_notification.py:29-39 shape) in
+    chunks of ≤10 — the intended semantics behind the reference's
+    unchunked send **[B]**. Sends happen in
     ``foreachPartition`` on the executors, mirroring K1
     (``write_text_artifacts``): the driver never materializes a row, so
     an unthrottled batch (e.g. the batch document-ETL plan passing all
@@ -197,8 +202,6 @@ class NotificationBatchWriter:
     def __init__(
         self,
         client_factory: Callable[[], Callable[[list[dict[str, Any]]], None]] | None = None,
-        body_col: str = "body",
-        id_col: str = "recordId",
     ):
         self._spool_dir: str | None = None
         if client_factory is None:
@@ -209,8 +212,6 @@ class NotificationBatchWriter:
                 return _spool_sender(spool)
 
         self._client_factory = client_factory
-        self._body_col = body_col
-        self._id_col = id_col
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._spool_dir is not None and not batch_df.sparkSession.sparkContext.master.startswith(
@@ -226,20 +227,19 @@ class NotificationBatchWriter:
                 "send_message_batch) for cluster runs"
             )
         factory = self._client_factory
-        id_col, body_col = self._id_col, self._body_col
 
         def send_partition(it: Iterator[Row]) -> None:
             send = factory()
             chunk: list[dict[str, Any]] = []
             for row in it:
-                chunk.append({"Id": row[id_col], "MessageBody": row[body_col]})
+                chunk.append({"Id": row["recordId"], "MessageBody": row["body"]})
                 if len(chunk) == SQS_BATCH_MAX:
                     send(chunk)
                     chunk = []
             if chunk:
                 send(chunk)
 
-        batch_df.select(id_col, body_col).foreachPartition(send_partition)
+        batch_df.select("recordId", "body").foreachPartition(send_partition)
 
     @property
     def sent_batches(self) -> list[list[dict[str, Any]]]:
@@ -275,12 +275,13 @@ class NotificationBatchWriter:
 
 def stage_text_artifacts(df: DataFrame, record_id_col: str, content_col: str) -> DataFrame:
     """Project a DataFrame into the K1 sink contract (record_id, key,
-    content) using the C5 key format — the pre-write projection of
+    content) using the C5 key format (``format_text_key_sql``, which
+    q37 runs under its oracle) — the pre-write projection of
     workflow_polizas.py:85-90."""
-    return df.select(
-        F.col(record_id_col).alias("record_id"),
-        format_text_key(F.col(record_id_col)).alias("s3_key"),
-        F.col(content_col).alias("content"),
+    return df.selectExpr(
+        f"{record_id_col} AS record_id",
+        f"{format_text_key_sql(record_id_col)} AS s3_key",
+        f"{content_col} AS content",
     )
 
 

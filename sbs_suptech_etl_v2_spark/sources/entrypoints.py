@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sbs_suptech_etl_v2_spark.functions.scalars import refine_month, refine_year
+from sbs_suptech_etl_v2_spark.functions.scalars import refine_period_sql, sql_quote_literal
 from sbs_suptech_etl_v2_spark.operators.jsonops import REQUEST_SCHEMA
 from sbs_suptech_etl_v2_spark.streaming.ingress import SNAKE_CASE
 
@@ -59,8 +59,10 @@ def listing_scan(
     F2 at the source, cheaper than a post-scan filter); directory
     keys never appear (F1 is structural in a file listing). The
     relative path decomposes as ``{prefix}/{Month Year}/{basename}``
-    → ``period_month``/``period_year`` via C2/C3 (NULL on parse
-    failure, s3_poller_document.py:29-41). ``position`` reproduces F9:
+    → ``period_month``/``period_year`` in one SQL-text projection over
+    q15's ``refine_period_sql`` (NULL on parse failure or directly under
+    the prefix, s3_poller_document.py:29-41; ``prefix`` is quoted by
+    ``sql_quote_literal``). ``position`` reproduces F9:
     a deterministic key-ordered positional pick via global sort+limit
     (TakeOrderedAndProject — parallel, no single-partition window).
 
@@ -82,21 +84,21 @@ def listing_scan(
         .load(f"{root}/{prefix}")
     )
     # input_file_name() is URL-encoded ("Mayo%202023") — decode before parsing
-    key = F.url_decode(F.regexp_replace(F.input_file_name(), "^file:/*|^s3a://", ""))
-    rel = F.substring_index(key, f"/{prefix}/", -1)
-    parts = F.split(rel, "/")
-    folder = F.when(F.size(parts) >= 2, F.get(parts, F.size(parts) - 2))
-    folder_parts = F.split(folder, " ")
-    month_tok = F.when(F.size(folder_parts) == 2, F.get(folder_parts, 0))
-    year_tok = F.when(F.size(folder_parts) == 2, F.get(folder_parts, 1))
-    listed = scan.select(
-        rel.alias("key"),
-        F.lit(prefix).alias("prefix"),
-        F.get(parts, F.size(parts) - 1).alias("basename"),
-        refine_month(month_tok).alias("period_month"),
-        refine_year(year_tok).alias("period_year"),
-        F.col("length").alias("content_length"),
-        F.col("content"),
+    key = "url_decode(regexp_replace(input_file_name(), '^file:/*|^s3a://', ''))"
+    quoted = sql_quote_literal(prefix)
+    rel = f"substring_index({key}, '/{quoted}/', -1)"
+    parts = f"split({rel}, '/')"
+    period_month, period_year = refine_period_sql(
+        f"CASE WHEN size({parts}) >= 2 THEN get({parts}, size({parts}) - 2) END"
+    )
+    listed = scan.selectExpr(
+        f"{rel} AS key",
+        f"'{quoted}' AS prefix",
+        f"get({parts}, size({parts}) - 1) AS basename",
+        f"{period_month} AS period_month",
+        f"{period_year} AS period_year",
+        "length AS content_length",
+        "content",
     )
     if position is not None:
         picked = listed.orderBy("key").limit(position + 1).orderBy(F.col("key").desc()).limit(1)

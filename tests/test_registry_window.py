@@ -18,15 +18,16 @@ from sbs_suptech_etl_v2_spark.registry import ORACLE, QUERIES
 WINDOW_SIZE = 50
 
 # Round-19 rotation (VERDICT r18 #2): a window disjoint from r18's
-# except the paths changed since r18, which lead (slots 1-15); then
-# q01-q13 (slots 16-28), never re-verified since their first verdict;
-# then the r18 "left for round 19" list in numeric order (slots 29-50).
+# except the paths changed since r18, which lead (slots 1-20); then
+# q01-q13 (slots 21-33), never re-verified since their first verdict;
+# then the r18 "left for round 19" list in numeric order (slots 34-50).
 # The full reasoning sits in registry.py's ordering note.
 # Update this literal TOGETHER with registry.py each rotation.
 ROTATION = [
-    # slots 1-15: paths changed since r18 (the near-dup clustering
+    # slots 1-20: paths changed since r18 (the near-dup clustering
     # loop, the extract_structured signature, the other io.spread
-    # callers)
+    # callers, the shared document builders, the embedding oracles'
+    # planes CTE)
     "q75_neardup_fixpoint",
     "q50_neardup_clusters",
     "q92_dedup_keep_canonical",
@@ -42,7 +43,12 @@ ROTATION = [
     "q51_quantize_embeddings",
     "q84_shingle_containment",
     "q86_pq_quantize",
-    # slots 16-28: q01-q13
+    "q15_path_parse",
+    "q16_pages_concat",
+    "q25_embedding_neardup",
+    "q41_ann_bucketed_topk",
+    "q90_ann_recall_audit",
+    # slots 21-33: q01-q13
     "q01_pricing_summary",
     "q02_metadata_lookup_join",
     "q03_top_orders_per_customer",
@@ -56,7 +62,7 @@ ROTATION = [
     "q11_positional_pick",
     "q12_set_ops",
     "q13_events_tumbling",
-    # slots 29-50: the r18 "left for round 19" list (numeric order)
+    # slots 34-50: the r18 "left for round 19" list (numeric order)
     "q27_token_topk",
     "q28_tfidf_top_terms",
     "q34_blocks_page_text",
@@ -74,11 +80,6 @@ ROTATION = [
     "q53_approx_distinct",
     "q54_purchase_asof_click",
     "q55_image_resize",
-    "q56_audio_features",
-    "q57_range_frame",
-    "q58_salted_agg",
-    "q59_percentiles",
-    "q60_grouping_sets",
 ]
 
 

@@ -1,11 +1,12 @@
 """Unit + property tests for the C1-C12 scalar semantics (SURVEY §5.3).
 
-Edge cases target the reference's traps: the ``""``-vs-NULL
-regexp_extract behavior, the ``refine_month`` "None"-string bug (we
-implement the intended NULL), non-4-digit years, map-merge precedence.
-The hypothesis property drives batches of random strings through ONE
-Spark job per case and compares against a plain-Python reference
-implementation of the same semantics.
+Every builder is driven through ``F.expr`` — the form the registry
+queries and the document-ETL pipeline run. Edge cases target the
+reference's traps: the ``""``-vs-NULL regexp_extract behavior, the
+``refine_month`` "None"-string bug (we implement the intended NULL),
+non-4-digit years, map-merge precedence. The hypothesis property drives
+batches of random strings through ONE Spark job per case and compares
+against a plain-Python reference implementation of the same semantics.
 """
 
 from __future__ import annotations
@@ -18,18 +19,20 @@ from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.functions.scalars import (
     SPANISH_MONTHS,
-    format_text_key,
-    map_merge_new_wins,
-    refine_dates,
-    refine_month,
-    refine_year,
-    stringify_map_values,
+    format_text_key_sql,
+    map_merge_new_wins_sql,
+    refine_dates_sql,
+    refine_month_sql,
+    refine_period_sql,
+    refine_year_sql,
+    sql_quote_literal,
+    stringify_map_values_sql,
 )
 
 
 def _run_scalar(spark, values, fn):
     df = spark.createDataFrame([(v,) for v in values], "x string")
-    return [r["y"] for r in df.select(fn(F.col("x")).alias("y")).collect()]
+    return [r["y"] for r in df.select(F.expr(fn("x")).alias("y")).collect()]
 
 
 def test_refine_dates_edges(spark):
@@ -43,7 +46,7 @@ def test_refine_dates_edges(spark):
         "": None,
         None: None,
     }
-    got = _run_scalar(spark, list(cases), refine_dates)
+    got = _run_scalar(spark, list(cases), refine_dates_sql)
     assert got == list(cases.values())
 
 
@@ -57,7 +60,7 @@ def test_refine_month_edges(spark):
         "": None,
         None: None,
     }
-    got = _run_scalar(spark, list(cases), refine_month)
+    got = _run_scalar(spark, list(cases), refine_month_sql)
     assert got == list(cases.values())
 
 
@@ -73,12 +76,31 @@ def test_refine_year_edges(spark):
         "": None,
         None: None,
     }
-    got = _run_scalar(spark, list(cases), refine_year)
+    got = _run_scalar(spark, list(cases), refine_year_sql)
+    assert got == list(cases.values())
+
+
+def test_refine_period_edges(spark):
+    cases = {
+        "Mayo 2023": ("5", "2023"),
+        "  DICIEMBRE 1999": (None, None),  # leading spaces: not two tokens
+        "Mayo 23": ("5", None),
+        "Birmingham 2023": (None, "2023"),
+        "Mayo 2023 bis": (None, None),
+        "badfolder": (None, None),
+        "": (None, None),
+        None: (None, None),
+    }
+    month, year = refine_period_sql("x")
+    df = spark.createDataFrame([(v,) for v in cases], "x string")
+    got = [(r["m"], r["y"]) for r in df.select(
+        F.expr(month).alias("m"), F.expr(year).alias("y")
+    ).collect()]
     assert got == list(cases.values())
 
 
 def test_format_text_key(spark):
-    got = _run_scalar(spark, ["abc", "r-1"], format_text_key)
+    got = _run_scalar(spark, ["abc", "r-1"], format_text_key_sql)
     assert got == ["txt/abc.txt", "txt/r-1.txt"]
 
 
@@ -95,7 +117,7 @@ def test_map_merge_precedence_and_nulls(spark):
     got = [
         dict(r["m"]) if r["m"] is not None else None
         for r in df.select(
-            map_merge_new_wins(F.col("old"), F.col("new")).alias("m")
+            F.expr(map_merge_new_wins_sql("old", "new")).alias("m")
         ).collect()
     ]
     assert got == [
@@ -109,7 +131,7 @@ def test_map_merge_precedence_and_nulls(spark):
 def test_stringify_map_values(spark):
     df = spark.createDataFrame([({"a": 1.5, "b": 2.0},)], "m map<string,double>")
     got = dict(
-        df.select(stringify_map_values(F.col("m")).alias("s")).collect()[0]["s"]
+        df.select(F.expr(stringify_map_values_sql("m")).alias("s")).collect()[0]["s"]
     )
     assert got == {"a": "1.5", "b": "2.0"}
 
@@ -153,9 +175,9 @@ TEXT = st.one_of(
 def test_scalar_properties_match_python_reference(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "x string")
     got = df.select(
-        refine_dates(F.col("x")).alias("d"),
-        refine_month(F.col("x")).alias("m"),
-        refine_year(F.col("x")).alias("y"),
+        F.expr(refine_dates_sql("x")).alias("d"),
+        F.expr(refine_month_sql("x")).alias("m"),
+        F.expr(refine_year_sql("x")).alias("y"),
     ).collect()
     for v, row in zip(values, got):
         assert row["d"] == _py_refine_dates(v), v
@@ -163,61 +185,12 @@ def test_scalar_properties_match_python_reference(spark, values):
         assert row["y"] == _py_refine_year(v), v
 
 
-def test_sql_twins_match(spark):
-    """The *_sql text twins must resolve to the same values as the
-    Column builders they mirror (r17: hot builders compose SQL text to
-    cut py4j round trips; this pins the two forms together)."""
-    from sbs_suptech_etl_v2_spark.functions.scalars import (
-        map_merge_new_wins_sql,
-        refine_dates_sql,
-        refine_month_sql,
-        refine_year_sql,
-        stringify_map_values_sql,
-    )
-
-    values = [
-        "Emitido el 01/02/2023 en Lima",
-        "  DICIEMBRE  ",
-        "Enero",
-        " 2024 ",
-        "20 23",
-        "abc",
-        "",
-        None,
-    ]
-    df = spark.createDataFrame([(v,) for v in values], "x string")
-    for col_fn, sql_fn in (
-        (refine_dates, refine_dates_sql),
-        (refine_month, refine_month_sql),
-        (refine_year, refine_year_sql),
-    ):
-        got = df.select(
-            col_fn(F.col("x")).alias("c"), F.expr(sql_fn("x")).alias("s")
-        ).collect()
-        assert [r["c"] for r in got] == [r["s"] for r in got], col_fn.__name__
-
-    mdf = spark.createDataFrame(
-        [(1.5, "seg")], "bal double, seg string"
-    ).selectExpr("map('a', cast(bal as string), 'b', seg) AS m1",
-                 "map('a', 'x') AS m2")
-    got = mdf.select(
-        stringify_map_values(F.col("m1")).alias("c"),
-        F.expr(stringify_map_values_sql("m1")).alias("s"),
-        map_merge_new_wins(F.col("m1"), F.col("m2")).alias("cm"),
-        F.expr(map_merge_new_wins_sql("m1", "m2")).alias("sm"),
-    ).collect()[0]
-    assert got["c"] == got["s"]
-    assert got["cm"] == got["sm"]
-
-
 def test_sql_quote_literal_roundtrips_through_the_parser(spark):
     """ADVICE r17: constants interpolated into single-quoted Spark SQL
     literals must survive quotes and backslashes. Pin that the escape
     round-trips byte-exactly through the actual parser for every
-    character class the *_sql twins could ever interpolate — and that
+    character class the *_sql builders could ever interpolate — and that
     today's clean constants are emitted unchanged (plan stability)."""
-    from sbs_suptech_etl_v2_spark.functions.scalars import sql_quote_literal
-
     cases = [
         "plain",
         "it's",

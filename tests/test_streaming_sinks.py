@@ -120,6 +120,29 @@ def test_listing_scan_filters_and_period_parse(spark, tmp_path):
     assert picked[0]["basename"] == "B.PDF"
 
 
+def test_listing_scan_quoted_prefix_and_file_under_prefix(spark, tmp_path):
+    """The prefix enters the listing's SQL text as a quoted literal: a
+    prefix holding a ``'`` must still parse, split the key and come back
+    verbatim. A file directly under the prefix has no period folder, so
+    it is listed with NULL periods."""
+    prefix = "Pólizas d'Or"
+    folder = tmp_path / "bucket" / prefix
+    (folder / "Junio 2024").mkdir(parents=True)
+    (folder / "top.pdf").write_bytes(b"%PDF-1.4 top")
+    (folder / "Junio 2024" / "inner.pdf").write_bytes(b"%PDF-1.4 inner")
+
+    rows = {
+        r["key"]: r for r in listing_scan(spark, str(tmp_path / "bucket"), prefix).collect()
+    }
+    assert sorted(rows) == ["Junio 2024/inner.pdf", "top.pdf"]
+    top, inner = rows["top.pdf"], rows["Junio 2024/inner.pdf"]
+    assert (top["prefix"], top["basename"]) == (prefix, "top.pdf")
+    assert (top["period_month"], top["period_year"]) == (None, None)
+    assert (inner["basename"], inner["period_month"], inner["period_year"]) == (
+        "inner.pdf", "6", "2024",
+    )
+
+
 def test_write_text_artifacts_one_file_per_row(spark, tmp_path):
     df = spark.createDataFrame(
         [("r1", "hola"), ("r2", "mundo"), ("r3", None)],
