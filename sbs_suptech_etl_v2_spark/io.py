@@ -31,11 +31,15 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # footer (schema discovery) through py4j on EVERY call — measured
 # ~0.2-0.3 s of pure driver-side latency per query build when a query
 # touches 2-4 tables. A real warehouse caches table metadata in its
-# catalog; this dict is that catalog for the path-addressed test lake.
-# Keyed by (applicationId, path, file mtime) so a new session or a
-# rewritten file never sees a stale plan; DataFrames are immutable so
-# sharing one logical plan across queries is safe.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+# catalog; this is that catalog for the path-addressed test lake.
+# It is one dict per session, kept on the session object, keyed by
+# (path, file mtime): a DataFrame is bound to the session that read it,
+# so a ``newSession()`` must read its own (its configuration and its
+# ``spark.sql`` parameter views are its own), and a rewritten file
+# never serves a stale plan. A module-level map, even a weak one, would
+# keep every session alive through its cached DataFrames; on the
+# session, the cache goes when the session does.
+_CACHE_ATTR = "_sbs_table_cache"
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,8 +60,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
-    cached = _TABLE_CACHE.get(key)
+    cache = spark.__dict__.setdefault(_CACHE_ATTR, {})
+    cached = cache.get((path, mtime))
     if cached is not None:
         return cached
     if name == "events":
@@ -68,15 +72,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
         df = spark.read.parquet(path)
-    if len(_TABLE_CACHE) > 256:
-        # bound growth across many test sessions: evict DEAD sessions'
-        # entries (stopped SparkSessions pin py4j-backed plans forever
-        # otherwise) and keep the live session's hot entries — a full
-        # clear() would force footer re-reads for every current table
-        app = key[0]
-        for k in [k for k in _TABLE_CACHE if k[0] != app]:
-            del _TABLE_CACHE[k]
-    _TABLE_CACHE[key] = df
+    cache[(path, mtime)] = df
     return df
 
 

@@ -14,6 +14,17 @@ run-to-run with partial-agg order) then cast back to double; every
 top-k window orders by a unique tie-breaker; no uuid()/now() in checked
 columns.
 
+One text per query where Spark runs it unchanged: a ``*_SQL`` constant
+that names its tables as ``{orders}``-style placeholders (``{{orders}}``
+inside f-strings) has no DataFrame builder here. ``registry.sql_query``
+binds each placeholder to its table as a ``spark.sql`` DataFrame
+parameter, and ``registry.oracle_text`` gives DuckDB the same text with
+the table names filled in, so the oracle compares two engines on one
+text. The other queries keep a builder: their text uses DuckDB-only
+functions, their builder plans better (a keeper says why at its
+``def``), or their text's plan has not been weighed against the
+builder's yet.
+
 Scale notes (100 TB posture): each builder states its shuffle shape.
 Catalyst/AQE pick broadcast vs sort-merge joins; explicit
 ``F.broadcast`` only where a side is known-small by construction
@@ -118,35 +129,8 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-def metadata_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 analog — broadcast equi lookup join, new-rows left join existing.
-
-    The reference fetches the existing DynamoDB item per outgoing row
-    (dynamo_loader_document.py:36-48); set-oriented this is a left join
-    of the update batch against the existing-metadata table.
-    ``customer`` plays that table — it scales with the fact data, so no
-    explicit broadcast hint: AQE picks broadcast at small SF and
-    switches to shuffle join when it grows. ``nation`` is a bounded
-    dimension (25 rows at any SF) and keeps the explicit hint.
-    """
-    orders, customer, nation = load(spark, sf_dir, "orders", "customer", "nation")
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("order_count"),
-        F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("total_spend"),
-    )
-    return (
-        per_cust.join(customer, per_cust.o_custkey == customer.c_custkey, "left")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            F.col("c_name").alias("cust_name"),
-            F.col("n_name").alias("nation_name"),
-            "order_count",
-            "total_spend",
-        )
-    )
-
-
+# J1 analog: the reference fetches the existing item per outgoing row
+# (dynamo_loader_document.py:36-48); set-oriented, a left lookup join.
 METADATA_LOOKUP_JOIN_SQL = """
 SELECT
   o.o_custkey AS custkey,
@@ -158,85 +142,42 @@ FROM (
   SELECT o_custkey,
          COUNT(*) AS order_count,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_spend
-  FROM orders GROUP BY o_custkey
+  FROM {orders} GROUP BY o_custkey
 ) o
-LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+LEFT JOIN {customer} c ON o.o_custkey = c.c_custkey
+LEFT JOIN {nation} n ON c.c_nationkey = n.n_nationkey
 """
 
 
-def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 analog — row_number top-3 per partition (first-N-pages cap).
-
-    The reference keeps the first 20 pages per document
-    (textract_extractor_document.py:58-59); relationally that is
-    ``row_number() OVER (PARTITION BY doc ORDER BY position) <= N``.
-    Tie-break on o_orderkey keeps the pick deterministic. One shuffle
-    on the partition key; at scale prefer this over a global sort.
-    """
-    orders = table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.col("rn").cast("int").alias("rn"),
-        )
-    )
-
-
+# W1 analog: row_number top-3 per partition, the first-N-pages cap
+# (textract_extractor_document.py:58-59); o_orderkey breaks ties.
 TOP_ORDERS_PER_CUSTOMER_SQL = """
 SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn
 FROM (
   SELECT o_custkey, o_orderkey, o_totalprice,
          ROW_NUMBER() OVER (PARTITION BY o_custkey
                             ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders
+  FROM {orders}
 )
 WHERE rn <= 3
 """
 
 
-def customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi join (EXISTS) — SURVEY §2.4 absent-op coverage."""
-    customer, orders = load(spark, sf_dir, "customer", "orders")
-    open_orders = orders.filter(F.col("o_orderstatus") == "O")
-    return customer.join(
-        open_orders, customer.c_custkey == open_orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name", "c_mktsegment")
-
-
+# Semi join (EXISTS), SURVEY §2.4 absent-op coverage.
 CUSTOMERS_WITH_OPEN_ORDERS_SQL = """
 SELECT c_custkey, c_name, c_mktsegment
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
+FROM {customer} c
+WHERE EXISTS (SELECT 1 FROM {orders} o
               WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
 """
 
 
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join (NOT EXISTS) — SURVEY §2.4 absent-op coverage.
-
-    Right side is filtered to big urgent orders so the anti join is
-    non-vacuous at every SF (a plain no-orders anti join returns zero
-    rows on the dense test data).
-    """
-    customer, orders = load(spark, sf_dir, "customer", "orders")
-    big_urgent = orders.filter(
-        (F.col("o_totalprice") > 200000) & (F.col("o_orderpriority").startswith("1"))
-    )
-    return customer.join(
-        big_urgent, customer.c_custkey == big_urgent.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name", "c_acctbal")
-
-
+# Anti join (NOT EXISTS), SURVEY §2.4; the right side is big urgent
+# orders so the result is non-vacuous at every SF.
 CUSTOMERS_WITHOUT_ORDERS_SQL = """
 SELECT c_custkey, c_name, c_acctbal
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
+FROM {customer} c
+WHERE NOT EXISTS (SELECT 1 FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_totalprice > 200000
                     AND o.o_orderpriority LIKE '1%')
@@ -341,23 +282,11 @@ FROM orders WHERE NOT regexp_matches(o_orderpriority, '^[12]')
 """
 
 
-def order_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation — SURVEY §2.5 absent-op coverage (grouping sets)."""
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("total_price"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "n_orders", "total_price")
-    )
-
-
+# ROLLUP aggregation, SURVEY §2.5 grouping sets.
 ORDER_PRIORITY_ROLLUP_SQL = """
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
-FROM orders
+FROM {orders}
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
@@ -395,28 +324,7 @@ GROUP BY l_suppkey
 """
 
 
-def running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic window functions — running frame + lag (absent in reference).
-
-    rowsBetween(unboundedPreceding, current) running sum per customer,
-    plus lag() of the previous order's price. Decimal arithmetic keeps
-    the running sum exact so the check is order-stable.
-    """
-    orders = table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_orderdate"), F.col("o_orderkey"))
-    dec_price = F.col("o_totalprice").cast("decimal(18,6)")
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.sum(dec_price).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("double")
-        .alias("running_spend"),
-        F.lag(dec_price).over(w).cast("double").alias("prev_price"),
-        F.row_number().over(w).cast("int").alias("order_seq"),
-    )
-
-
+# Running ROWS frame + lag per customer; decimal sums keep it exact.
 RUNNING_ORDER_TOTALS_SQL = """
 SELECT o_custkey, o_orderkey, o_orderdate,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6)))
@@ -425,37 +333,18 @@ SELECT o_custkey, o_orderkey, o_orderdate,
        CAST(LAG(CAST(o_totalprice AS DECIMAL(18,6)))
             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS DOUBLE) AS prev_price,
        CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INTEGER) AS order_seq
-FROM orders
+FROM {orders}
 """
 
 
-def positional_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9/W2 analog — deterministic ORDER BY + OFFSET/LIMIT positional pick.
-
-    The reference picks ``results[position]`` from an S3 listing
-    (s3_poller_document.py:53-54); made explicit as a global top-k with
-    a unique tie-breaker. ``orderBy().limit(k)`` plans as
-    TakeOrderedAndProject — each partition keeps its local top-15 and
-    only k rows reach the driver-side merge, so the plan stays parallel
-    at any scale (no single-partition WindowExec). ``row_number`` then
-    runs on the 15-row result only to derive the position label.
-    """
-    orders = table(spark, sf_dir, "orders")
-    top15 = orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey")).limit(15)
-    w = W.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        top15.withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") > 10)
-        .select("pos", "o_orderkey", "o_totalprice", "o_orderstatus")
-    )
-
-
+# F9/W2 analog: positional pick by a unique global order
+# (s3_poller_document.py:53-54); plans as TakeOrderedAndProject.
 POSITIONAL_PICK_SQL = """
 SELECT pos, o_orderkey, o_totalprice, o_orderstatus
 FROM (
   SELECT ROW_NUMBER() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS pos,
          o_orderkey, o_totalprice, o_orderstatus
-  FROM orders
+  FROM {orders}
 )
 WHERE pos > 10 AND pos <= 15
 """
@@ -504,43 +393,8 @@ FROM keys JOIN customer ON o_custkey = c_custkey
 """
 
 
-def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape — fact⋈dimension join + conditional aggregate.
-
-    Monthly share of revenue from PROMO-type parts: lineitem joins the
-    ``part`` dimension on partkey (shuffle on the join key; at scale
-    ``part`` is mid-sized — AQE picks broadcast vs shuffle), then a
-    conditional decimal sum per ship month. The ratio divides two
-    exact decimal sums cast to double — bit-deterministic.
-
-    The salted-bigint accumulator shape (q01/q94) was A/B-measured
-    here in round 8 and came out a WASH (join + tiny group count
-    dominate; only two sums) — the flat one-exchange form stays.
-    """
-    li, part = load(spark, sf_dir, "lineitem", "part")
-    disc = "cast(l_extendedprice * (1 - l_discount) as decimal(18,6))"
-    promo = (
-        f"CASE WHEN p_type = 'PROMO' THEN {disc}"
-        " ELSE cast(0 as decimal(18,6)) END"
-    )
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy(F.expr("date_trunc('month', l_shipdate)").alias("ship_month"))
-        .agg(
-            F.expr(f"sum({promo}) AS _promo"),
-            F.expr(f"sum({disc}) AS _total"),
-            F.expr("count(1) AS n_items"),
-        )
-        .selectExpr(
-            "ship_month",
-            "cast(_promo as double) * 100 / cast(_total as double)"
-            " AS promo_share_pct",
-            "cast(_total as double) AS total_revenue",
-            "n_items",
-        )
-    )
-
-
+# TPC-H Q14 shape: fact-dimension join + conditional decimal sum per
+# ship month (the salted form measured a wash here).
 PROMO_REVENUE_SHARE_SQL = """
 SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
        CAST(SUM(CASE WHEN p_type = 'PROMO'
@@ -551,78 +405,33 @@ SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
        CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
          AS total_revenue,
        COUNT(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
+FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
 GROUP BY 1
 """
 
 
-def nation_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Physical INTERSECT / EXCEPT ALL coverage (§2.7) on bounded dims.
-
-    Nations that have both customers and suppliers, minus the nations
-    of region 0 — real set-operator nodes (hash-aggregate based) over
-    key sets whose cardinality is bounded (≤25 at any SF), so the
-    set-op shuffles never grow with the data; the big tables contribute
-    only a distinct-key projection each.
-    """
-    customer, supplier, nation = load(spark, sf_dir, "customer", "supplier", "nation")
-    cust_nations = customer.select(F.col("c_nationkey").alias("nationkey")).distinct()
-    supp_nations = supplier.select(F.col("s_nationkey").alias("nationkey")).distinct()
-    region0 = nation.filter(F.col("n_regionkey") == 0).select(
-        F.col("n_nationkey").alias("nationkey")
-    )
-    keys = cust_nations.intersect(supp_nations).exceptAll(region0)
-    return keys.join(nation, keys.nationkey == nation.n_nationkey).select(
-        F.col("n_nationkey").alias("nationkey"),
-        F.col("n_name").alias("nation_name"),
-    )
-
-
+# Physical INTERSECT / EXCEPT ALL (§2.7) over bounded (<=25) key sets.
 NATION_SET_OPS_SQL = """
 WITH keys AS (
-  (SELECT DISTINCT c_nationkey AS nationkey FROM customer
+  (SELECT DISTINCT c_nationkey AS nationkey FROM {customer}
    INTERSECT
-   SELECT DISTINCT s_nationkey FROM supplier)
+   SELECT DISTINCT s_nationkey FROM {supplier})
   EXCEPT ALL
-  SELECT n_nationkey FROM nation WHERE n_regionkey = 0
+  SELECT n_nationkey FROM {nation} WHERE n_regionkey = 0
 )
 SELECT n_nationkey AS nationkey, n_name AS nation_name
-FROM keys JOIN nation ON nationkey = n_nationkey
+FROM keys JOIN {nation} ON nationkey = n_nationkey
 """
 
 
-def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling window agg (SURVEY §2.10) — batch-expressible.
-
-    In streaming this is ``groupBy(window("ts", "1 hour"))`` with a
-    watermark (see streaming/); epoch-aligned hourly windows equal
-    date_trunc('hour') so the DuckDB oracle can check it.
-    """
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-            F.countDistinct("user_id").alias("distinct_users"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-            "distinct_users",
-        )
-    )
-
-
+# Event-time tumbling hour windows (SURVEY §2.10), batch form.
 EVENTS_TUMBLING_WINDOW_SQL = """
 SELECT date_trunc('hour', ts) AS window_start,
        event_type,
        COUNT(*) AS n_events,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
        COUNT(DISTINCT user_id) AS distinct_users
-FROM events
+FROM {events}
 GROUP BY 1, 2
 """
 
@@ -667,36 +476,8 @@ GROUP BY 1, 2
 SESSION_GAP_MIN = 30
 
 
-def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (§2.10) — {SESSION_GAP_MIN}-minute inactivity gap
-    per user.
-
-    ``session_window(ts, gap)`` merges events whose gaps stay under the
-    threshold — in streaming the same expression runs stateful with a
-    watermark. The oracle is the classic gaps-and-islands rewrite
-    (lag → new-session flag → running sum), an independent derivation
-    of the same sessions. Shuffles: one on user_id (the session merge),
-    one on the output group — both keyed, both partial-agg'd.
-    """
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"), "user_id"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
+# Session windows (§2.10) as gaps-and-islands: a new session starts
+# after a gap longer than SESSION_GAP_MIN minutes.
 EVENTS_SESSION_WINDOW_SQL = f"""
 WITH ordered AS (
   SELECT user_id, ts, value,
@@ -704,7 +485,7 @@ WITH ordered AS (
                    > INTERVAL {SESSION_GAP_MIN} MINUTE
               OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
               THEN 1 ELSE 0 END AS new_session
-  FROM events
+  FROM {{events}}
 ),
 sessions AS (
   SELECT user_id, ts, value,
@@ -722,70 +503,24 @@ GROUP BY user_id, session_id
 """
 
 
-def order_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation — SURVEY §2.5 grouping-sets coverage (with q08's
-    ROLLUP this closes the cube/rollup/GROUPING SETS family).
-
-    CUBE(a, b) = all four grouping sets; Spark plans it as a single
-    Expand (4 projections) + one hash aggregate — one shuffle on the
-    padded keys, same cost shape as ROLLUP plus the (b)-only set.
-    """
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("total_price"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "n_orders", "total_price")
-    )
-
-
+# CUBE aggregation: one Expand + one hash aggregate (with q08 and q60,
+# the grouping-sets family).
 ORDER_STATUS_CUBE_SQL = """
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
-FROM orders
+FROM {orders}
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 
-def segment_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct — SURVEY §2.5's at-scale distinct counting.
-
-    Exact per-segment distinct customers PLUS a determinism-safe check
-    that the HLL estimate lands within 10% of the exact count. The
-    sketch values themselves differ between engines (different HLL
-    implementations), so the oracle-checked columns are the exact count
-    and the tolerance verdict — both engines assert their OWN estimate
-    against the SAME exact value. At 100 TB the exact distinct is the
-    expensive side (full shuffle on the key); approx_count_distinct is
-    one map-side sketch merge, no distinct shuffle — the production
-    default when ±2% error is acceptable.
-    """
-    cust = table(spark, sf_dir, "customer")
-    return (
-        cust.groupBy("c_mktsegment")
-        .agg(
-            F.countDistinct("c_custkey").alias("exact_customers"),
-            F.approx_count_distinct("c_custkey").alias("_approx"),
-        )
-        .select(
-            "c_mktsegment",
-            "exact_customers",
-            (
-                F.abs(F.col("_approx") - F.col("exact_customers"))
-                <= 0.1 * F.col("exact_customers")
-            ).alias("approx_within_10pct"),
-        )
-    )
-
-
+# approx_count_distinct checked against the exact count: engines'
+# sketches differ, so only the within-10% verdict is compared.
 SEGMENT_DISTINCT_CUSTOMERS_SQL = """
 SELECT c_mktsegment,
        COUNT(DISTINCT c_custkey) AS exact_customers,
        abs(approx_count_distinct(c_custkey) - COUNT(DISTINCT c_custkey))
          <= 0.1 * COUNT(DISTINCT c_custkey) AS approx_within_10pct
-FROM customer
+FROM {customer}
 GROUP BY c_mktsegment
 """
 
@@ -1046,146 +781,39 @@ GROUP BY o_orderpriority
 """
 
 
-def status_priority_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS via the SQL surface — completes §2.5's grouping
-    family (q08 rollup, q52 cube) and exercises ``spark.sql`` itself:
-    every other query drives the DataFrame API, but a reference user
-    migrating raw SQL needs the SQL entry point to plan identically —
-    Catalyst compiles both to the same Expand + hash aggregate.
-
-    The two explicit sets ((status), (priority)) are the cube minus
-    the (status, priority) and () sets — exactly what GROUPING SETS
-    expresses and rollup/cube cannot. Source keys are non-null, so the
-    padded NULLs unambiguously tag each output row's set.
-
-    The DataFrame is passed as a PARAMETER of ``spark.sql`` rather
-    than registered under a fixed temp-view name: temp views are
-    session-global across threads, so ``createOrReplaceTempView(
-    "orders_v")`` raced when two threads ran this query against
-    different sf_dirs concurrently (one thread's view silently
-    replaced the other's input mid-plan — tests/
-    test_concurrent_queries.py pins the fix). The parameterized form
-    substitutes the exact DataFrame with an internally unique name
-    and leaves nothing in the catalog.
-    """
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-                 AS total_price
-        FROM {orders_v}
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """,
-        orders_v=table(spark, sf_dir, "orders"),
-    )
-
-
+# GROUPING SETS ((status), (priority)): the cube minus two of its sets.
+# Source keys are non-null, so the padded NULLs tag each row's set.
 STATUS_PRIORITY_GROUPING_SETS_SQL = """
 SELECT o_orderstatus, o_orderpriority,
        COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
-FROM orders
+FROM {orders}
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
 """
 
 
-def small_quantity_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape — scalar-subquery-per-group via join-back.
-
-    Revenue from line items whose quantity is below half their part's
-    average quantity, per brand. The correlated scalar subquery
-    (``WHERE l_quantity < 0.5 * (SELECT avg .. WHERE same part)``)
-    decorrelates into: per-part average (one shuffle on l_partkey with
-    map-side partial agg), joined back to lineitem on the SAME key —
-    AQE reuses the agg's partitioning so lineitem shuffles once, and
-    the per-part frame rides that exchange. The ``part`` dim join for
-    the brand label is broadcast (SKU catalogs are broadcast-sized even
-    at 100 TB fact scale). Averages divide exact decimal sums by
-    counts — bit-deterministic.
-
-    The hot accumulator is integer-quantized (q01/q94 discipline): the
-    per-part quantity sum — the one that runs over the FULL fact scan —
-    sums as BIGINT ten-thousandths. Per-part line counts are bounded
-    (~30 at ANY scale factor: lineitem and part grow together in
-    TPC-H-shaped data), so a long can never overflow and no salt is
-    needed; the sum re-casts to the exact decimal(28,4) the flat
-    decimal sum produced before the average divides, so every avg_qty
-    double is bit-identical. The brand-level revenue sum stays a plain
-    decimal accumulator: it reads only the ~quarter of rows surviving
-    the threshold, and brand groups GROW with the data — a bigint
-    there would eventually overflow and need its own salt level for no
-    measurable win.
-    """
-    li, part = load(spark, sf_dir, "lineitem", "part")
-    q4 = (_dec(F.col("l_quantity"), 4) * 10000).cast("bigint")
-    per_part = li.groupBy("l_partkey").agg(
-        (
-            (F.sum(q4).cast("decimal(28,0)") / 10000).cast("decimal(28,4)")
-            / F.count(F.lit(1))
-        )
-        .cast("double")
-        .alias("avg_qty")
-    )
-    return (
-        li.join(per_part, "l_partkey")
-        .where(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.sum(_dec(F.col("l_extendedprice"))).cast("double").alias("small_qty_revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
+# TPC-H Q17 shape: the correlated per-part threshold decorrelated into
+# a per-part aggregate joined back on the equi key.
 SMALL_QUANTITY_BRAND_REVENUE_SQL = """
 WITH per_part AS (
   SELECT l_partkey,
          CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
            AS avg_qty
-  FROM lineitem GROUP BY l_partkey
+  FROM {lineitem} GROUP BY l_partkey
 )
 SELECT p_brand,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
          AS small_qty_revenue,
        COUNT(*) AS n_items
-FROM lineitem
+FROM {lineitem}
 JOIN per_part USING (l_partkey)
-JOIN part ON l_partkey = p_partkey
+JOIN {part} ON l_partkey = p_partkey
 WHERE l_quantity < 0.5 * avg_qty
 GROUP BY p_brand
 """
 
 
-def acctbal_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window distribution functions — ntile/percent_rank (absent-op).
-
-    Deciles of customer account balance within each market segment,
-    summarized per (segment, decile). The window sorts each segment
-    once (one shuffle on the segment key); ties broken by c_custkey so
-    both engines assign identical ranks. Scale note: an exact global
-    rank needs the segment sort — at 100 TB prefer approx_percentile
-    buckets (q59's exact/approx split) unless true ranks are required;
-    segments here are few, so the guard is the summary (decile-sized
-    output), not the rank itself.
-    """
-    cust = table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    ranked = cust.select(
-        "c_mktsegment",
-        "c_acctbal",
-        F.ntile(10).over(w).alias("decile"),
-        F.percent_rank().over(w).alias("pr"),
-    )
-    return ranked.groupBy("c_mktsegment", "decile").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.min("c_acctbal").alias("min_bal"),
-        F.max("c_acctbal").alias("max_bal"),
-        F.max("pr").alias("max_percent_rank"),
-    )
-
-
+# ntile / percent_rank per segment, summarized per (segment, decile).
 ACCTBAL_DECILES_SQL = """
 WITH ranked AS (
   SELECT c_mktsegment, c_acctbal,
@@ -1193,7 +821,7 @@ WITH ranked AS (
                          ORDER BY c_acctbal, c_custkey) AS decile,
          percent_rank() OVER (PARTITION BY c_mktsegment
                               ORDER BY c_acctbal, c_custkey) AS pr
-  FROM customer
+  FROM {customer}
 )
 SELECT c_mktsegment, decile,
        COUNT(*) AS n_customers,
@@ -1205,6 +833,9 @@ GROUP BY c_mktsegment, decile
 """
 
 
+# Keeps its builder: the oracle text plans without the 2-bucket Generate
+# that turns the range join into an equi-join, and fails
+# tests/test_plan_quality.py::test_q68_interval_join_is_bucketed_equi_join.
 def click_purchase_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join (absent-op): clicks within 10 min before a purchase.
 
@@ -1303,44 +934,13 @@ GROUP BY o_orderpriority
 """
 
 
-def top_brand_per_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ARGMAX aggregate (absent-op): best-revenue brand per part size.
-
-    Two-level aggregate: revenue per (size, brand) — one shuffle with
-    map-side combine — then ``max_by`` keyed on an exact (revenue,
-    brand) struct picks the winning brand per size. The struct key
-    makes ties deterministic (higher brand name wins) and the decimal
-    revenue keeps the comparison exact; the second aggregate runs on
-    the |sizes × brands|-bounded frame, never the fact table. The
-    oracle mirrors max_by with a rank-1 window — same winner by
-    construction.
-    """
-    li, part = load(spark, sf_dir, "lineitem", "part")
-    per = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_size", "p_brand")
-        .agg(F.sum(_dec(F.col("l_extendedprice"))).alias("_rev"))
-    )
-    return (
-        per.groupBy("p_size")
-        .agg(
-            F.max_by(
-                "p_brand", F.struct(F.col("_rev"), F.col("p_brand"))
-            ).alias("top_brand"),
-            F.max(F.struct(F.col("_rev"), F.col("p_brand")))
-            .getField("_rev")
-            .cast("double")
-            .alias("top_revenue"),
-            F.count(F.lit(1)).alias("n_brands"),
-        )
-    )
-
-
+# ARGMAX: best-revenue brand per part size over the bounded
+# (size, brand) aggregate; higher brand name wins ties.
 TOP_BRAND_PER_SIZE_SQL = """
 WITH per AS (
   SELECT p_size, p_brand,
          SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS rev
-  FROM lineitem JOIN part ON l_partkey = p_partkey
+  FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
   GROUP BY p_size, p_brand
 ),
 ranked AS (
@@ -1557,35 +1157,8 @@ WINDOW w_price AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC),
 """
 
 
-def order_distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution window functions — cume_dist / percent_rank /
-    nth_value / first_value / last_value (SURVEY §2.8 absent-op
-    breadth; completes the window family beyond rank/lead (q77),
-    ntile (q67), ROWS (q10) and RANGE (q57) frames).
-
-    One window partitioning (o_orderpriority, ordered by
-    (o_totalprice, o_orderkey) — the unique tie-break keeps every
-    distribution value deterministic) serves all five functions, so
-    the physical plan is ONE hash exchange + ONE sort; the frame
-    variants (running for nth_value, whole-partition for last_value)
-    reuse the sorted partition. Scale: priority cardinality is 5 —
-    coarse partitions, but each window group streams; no global sort.
-    """
-    orders = table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    w_all = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    return orders.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.cume_dist().over(w).alias("price_cume_dist"),
-        F.percent_rank().over(w).alias("price_percent_rank"),
-        F.nth_value("o_orderkey", 3).over(w_run).alias("third_cheapest_so_far"),
-        F.first_value("o_orderkey").over(w_all).alias("cheapest_in_priority"),
-        F.last_value("o_orderkey").over(w_all).alias("priciest_in_priority"),
-    )
-
-
+# cume_dist / percent_rank / nth_value / first_value / last_value over
+# one (priority, price) ordering: one exchange, one sort.
 ORDER_DISTRIBUTION_WINDOWS_SQL = """
 SELECT o_orderkey, o_orderpriority,
        cume_dist() OVER w AS price_cume_dist,
@@ -1596,7 +1169,7 @@ SELECT o_orderkey, o_orderpriority,
        ) AS third_cheapest_so_far,
        first_value(o_orderkey) OVER w_all AS cheapest_in_priority,
        last_value(o_orderkey) OVER w_all AS priciest_in_priority
-FROM orders
+FROM {orders}
 WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey),
        w_all AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
@@ -1611,52 +1184,16 @@ PREMIUM_CUST_BAL = 9700.0
 FLUSH_SUPP_BAL = 5000.0
 
 
-def nation_presence_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join reconcile (SURVEY §2.6 absent-op breadth — the
-    one outer-join flavor no other query exercises).
-
-    Two independently-aggregated per-nation frames (premium customers,
-    flush suppliers) reconciled with a full outer join: nations present
-    on either side survive, missing sides null-extend, and the
-    presence flag trichotomizes (both / cust_only / supp_only). Plan:
-    two partial-agg shuffles on nationkey, then the outer join
-    co-locates on the same key — with AQE the small aggregated sides
-    hash-join without an extra exchange. At 100 TB the aggregates are
-    nation-bounded (tiny); the pattern generalizes to any two
-    fact-derived rollups reconciled on a shared dimension key.
-    """
-    cust, supp = load(spark, sf_dir, "customer", "supplier")
-    c = (
-        cust.filter(F.col("c_acctbal") > PREMIUM_CUST_BAL)
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_premium_cust"))
-    )
-    s = (
-        supp.filter(F.col("s_acctbal") > FLUSH_SUPP_BAL)
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_flush_supp"))
-    )
-    joined = c.join(s, "nationkey", "full_outer")
-    return joined.select(
-        "nationkey",
-        F.coalesce("n_premium_cust", F.lit(0)).alias("n_premium_cust"),
-        F.coalesce("n_flush_supp", F.lit(0)).alias("n_flush_supp"),
-        F.when(F.col("n_premium_cust").isNotNull() & F.col("n_flush_supp").isNotNull(), "both")
-        .when(F.col("n_premium_cust").isNotNull(), "cust_only")
-        .otherwise("supp_only")
-        .alias("presence"),
-    )
-
-
+# FULL OUTER join of two per-nation aggregates (SURVEY §2.6).
 NATION_PRESENCE_RECONCILE_SQL = f"""
 WITH c AS (
   SELECT c_nationkey AS nationkey, CAST(COUNT(*) AS BIGINT) AS n_premium_cust
-  FROM customer WHERE c_acctbal > {PREMIUM_CUST_BAL}
+  FROM {{customer}} WHERE c_acctbal > {PREMIUM_CUST_BAL}
   GROUP BY c_nationkey
 ),
 s AS (
   SELECT s_nationkey AS nationkey, CAST(COUNT(*) AS BIGINT) AS n_flush_supp
-  FROM supplier WHERE s_acctbal > {FLUSH_SUPP_BAL}
+  FROM {{supplier}} WHERE s_acctbal > {FLUSH_SUPP_BAL}
   GROUP BY s_nationkey
 )
 SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
@@ -3526,39 +3063,13 @@ GROUP BY o_orderpriority
 """
 
 
-def monthly_revenue_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Period-over-period reporting — monthly revenue per priority with
-    month-over-month deltas and percent change (the standard finance/
-    growth dashboard query).
-
-    One month-grain aggregate (map-side combined), one lag window per
-    priority over the ~|months| rows. Revenue is an exact decimal sum
-    surfaced as double; the MoM ratio divides two such exact values,
-    so the doubles are engine-identical. Months without a predecessor
-    report NULL change — no sentinel values.
-    """
-    o = table(spark, sf_dir, "orders")
-    month = F.date_trunc("month", F.col("o_orderdate")).cast("date")
-    monthly = o.groupBy(F.col("o_orderpriority"), month.alias("month")).agg(
-        F.sum(_dec(F.col("o_totalprice"), 4)).cast("double").alias("revenue")
-    )
-    w = W.partitionBy("o_orderpriority").orderBy("month")
-    prev = F.lag("revenue", 1).over(w)
-    return monthly.select(
-        "o_orderpriority",
-        "month",
-        "revenue",
-        prev.alias("prev_revenue"),
-        ((F.col("revenue") - prev) / prev).alias("mom_change"),
-    )
-
-
+# Month-over-month revenue per priority; no predecessor gives NULL.
 MONTHLY_REVENUE_MOMENTUM_SQL = """
 WITH monthly AS (
   SELECT o_orderpriority,
          CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-  FROM orders
+  FROM {orders}
   GROUP BY 1, 2
 )
 SELECT o_orderpriority, month, revenue,

@@ -31,7 +31,8 @@ the whole thing is ONE routed frame per batch, not three pipelines:
 
 Every stage is the operator or expression builder already exercised
 by the oracle-checked queries — C2/C3 (q14), W1 (q16), the port pass
-(q31-q33), C10/C11 (q17, in ``merge_metadata``), the K3 body (q35) —
+(q31-q33), the C5 text key (q37, in ``stage_text_artifacts``), C10/C11
+(q17, in ``merge_metadata``), the K3 body (q35) —
 and this module only composes them, like the reference's graph wires
 its nodes. Scale: routing is a ``CASE`` over one scan (no shuffle, no
 per-flow branches); the only shuffles are the port's fan-out, the
@@ -51,6 +52,7 @@ from sbs_suptech_etl_v2_spark.operators.jsonops import notification_body_sql
 from sbs_suptech_etl_v2_spark.sinks.writers import (
     NotificationBatchWriter,
     merge_metadata,
+    stage_text_artifacts,
     write_text_artifacts,
 )
 
@@ -147,8 +149,7 @@ def run_document_etl(
     ok = batch.filter(F.col("success"))
     # K1 — text artifacts from the executors, then F8 content drop
     write_text_artifacts(
-        ok.select("record_id", F.col("document_content_total").alias("content")),
-        lake_dir,
+        stage_text_artifacts(ok, "record_id", "document_content_total"), lake_dir
     )
     # K2 — merge the stringified metadata into the lake table
     merge_metadata(spark, f"{lake_dir}/metadata", _metadata_map(ok))

@@ -5,6 +5,7 @@ the same observable semantics:
 
 - **K1 S3 text-object sink** — one ``txt/{record_id}.txt`` object per
   row (s3_loader_document.py:17-18; key format workflow_polizas.py:85).
+  ``stage_text_artifacts`` projects the key, and
   ``write_text_artifacts`` writes one file per row from the executors
   via ``foreachPartition`` — no driver collect; against S3 the same
   code runs with an s3:// filesystem or a boto3 client per partition.
@@ -51,20 +52,20 @@ METADATA_SCHEMA = "record_id string, metadata map<string,string>"
 def write_text_artifacts(df: DataFrame, out_dir: str) -> None:
     """K1 — one text object per row, written from the executors.
 
-    ``df`` must carry ``record_id`` and ``content`` columns; each row
-    becomes ``{out_dir}/txt/{record_id}.txt`` (the reference's key
-    format, C5). ``foreachPartition`` keeps the write distributed —
-    the driver never sees row data; with S3 the open() becomes a
-    put_object on a per-partition client.
+    ``df`` is the K1 sink contract ``stage_text_artifacts`` projects
+    (``record_id``, ``s3_key``, ``content``); each row becomes
+    ``{out_dir}/{s3_key}``, so the key is the C5 format q37 checks
+    (``txt/{record_id}.txt``) and has no second form here.
+    ``foreachPartition`` keeps the write distributed — the driver never
+    sees row data; with S3 the open() becomes a put_object on a
+    per-partition client.
 
     A ``record_id`` that cannot name a file inside ``txt/`` — NULL,
     empty, ``.``/``..``, or holding a path separator — raises
     ``ValueError`` before that row's file is opened: ids come from
     outside input, and ``../x`` would write outside the sink.
     """
-    target = os.path.join(out_dir, "txt")
-    os.makedirs(target, exist_ok=True)
-    rows = df.select("record_id", "content")
+    rows = df.select("record_id", "s3_key", "content")
     separators = {"/", os.sep}
 
     def write_partition(it: Iterator[Row]) -> None:
@@ -73,7 +74,8 @@ def write_text_artifacts(df: DataFrame, out_dir: str) -> None:
             name = "" if rid is None else str(rid)
             if name in ("", ".", "..") or any(s in name for s in separators):
                 raise ValueError(f"record_id {rid!r} cannot name a text artifact")
-            path = os.path.join(target, f"{name}.txt")
+            path = os.path.join(out_dir, row["s3_key"])
+            os.makedirs(os.path.dirname(path), exist_ok=True)
             with open(path, "w", encoding="utf-8") as fh:
                 fh.write(row["content"] if row["content"] is not None else "")
 

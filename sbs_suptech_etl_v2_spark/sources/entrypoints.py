@@ -11,8 +11,8 @@
   ``"{Month} {Year}"`` folder into period columns with a positional
   pick option (s3_poller_document.py:14-55). Spark-first: a
   ``binaryFile`` scan with ``pathGlobFilter`` (partition-pruned listing
-  at the source, F1/F2 pushed into the scan) + ``input_file_name()``
-  path decomposition (F7) + C2/C3 refinements. Works identically over
+  at the source, F1/F2 pushed into the scan) + decomposition of the
+  scan's ``path`` column (F7) + C2/C3 refinements. Works identically over
   ``s3a://bucket/prefix`` and local paths.
 """
 
@@ -83,8 +83,10 @@ def listing_scan(
         .option("recursiveFileLookup", "true")
         .load(f"{root}/{prefix}")
     )
-    # input_file_name() is URL-encoded ("Mayo%202023") — decode before parsing
-    key = "url_decode(regexp_replace(input_file_name(), '^file:/*|^s3a://', ''))"
+    # binaryFile's own ``path`` column is the listed path as written
+    # ("Mayo 2023/a+b.pdf"); input_file_name() is URL-encoded, and
+    # url_decode turns its '+' into a space
+    key = "regexp_replace(path, '^file:/*|^s3a://', '')"
     quoted = sql_quote_literal(prefix)
     rel = f"substring_index({key}, '/{quoted}/', -1)"
     parts = f"split({rel}, '/')"

@@ -61,3 +61,17 @@ def test_q60_concurrent_across_sf_dirs_reads_its_own_input(
             }
             got = {d: f.result() for d, f in futures.items()}
         assert got == expected
+
+
+def test_new_session_reads_its_own_tables(spark, sf_dir):
+    """A ``newSession()`` builds on tables read by itself, not on the
+    DataFrames its parent session cached: the ``spark.sql`` parameter
+    views resolve in its own catalog, and its own configuration (AQE
+    off) plans the query."""
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    for name in ("q60_grouping_sets", "q83_nation_presence"):
+        expected = _rows(spark, name, sf_dir)  # the parent reads sf_dir first
+        df = QUERIES[name](s2, sf_dir)
+        assert "AdaptiveSparkPlan" not in df._jdf.queryExecution().executedPlan().toString()
+        assert _rows(s2, name, sf_dir) == expected

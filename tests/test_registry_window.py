@@ -21,6 +21,9 @@ WINDOW_SIZE = 50
 # except the paths changed since r18, which lead (slots 1-20); then
 # q01-q13 (slots 21-33), never re-verified since their first verdict;
 # then the r18 "left for round 19" list in numeric order (slots 34-50).
+# When 20 relational queries became one SQL text, the eight of them
+# not yet seated took the seats of slots 34-50's highest-numbered
+# unchanged entries (q38, q39, q42, q43, q45, q48, q54, q55).
 # The full reasoning sits in registry.py's ordering note.
 # Update this literal TOGETHER with registry.py each rotation.
 ROTATION = [
@@ -62,24 +65,25 @@ ROTATION = [
     "q11_positional_pick",
     "q12_set_ops",
     "q13_events_tumbling",
-    # slots 34-50: the r18 "left for round 19" list (numeric order)
+    # slots 34-50, numeric order: the one-text queries not seated
+    # above and the r18 "left for round 19" entries still seated
     "q27_token_topk",
     "q28_tfidf_top_terms",
     "q34_blocks_page_text",
     "q35_notification_encode",
     "q37_artifact_keys",
-    "q38_image_features",
-    "q39_frame_sample",
     "q40_nation_set_ops",
-    "q42_token_counts",
-    "q43_notification_ids",
-    "q45_events_sliding",
     "q46_events_session",
-    "q48_props_decode",
+    "q49_promo_revenue",
     "q52_status_cube",
     "q53_approx_distinct",
-    "q54_purchase_asof_click",
-    "q55_image_resize",
+    "q60_grouping_sets",
+    "q66_small_qty_revenue",
+    "q67_acctbal_deciles",
+    "q70_brand_argmax",
+    "q82_distribution_windows",
+    "q83_nation_presence",
+    "q120_monthly_momentum",
 ]
 
 

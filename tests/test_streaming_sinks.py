@@ -143,6 +143,23 @@ def test_listing_scan_quoted_prefix_and_file_under_prefix(spark, tmp_path):
     )
 
 
+def test_listing_scan_keeps_plus_and_percent_in_names(spark, tmp_path):
+    """Keys are the listed paths as written: a '+' is not a URL-encoded
+    space, and a literal '%20' is not decoded either."""
+    folder = tmp_path / "bucket" / "Polizas" / "Mayo 2023"
+    folder.mkdir(parents=True)
+    (folder / "a+b.pdf").write_bytes(b"%PDF-1.4 plus")
+    (folder / "c%20d.pdf").write_bytes(b"%PDF-1.4 percent")
+
+    rows = {r["key"]: r for r in listing_scan(spark, str(tmp_path / "bucket"), "Polizas").collect()}
+    assert sorted(rows) == ["Mayo 2023/a+b.pdf", "Mayo 2023/c%20d.pdf"]
+    assert rows["Mayo 2023/a+b.pdf"]["basename"] == "a+b.pdf"
+    assert rows["Mayo 2023/c%20d.pdf"]["basename"] == "c%20d.pdf"
+    assert (rows["Mayo 2023/a+b.pdf"]["period_month"], rows["Mayo 2023/a+b.pdf"]["period_year"]) == (
+        "5", "2023",
+    )
+
+
 def test_write_text_artifacts_one_file_per_row(spark, tmp_path):
     df = spark.createDataFrame(
         [("r1", "hola"), ("r2", "mundo"), ("r3", None)],
@@ -151,7 +168,7 @@ def test_write_text_artifacts_one_file_per_row(spark, tmp_path):
     staged = stage_text_artifacts(df, "record_id", "content")
     assert staged.columns == ["record_id", "s3_key", "content"]
     assert staged.filter(F.col("s3_key") == "txt/r1.txt").count() == 1
-    write_text_artifacts(df, str(tmp_path))
+    write_text_artifacts(staged, str(tmp_path))
     txt = tmp_path / "txt"
     assert sorted(p.name for p in txt.iterdir()) == ["r1.txt", "r2.txt", "r3.txt"]
     assert (txt / "r1.txt").read_text() == "hola"
@@ -168,7 +185,7 @@ def test_write_text_artifacts_rejects_unsafe_record_ids(spark, tmp_path, record_
     out = tmp_path / "out"
     df = spark.createDataFrame([(record_id, "x")], "record_id string, content string")
     with pytest.raises(Exception, match=f"ValueError: record_id {shown}"):
-        write_text_artifacts(df.coalesce(1), str(out))
+        write_text_artifacts(stage_text_artifacts(df, "record_id", "content").coalesce(1), str(out))
     assert sorted(p.name for p in tmp_path.rglob("*") if p.is_file()) == []
 
 
