@@ -24,6 +24,10 @@ WINDOW_SIZE = 50
 # When 20 relational queries became one SQL text, the eight of them
 # not yet seated took the seats of slots 34-50's highest-numbered
 # unchanged entries (q38, q39, q42, q43, q45, q48, q54, q55).
+# When five more (q69, q98, q106, q116, q119) became one text and q76's
+# plan changed, the six took the seats of the window's six
+# highest-numbered entries that changed neither since r18 nor into one
+# text (q34, q28, q27, q12, q09, q07).
 # The full reasoning sits in registry.py's ordering note.
 # Update this literal TOGETHER with registry.py each rotation.
 ROTATION = [
@@ -51,25 +55,19 @@ ROTATION = [
     "q25_embedding_neardup",
     "q41_ann_bucketed_topk",
     "q90_ann_recall_audit",
-    # slots 21-33: q01-q13
+    # slots 21-30: q01-q13 less q07, q09 and q12
     "q01_pricing_summary",
     "q02_metadata_lookup_join",
     "q03_top_orders_per_customer",
     "q04_semi_join_open_orders",
     "q05_anti_join_no_orders",
     "q06_revenue_by_nation",
-    "q07_branch_union",
     "q08_priority_rollup",
-    "q09_distinct_agg",
     "q10_running_window",
     "q11_positional_pick",
-    "q12_set_ops",
     "q13_events_tumbling",
-    # slots 34-50, numeric order: the one-text queries not seated
-    # above and the r18 "left for round 19" entries still seated
-    "q27_token_topk",
-    "q28_tfidf_top_terms",
-    "q34_blocks_page_text",
+    # slots 31-50, numeric order: the one-text queries not seated
+    # above, q76 and the changed document builders q35 and q37
     "q35_notification_encode",
     "q37_artifact_keys",
     "q40_nation_set_ops",
@@ -80,9 +78,15 @@ ROTATION = [
     "q60_grouping_sets",
     "q66_small_qty_revenue",
     "q67_acctbal_deciles",
+    "q69_status_pivot",
     "q70_brand_argmax",
+    "q76_session_paths",
     "q82_distribution_windows",
     "q83_nation_presence",
+    "q98_user_snapshot_diff",
+    "q106_idle_rich_customers",
+    "q116_cumulative_distinct",
+    "q119_incremental_totals",
     "q120_monthly_momentum",
 ]
 

@@ -848,9 +848,7 @@ def test_cohort_retention_matches_transcription(spark, tmp_path):
 
 
 def test_cumulative_distinct_matches_naive_set_union(spark, tmp_path):
-    from sbs_suptech_etl_v2_spark.operators.relational import (
-        cumulative_distinct_users,
-    )
+    from sbs_suptech_etl_v2_spark.registry import QUERIES
 
     rng = random.Random(17)
     rows = []
@@ -892,7 +890,7 @@ def test_cumulative_distinct_matches_naive_set_union(spark, tmp_path):
 
     got = {
         (r["event_type"], r["day"]): (r["new_users"], r["cumulative_users"])
-        for r in cumulative_distinct_users(spark, sf).collect()
+        for r in QUERIES["q116_cumulative_distinct"](spark, sf).collect()
     }
     assert got == expect
     # the planted flat-day case actually occurred (otherwise the test

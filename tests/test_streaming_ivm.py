@@ -1,10 +1,10 @@
 """Streaming ⇔ batch ⇔ oracle equivalence for incremental view
 maintenance (§2.10 × q119).
 
-The same additive merge law has three implementations: q119's batch
-state ⊕ delta, the foreachBatch streaming maintainer over N
-micro-batches, and the oracle's single-pass recompute. All three must
-produce identical rows; a replayed epoch must not double-count.
+The foreachBatch streaming maintainer applies the additive merge law
+(state ⊕ delta) over N micro-batches; its view must equal q119's one
+text, the single-pass recompute that Spark and the DuckDB oracle both
+run. A replayed epoch must not double-count.
 """
 
 from __future__ import annotations
@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.io import table
 from sbs_suptech_etl_v2_spark.operators.relational import (
-    incremental_priority_totals,
     incremental_totals_batch_fn,
     read_incremental_totals,
 )
+from sbs_suptech_etl_v2_spark.registry import QUERIES
 from sbs_suptech_etl_v2_spark.streaming.ingress import (
     foreach_batch_pipeline,
     stop_quietly,
@@ -30,7 +30,7 @@ def _rows(df):
     )
 
 
-def test_streaming_view_equals_batch_ivm_and_full_recompute(spark, sf_dir, tmp_path):
+def test_streaming_view_equals_full_recompute(spark, sf_dir, tmp_path):
     orders = table(spark, sf_dir, "orders")
     in_dir = str(tmp_path / "in")
     # three arrival waves by order-date thirds
@@ -63,8 +63,8 @@ def test_streaming_view_equals_batch_ivm_and_full_recompute(spark, sf_dir, tmp_p
     stop_quietly(q, timeout_s=300)
 
     streaming_view = _rows(read_incremental_totals(spark, contrib))
-    batch_ivm = _rows(incremental_priority_totals(spark, sf_dir))
-    assert streaming_view == batch_ivm
+    full_recompute = _rows(QUERIES["q119_incremental_totals"](spark, sf_dir))
+    assert streaming_view == full_recompute
     # and >1 epoch actually contributed
     n_epochs = (
         spark.read.parquet(contrib).select("ingest_batch").distinct().count()
