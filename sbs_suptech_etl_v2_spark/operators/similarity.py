@@ -319,10 +319,12 @@ def _unit(vecs: DataFrame) -> DataFrame:
     Works at any dimension (q107 feeds 16-wide truncations).
 
     Kernel inputs deliberately do NOT ``spread()``: each python task
-    pays a fixed worker/Arrow handshake, so 32 micro-partitions of a
-    2,400-row table cost ~30× the overhead of one vectorized batch
-    (measured: spread+kernel burned MORE total CPU than the HOF chain
-    it replaced; unspread it is ~4× less). On a production lake the
+    pays a fixed per-task cost, so 32 micro-partitions of a 2,400-row
+    table cost ~30× the overhead of one vectorized batch (measured:
+    spread+kernel burned MORE total CPU than the HOF chain it
+    replaced; unspread it is ~4× less). ~100 ms of that cost was the
+    zip-archive re-read in ``importlib.invalidate_caches()`` that
+    ``worker_daemon`` now skips, so the rule wants re-measuring. On a production lake the
     scan already arrives many-partitioned and the same per-partition
     batching amortizes naturally.
     """
