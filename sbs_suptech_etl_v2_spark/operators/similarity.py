@@ -324,9 +324,9 @@ def _unit(vecs: DataFrame) -> DataFrame:
     spread+kernel burned MORE total CPU than the HOF chain it
     replaced; unspread it is ~4× less). ~100 ms of that cost was the
     zip-archive re-read in ``importlib.invalidate_caches()`` that
-    ``worker_daemon`` now skips, so the rule wants re-measuring. On a production lake the
-    scan already arrives many-partitioned and the same per-partition
-    batching amortizes naturally.
+    ``worker_daemon`` now skips, so the rule wants re-measuring. On a
+    production lake the scan already arrives many-partitioned and the
+    same per-partition batching amortizes naturally.
     """
 
     def kernel(batches):

@@ -3,11 +3,12 @@
 Every Python task starts with ``importlib.invalidate_caches()``
 (``pyspark.worker_util.setup_spark_files``). On CPython < 3.13 that
 call makes every ``zipimport.zipimporter`` on the worker's ``sys.path``
-re-read its archive's whole directory, and the workers carry 16 of
-them: the spark-core jar root and its ``org/`` importer (~22 ms each)
-and 14 ``pyspark.zip`` subpackage importers (~4.5 ms each), so ~100 ms
-of every task went to re-reading archives that never change. CPython
-3.13 dropped that cost, so there this module only runs the daemon.
+re-read its archive's whole directory. With Spark 4.1.2 on CPython
+3.11.7 a worker carries 16 of them: the spark-core jar and its ``org/``
+prefix (20-45 ms each), 12 for ``pyspark.zip`` (5-11 ms each) and 2
+for the py4j zip, so 100-200 ms of every task went to re-reading
+archives that never change. CPython 3.13 dropped that cost, so there
+this module only runs the daemon.
 
 ``session.get_spark`` names this module as ``spark.python.daemon.module``.
 The daemon installs :func:`lazy_invalidation` before it forks, so every
